@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{SignalCatalog, SignalMeta}
 import graft.operators.{AsOf, Interp}
+import graft.sources.Io
 
 /** The engine's user-facing verbs (SURVEY §7.1 step 3) — the FDF access
   * idiom `nstx.s141000.mpts.te(time=(0.2,0.4))` re-expressed over long-
@@ -12,8 +13,9 @@ import graft.operators.{AsOf, Interp}
   *
   * Everything composes lazily into one Catalyst plan; axis-coordinate
   * coherence (SURVEY §2.2 P4 — slicing data slices axes) is free because
-  * axes are columns of the same rows. Partition pruning on `shot` replaces
-  * the reference's per-shot connection fan-out.
+  * axes are columns of the same rows. Reading only the addressed shot's
+  * directory (`ShotView`) replaces the reference's per-shot connection
+  * fan-out.
   */
 final case class Machine(spark: SparkSession, catalog: SignalCatalog,
     dataDir: String, logbook: Option[DataFrame] = None) {
@@ -42,21 +44,17 @@ final case class Machine(spark: SparkSession, catalog: SignalCatalog,
         array_sort(collect_set(col("xp"))).as("xps"),
         min(struct(col("entered"), col("rundate"))).getField("rundate").as("date"))
   }
-
-  /** Storage resolution for the hot path: the shot-partitioned directory
-    * layout when present (so `shot(n).signal(...)` prunes DIRECTORIES at
-    * file-listing time — at 100 TB the hot path must never list other
-    * shots' files), flat `<name>.parquet` as the fallback. */
-  private[api] def table(meta: SignalMeta): DataFrame =
-    graft.sources.Io.readParquet(spark,
-      graft.sources.Io.signalPath(dataDir, meta.qualifiedName))
 }
 
+/** One shot of a machine. `signal` lists and reads only that shot's
+  * directory when the signal is stored in the shot-directory layout
+  * (`Io.readShots`), so a request costs the same however many shots the
+  * warehouse holds; the flat `<name>.parquet` fallback is read whole. */
 final case class ShotView(machine: Machine, shotNo: Int) {
   def signal(qualifiedName: String): SignalFrame = {
     val meta = machine.catalog.signal(qualifiedName)
-    SignalFrame(meta,
-      machine.table(meta).where(col("shot") === shotNo))
+    SignalFrame(meta, Io.readShots(machine.spark,
+      Io.signalPath(machine.dataDir, meta.qualifiedName), Seq(shotNo)))
   }
 }
 

@@ -6,12 +6,18 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, In, InSet, Literal}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.types.{Metadata, StructType}
+import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.types.{IntegerType, Metadata, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.sources.Io
 
 /** DataSourceV2 `TableCatalog` over the XML signal catalog — the SQL
   * address path the reference exposes through its attribute-chain factory
@@ -28,14 +34,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * A signal `mpts.te` becomes table `te` in namespace `mpts` (container
-  * nesting = namespace nesting); its data is the long-format parquet at
-  * `dataDir/mpts_te.parquet` — the same layout `api.Machine` reads. The
-  * returned table is Spark's own DSv2 `ParquetTable`, so EVERYTHING the
-  * native scan does comes for free at any scale: filter pushdown to row
-  * groups, column pruning, and — when the layout is hive-partitioned by
-  * shot — partition PRUNING on shot predicates (PlanShapeSpec pins that
-  * plan shape). The catalog itself only resolves names; it holds no data
-  * path state beyond the warehouse root.
+  * nesting = namespace nesting); its data is found by `Io.signalPath`, the
+  * same resolution `api.Machine` uses: the shot-directory layout
+  * `dataDir/mpts_te/shot=N/`, else the flat `dataDir/mpts_te.parquet`.
+  * The returned table is a thin `SupportsRead` (`ShotTable`): its scan
+  * builder takes the `shot = n` / `shot IN (…)` conjuncts of the pushed
+  * filters, builds Spark's own `ParquetTable` over only those shots'
+  * directories, and hands filter pushdown, column pruning and the scan to
+  * that table's builder. So a shot-addressed query lists one directory per
+  * named shot however large the warehouse is, and keeps everything the
+  * native scan does: row-group filter pushdown, column pruning and
+  * partition filters on `shot`. A query with no shot equality, or a flat
+  * `.parquet` signal, reads the whole path. The catalog caches each
+  * table's schema; it never caches a listing.
   *
   * Options:
   *  - `xml`          (required) catalog XML file, or a directory whose
@@ -102,22 +113,26 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
   override def tableExists(ident: Identifier): Boolean =
     cat.get(qualified(ident)).isDefined
 
+  /** Merged schema per signal: file column types inferred once, from one
+    * shot directory (`Io.schema`), plus the XML-declared metadata. */
+  private val schemas =
+    scala.collection.concurrent.TrieMap.empty[String, StructType]
+
   override def loadTable(ident: Identifier): Table = {
     val qn = qualified(ident)
     val meta = cat.get(qn).getOrElse(throw new NoSuchTableException(ident))
-    // same layout resolution as api.Machine: shot-partitioned directory
-    // preferred (directory pruning), flat file fallback
-    val path = graft.sources.Io.signalPath(dataDir, qn)
-    // column TYPES and presence come from the files (the XML declares axis
-    // NAMES; value_err is per-layout) — but the XML-declared units/title
-    // metadata must ride along, so an FDF user's `DESCRIBE graft.chers.ti`
-    // carries 'keV' the way the API path's StructField metadata does
-    // (reference parse_units, factory.py:1002-1009). Infer the file schema
-    // once, then re-attach declared per-column metadata by name.
-    val inferred = ParquetTable(qn, SparkSession.active,
-      CaseInsensitiveStringMap.empty(), Seq(path), None, classOf[ParquetFileFormat])
-    val declared = meta.schema
-    val merged = StructType(inferred.schema.fields.map { f =>
+    val path = Io.signalPath(dataDir, qn)
+    new ShotTable(qn, path, schemas.getOrElseUpdate(qn,
+      withDeclared(Io.schema(SparkSession.active, path), meta.schema)))
+  }
+
+  /** Column TYPES and presence come from the files (the XML declares axis
+    * NAMES; value_err is per-layout) — but the XML-declared units/title
+    * metadata must ride along, so an FDF user's `DESCRIBE graft.chers.ti`
+    * carries 'keV' the way the API path's StructField metadata does
+    * (reference parse_units, factory.py:1002-1009). */
+  private def withDeclared(inferred: StructType, declared: StructType): StructType =
+    StructType(inferred.fields.map { f =>
       declared.fields.find(_.name == f.name)
         .filter(_.metadata != Metadata.empty)
         .map { d =>
@@ -133,9 +148,6 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
         }
         .getOrElse(f)
     })
-    ParquetTable(qn, SparkSession.active, CaseInsensitiveStringMap.empty(),
-      Seq(path), Some(merged), classOf[ParquetFileFormat])
-  }
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table =
@@ -187,4 +199,75 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
 
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
     throw new UnsupportedOperationException("graft catalog is read-only (XML-declared)")
+}
+
+object GraftTableCatalog {
+
+  /** The shots a list of conjuncts pins `shot` to: the intersection of its
+    * `shot = n` and `shot IN (…)` conjuncts with integer literals, or None
+    * when none does. Other conjuncts never narrow the set, so the rows the
+    * filters select always lie in the shots returned. */
+  private[catalog] def pinnedShots(filters: Seq[Expression]): Option[Set[Int]] = {
+    def shotCol(e: Expression) = e match {
+      case a: Attribute => a.name == "shot"
+      case _ => false
+    }
+    def int(e: Expression): Option[Int] = e match {
+      case Literal(n: Int, IntegerType) => Some(n)
+      case _ => None
+    }
+    filters.flatMap {
+      case EqualTo(a, v) if shotCol(a) => int(v).map(Set(_))
+      case EqualTo(v, a) if shotCol(a) => int(v).map(Set(_))
+      case In(a, vs) if shotCol(a) && vs.forall(int(_).isDefined) => Some(vs.flatMap(int).toSet)
+      case InSet(a, vs) if shotCol(a) && vs.forall(_.isInstanceOf[Int]) =>
+        Some(vs.map(_.asInstanceOf[Int]))
+      case _ => None
+    }.reduceOption(_ intersect _)
+  }
+}
+
+/** The table `GraftTableCatalog.loadTable` returns: the signal's merged
+  * schema, and a scan builder (`ShotScanBuilder`) that reads only the shot
+  * directories the query's filters name. */
+private[catalog] final class ShotTable(qn: String, path: String, tableSchema: StructType)
+    extends Table with SupportsRead {
+  override def name(): String = qn
+  override def schema(): StructType = tableSchema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ShotScanBuilder(qn, path, tableSchema, options)
+}
+
+/** Chooses the directories from the pushed filters, then delegates every
+  * pushdown and the scan itself to a `ParquetTable`'s own builder over
+  * just those directories (`basePath = path`, so `shot` stays a partition
+  * column). Spark pushes filters, when there are any, before it prunes
+  * columns or builds the scan; without a pinned shot, or for the flat
+  * `.parquet` fallback, the table covers the whole path. */
+private[catalog] final class ShotScanBuilder(qn: String, path: String,
+    tableSchema: StructType, options: CaseInsensitiveStringMap)
+    extends SupportsPushDownCatalystFilters with SupportsPushDownRequiredColumns {
+
+  private var shots: Option[Set[Int]] = None
+
+  private lazy val inner = {
+    val dirs = shots.flatMap(Io.shotDirs(path, _))
+    val tableOptions = dirs.fold(Map.empty[String, String])(_ => Map("basePath" -> path))
+    ParquetTable(qn, SparkSession.active, new CaseInsensitiveStringMap(tableOptions.asJava),
+      dirs.getOrElse(Seq(path)), Some(tableSchema), classOf[ParquetFileFormat])
+      .newScanBuilder(options)
+  }
+
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
+    shots = GraftTableCatalog.pinnedShots(filters)
+    inner.pushFilters(filters)
+  }
+
+  override def pushedFilters: Array[Predicate] = inner.pushedFilters
+
+  override def pruneColumns(requiredSchema: StructType): Unit = inner.pruneColumns(requiredSchema)
+
+  override def build(): Scan = inner.build()
 }

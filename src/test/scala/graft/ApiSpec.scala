@@ -4,11 +4,13 @@ import java.sql.{Date, Timestamp}
 
 import scala.xml.XML
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.{Machine, SignalFrame}
 import graft.catalog.SignalCatalog
 import graft.operators.AsOf
+import graft.sources.Io
 
 /** SignalFrame API semantics over a synthesized long-format signal table:
   * slicing, nearest-point (numpy first-min tie-break), channels, unit
@@ -222,6 +224,39 @@ class ApiSpec extends SparkSpec {
       sf.df.queryExecution.executedPlan.toString)
     // flat fallback still works: the original dataDir has no directory
     assert(machine.shot(2).signal("mpts.te").df.count() === 50)
+  }
+
+  test("shot-addressed reads list only the named shots' directories") {
+    import spark.implicits._
+    val dir = "target/api_test_shots"
+    val rows = for { shot <- Seq(1, 2, 3); ch <- 1 to 4; ti <- 0 until 8 }
+      yield (shot, ch, ti * 1.0, shot * 100.0 + ch * 10 + ti)
+    Io.writeSignal(rows.toDF("shot", "channel", "time", "value"), dir, "bes.ch")
+    val path = Io.signalPath(dir, "bes.ch")
+    val m = machine.copy(dataDir = dir)
+    def exactly(df: DataFrame, want: Seq[(Int, Int, Double, Double)]): Unit = {
+      val got = df.select($"shot", $"channel", $"time", $"value")
+        .as[(Int, Int, Double, Double)].collect()
+      assert(got.length === want.size)
+      assert(got.toSet === want.toSet)
+    }
+    // a shot with no directory: no rows and no PATH_NOT_FOUND
+    val missing = m.shot(99).signal("bes.ch").df
+    exactly(missing, Nil)
+    assert(scanRoots(missing).isEmpty)
+    // several shots: exactly their rows, from exactly their directories
+    val oneAndThree = Io.readShots(spark, path, Seq(3, 1))
+    exactly(oneAndThree, rows.filter(_._1 != 2))
+    assert(scanRoots(oneAndThree) === Seq(1, 3).map(n => canonPath(s"$path/shot=$n")))
+    // a channel filter rides on the shot's directory, rows unchanged
+    val ch3 = m.shot(2).signal("bes.ch").channels(Seq(3)).df
+    exactly(ch3, rows.filter(r => r._1 == 2 && r._2 == 3))
+    assert(scanRoots(ch3) === Seq(canonPath(s"$path/shot=2")))
+    // the flat fallback is still read whole, rows unchanged
+    val flat = machine.shot(1).signal("bes.ch").channels(Seq(3)).df
+    assert(flat.count() === 8)
+    assert(scanRoots(flat) === Seq(canonPath(s"$dataDir/bes_ch.parquet")))
+    assert(machine.shot(99).signal("bes.ch").df.count() === 0)
   }
 
   test("at() ties break to the first (smallest) sample like np.argmin") {

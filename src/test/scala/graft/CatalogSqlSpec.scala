@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.GraftTableCatalog
+import graft.api.Machine
+import graft.catalog.{GraftTableCatalog, SignalCatalog}
+import graft.sources.Io
 
 /** SQL-surface catalog (SURVEY §2.1 S5/S6 at the SQL layer): XML-declared
   * signals resolve as `SELECT … FROM graft.<container>.<signal>` through a
@@ -73,6 +76,99 @@ class CatalogSqlSpec extends SparkSpec {
       s"shot filter not pushed to partition pruning: ${fs.partitionFilters}")
     // and the pruned scan reads exactly the one shot directory (of 3)
     assert(fs.fileIndex.listFiles(fs.partitionFilters, fs.dataFilters).size === 1)
+  }
+
+  private def teRows(shots: Seq[Int]) = for {
+    shot <- shots; ti <- 0 until 10; ri <- 0 until 5
+  } yield (shot, ti / 10.0, 10.0 + ri, shot * 1000.0 + ti + ri / 10.0)
+
+  private def chRows(shots: Seq[Int]) = for {
+    shot <- shots; ch <- 1 to 4; ti <- 0 until 8
+  } yield (shot, ch, ti * 1.0, shot * 100.0 + ch * 10 + ti)
+
+  /** Registers catalog `name` over `dir` with the spec's machine XML. */
+  private def register(name: String, dir: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftTableCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.xml", s"$warehouse/machine.xml")
+    spark.conf.set(s"spark.sql.catalog.$name.dataDir", dir)
+    spark.conf.set(s"spark.sql.catalog.$name.stripPrefix", "root")
+  }
+
+  /** A second warehouse in the `Io.writeSignal` shot-directory layout,
+    * registered as catalog `graftdir`. */
+  private lazy val dirWarehouse = {
+    import spark.implicits._
+    val dir = "target/catalog_sql_dirs"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    Io.writeSignal(teRows(Seq(1, 2, 3)).toDF("shot", "time", "radius", "value"), dir, "mpts.te")
+    Io.writeSignal(chRows(Seq(1, 2)).toDF("shot", "channel", "time", "value"), dir, "bes.ch")
+    register("graftdir", dir)
+    dir
+  }
+
+  private def teOf(df: DataFrame) = {
+    import spark.implicits._
+    df.select($"shot", $"time", $"radius", $"value").as[(Int, Double, Double, Double)].collect()
+  }
+
+  test("shot-addressed SQL lists only the named shots' directories") {
+    import spark.implicits._
+    val dir = dirWarehouse
+    // a shot with no directory: no rows and no PATH_NOT_FOUND
+    val missing = spark.sql("SELECT * FROM graftdir.mpts.te WHERE shot = 99")
+    assert(missing.collect().isEmpty)
+    assert(scanRoots(missing).isEmpty)
+    // IN (1, 3): exactly those shots' rows, from exactly their directories
+    val oneAndThree = spark.sql("SELECT * FROM graftdir.mpts.te WHERE shot IN (1, 3)")
+    val got = teOf(oneAndThree)
+    assert(got.length === 100)
+    assert(got.toSet === teRows(Seq(1, 3)).toSet)
+    assert(scanRoots(oneAndThree) === Seq(1, 3).map(n => canonPath(s"$dir/mpts_te/shot=$n")))
+    // a list long enough for the optimizer to make it an InSet
+    val manyShots = spark.sql(
+      s"SELECT * FROM graftdir.mpts.te WHERE shot IN (${(Seq(1, 3) ++ (11 to 30)).mkString(", ")})")
+    assert(teOf(manyShots).toSet === teRows(Seq(1, 3)).toSet)
+    assert(scanRoots(manyShots) === Seq(1, 3).map(n => canonPath(s"$dir/mpts_te/shot=$n")))
+    // no shot predicate: the whole signal directory, rows unchanged
+    val ch3 = spark.sql("SELECT * FROM graftdir.bes.ch WHERE channel = 3")
+    val ch3Rows = ch3.select($"shot", $"channel", $"time", $"value")
+      .as[(Int, Int, Double, Double)].collect()
+    assert(ch3Rows.length === 16)
+    assert(ch3Rows.toSet === chRows(Seq(1, 2)).filter(_._2 == 3).toSet)
+    assert(scanRoots(ch3) === Seq(canonPath(s"$dir/bes_ch")))
+    // the flat fallbacks are still read whole: a single file, and the
+    // partitioned `<name>.parquet` directory
+    val flat = spark.sql("SELECT * FROM graft.bes.ch WHERE shot = 1 AND channel = 3")
+    assert(flat.count() === 8)
+    assert(scanRoots(flat) === Seq(canonPath(s"$warehouse/bes_ch.parquet")))
+    val parquetDir = spark.sql("SELECT * FROM graft.mpts.te WHERE shot = 2")
+    assert(parquetDir.count() === 50)
+    assert(scanRoots(parquetDir) === Seq(canonPath(s"$warehouse/mpts_te.parquet")))
+  }
+
+  test("a shot written after the first read is visible at once on both paths") {
+    import spark.implicits._
+    warehouse
+    val dir = "target/catalog_sql_fresh"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    Io.writeSignal(teRows(Seq(1, 2, 3)).toDF("shot", "time", "radius", "value"), dir, "mpts.te")
+    register("graftfresh", dir)
+    val m = Machine(spark, SignalCatalog(SignalCatalog.fromFile(s"$warehouse/machine.xml")
+      .signals.map(s => s.copy(qualifiedName = s.qualifiedName.stripPrefix("root.")))), dir)
+    assert(teOf(m.shot(1).signal("mpts.te").df).toSet === teRows(Seq(1)).toSet)
+    assert(teOf(spark.sql("SELECT * FROM graftfresh.mpts.te WHERE shot = 1")).toSet ===
+      teRows(Seq(1)).toSet)
+    Io.writeSignal(teRows(Seq(4)).toDF("shot", "time", "radius", "value"), dir, "mpts.te")
+    val viaApi = m.shot(4).signal("mpts.te").df
+    val viaSql = spark.sql("SELECT * FROM graftfresh.mpts.te WHERE shot = 4")
+    for (df <- Seq(viaApi, viaSql)) {
+      val got = teOf(df)
+      assert(got.length === 50)
+      assert(got.toSet === teRows(Seq(4)).toSet)
+    }
+    val shot4 = Seq(canonPath(s"$dir/mpts_te/shot=4"))
+    assert(scanRoots(viaApi) === shot4)
+    assert(scanRoots(viaSql) === shot4)
   }
 
   test("XML-declared units ride through the SQL path as column metadata") {

@@ -29,6 +29,24 @@ class IoSpec extends SparkSpec {
     assert(files.contains(1), s"expected 1 selected partition, got $files")
   }
 
+  test("writeSignal of one new shot keeps every earlier shot, even in static mode") {
+    import spark.implicits._
+    val dir = tmp("overwrite")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    def rows(shots: Seq[Int]) = for { shot <- shots; i <- 0 until 10 }
+      yield (shot, i / 10.0, shot * 100.0 + i)
+    Io.writeSignal(rows(1 to 3).toDF("shot", "time", "value"), dir, "sig.x")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try Io.writeSignal(rows(Seq(4)).toDF("shot", "time", "value"), dir, "sig.x")
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val back = Io.readParquet(spark, Io.signalPath(dir, "sig.x"))
+      .select($"shot", $"time", $"value").as[(Int, Double, Double)].collect()
+    assert(back.length === 40)
+    assert(back.toSet === rows(1 to 4).toSet)
+  }
+
   test("csv, json, and orc round-trip the logbook-shaped projection") {
     import spark.implicits._
     val src = Tables.orders(spark, sfDir)

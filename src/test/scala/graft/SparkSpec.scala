@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -11,6 +13,19 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Canonical root paths of the file scans in `df`'s physical plan: the
+    * paths its file index lists, on the DataFrame and the catalog path. */
+  def scanRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths
+      case b: BatchScanExec => b.scan match {
+        case f: FileScan => f.fileIndex.rootPaths
+        case _ => Nil
+      }
+    }.flatten.map(p => new java.io.File(p.toUri).getCanonicalPath)
+
+  def canonPath(path: String): String = new java.io.File(path).getCanonicalPath
 }
 
 object SparkSpec {
