@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{SignalCatalog, SignalMeta}
 import graft.operators.{AsOf, Interp}
+import graft.plans.ParamLiterals
 import graft.sources.Io
 
 /** The engine's user-facing verbs (SURVEY §7.1 step 3) — the FDF access
@@ -49,9 +50,16 @@ final case class Machine(spark: SparkSession, catalog: SignalCatalog,
 /** One shot of a machine. `signal` lists and reads only that shot's
   * directory when the signal is stored in the shot-directory layout
   * (`Io.readShots`), so a request costs the same however many shots the
-  * warehouse holds; the flat `<name>.parquet` fallback is read whole. */
+  * warehouse holds; the flat `<name>.parquet` fallback is read whole.
+  *
+  * `signal` is also where the signal access path registers
+  * `graft.plans.ParamLiteralsStrategy` on the machine's session
+  * (idempotent; the SQL path registers it in `GraftTableCatalog`), so the
+  * windows, channels, scale factors and points of later verbs do not
+  * compile a new class per request. */
 final case class ShotView(machine: Machine, shotNo: Int) {
   def signal(qualifiedName: String): SignalFrame = {
+    ParamLiterals.ensureRegistered(machine.spark)
     val meta = machine.catalog.signal(qualifiedName)
     SignalFrame(meta, Io.readShots(machine.spark,
       Io.signalPath(machine.dataDir, meta.qualifiedName), Seq(shotNo)))

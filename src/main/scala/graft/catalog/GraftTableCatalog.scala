@@ -17,6 +17,7 @@ import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{IntegerType, Metadata, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.plans.ParamLiterals
 import graft.sources.Io
 
 /** DataSourceV2 `TableCatalog` over the XML signal catalog — the SQL
@@ -46,7 +47,10 @@ import graft.sources.Io
   * native scan does: row-group filter pushdown, column pruning and
   * partition filters on `shot`. A query with no shot equality, or a flat
   * `.parquet` signal, reads the whole path. The catalog caches each
-  * table's schema; it never caches a listing.
+  * table's schema; it never caches a listing. Initializing the catalog
+  * registers `graft.plans.ParamLiteralsStrategy` on the session, so the
+  * per-request constants of a query (`channel = 3`, the `time BETWEEN`
+  * bounds) do not compile a new class per request.
   *
   * Options:
   *  - `xml`          (required) catalog XML file, or a directory whose
@@ -69,6 +73,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
   override def name(): String = catalogName
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
+    ParamLiterals.ensureRegistered(SparkSession.active)
     catalogName = name
     dataDir = Option(options.get("dataDir")).getOrElse(
       throw new IllegalArgumentException(s"catalog $name: dataDir option is required"))

@@ -191,5 +191,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // bucketed range-join rewrite (active only when
     // spark.graft.rangeJoin.bucketWidth > 0)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
+    // per-request numeric constants bound by reference in generated code
+    ext.injectPlannerStrategy(graft.plans.ParamLiteralsStrategy(_))
   }
 }

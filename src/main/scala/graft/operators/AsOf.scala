@@ -57,12 +57,17 @@ object AsOf {
   /** Rows of `df` at the sample of `on` nearest to `value`, per group
     * `keys` — `sig(time=0.25)` point slicing. One partial-aggregated
     * min(struct(diff, on)) pass, then a semi-join-like filter; no window
-    * over the full data. */
+    * over the full data. The struct is computed in a `select` below the
+    * `groupBy`, not inside the aggregate: there `value` sits in a project
+    * that `graft.plans.ParamLiteralsStrategy` binds as a parameter, so
+    * every point shares one generated class instead of compiling its own
+    * (in the aggregate's own code the constant would be inlined). */
   def nearest(df: DataFrame, on: String, value: Double,
       keys: Seq[String]): DataFrame = {
-    val target = df.groupBy(keys.map(col): _*)
-      .agg(min(struct(abs(col(on) - value).as("d"), col(on).as("v")))
-        .getField("v").as("__near"))
+    val target = df
+      .select(keys.map(col) :+ struct(abs(col(on) - value).as("d"), col(on).as("v")).as("__dv"): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(min(col("__dv")).getField("v").as("__near"))
     df.join(target, keys).where(col(on) === col("__near")).drop("__near")
   }
 }

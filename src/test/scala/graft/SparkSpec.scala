@@ -39,6 +39,8 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // every suite plans under the strategy the signal and SQL paths use
+    graft.plans.ParamLiterals.ensureRegistered(s)
     s
   }
 }

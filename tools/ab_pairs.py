@@ -11,7 +11,12 @@ sides. Prints, for every metric, each side's median and quartiles and how
 many pairs the change wins (ties count for neither side), then whether the
 rule for claiming a gain holds: the change wins at least nine tenths of
 the pairs and the medians differ by more than the base's interquartile
-range. A metric's direction comes from the base checkout's BENCHMARK.json.
+range. For every end-to-end metric it also prints the no-regression
+verdict: "ok" when the change's median is no worse than the base's by more
+than the metric's bound, "WORSE" when it is, and "unresolved" when the
+base's own spread (interquartile range over median) exceeds the bound and
+not every change run beats every base run. A metric's direction and bound
+come from the base checkout's BENCHMARK.json.
 Each run's JSON line is appended to --log (default ab_pairs.jsonl in the
 current directory) as it finishes. Neither checkout is modified apart
 from the build and run state `perfbench/run.py` itself keeps there.
@@ -34,14 +39,15 @@ def quantile(xs, q):
     return s[lo] + (s[hi] - s[lo]) * (pos - lo)
 
 
-def directions(checkout):
-    """Metric name -> "lower" or "higher", from BENCHMARK.json."""
+def metric_specs(checkout):
+    """Metric name -> {"better": "lower"|"higher", "bound": relative bound or
+    None}, from BENCHMARK.json; only end-to-end metrics have a bound."""
     path = os.path.join(checkout, "BENCHMARK.json")
     if not os.path.exists(path):
         return {}
     with open(path) as f:
         bench = json.load(f)
-    return {m["name"]: m["better"]
+    return {m["name"]: {"better": m["better"], "bound": m.get("bound")}
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
 
 
@@ -58,8 +64,24 @@ def run_once(checkout, args, seed):
     return json.loads(lines[-1])
 
 
-def summary(pairs, better):
-    """Printable rows: metric, base and change median [q1, q3], wins."""
+def verdict(base, change, lower, bound):
+    """No-regression verdict of one metric: "unresolved" when the base's
+    interquartile range over its median exceeds `bound` and not every
+    change run beats every base run, else "WORSE" when the change's median
+    is worse than the base's by more than `bound` of it, else "ok"."""
+    med = quantile(base, 0.5)
+    spread = (quantile(base, 0.75) - quantile(base, 0.25)) / abs(med) if med else float("inf")
+    beats_all = all((c < b if lower else c > b) for c in change for b in base)
+    if spread > bound and not beats_all:
+        return "unresolved"
+    worse = quantile(change, 0.5) - med if lower else med - quantile(change, 0.5)
+    return "WORSE" if worse > bound * abs(med) else "ok"
+
+
+def summary(pairs, specs):
+    """Printable rows: metric, unit, base and change values, change wins,
+    pairs, whether the gain rule holds, and the no-regression verdict
+    (None for a metric without a bound)."""
     names = sorted(set().union(*(set(b["metrics"]) & set(c["metrics"]) for b, c in pairs)))
     out = []
     for name in names:
@@ -67,13 +89,16 @@ def summary(pairs, better):
                if name in b["metrics"] and name in c["metrics"]]
         base = [b for b, _ in got]
         change = [c for _, c in got]
-        lower = better.get(name, "lower") == "lower"
+        spec = specs.get(name, {})
+        lower = spec.get("better", "lower") == "lower"
         wins = sum(1 for b, c in got if (c < b if lower else c > b))
         iqr = quantile(base, 0.75) - quantile(base, 0.25)
         gap = quantile(base, 0.5) - quantile(change, 0.5)
         claim = wins >= 0.9 * len(got) and (gap if lower else -gap) > iqr
+        bound = spec.get("bound")
+        judged = verdict(base, change, lower, bound) if bound is not None else None
         unit = pairs[0][0]["metrics"][name]["unit"]
-        out.append((name, unit, base, change, wins, len(got), claim))
+        out.append((name, unit, base, change, wins, len(got), claim, judged))
     return out
 
 
@@ -116,11 +141,14 @@ def main():
     print("correct: base %d/%d, change %d/%d; failed operations: base %d, change %d" % (
         sum(b["correct"] for b, _ in pairs), len(pairs), sum(c["correct"] for _, c in pairs),
         len(pairs), sum(b["failed"] for b, _ in pairs), sum(c["failed"] for _, c in pairs)))
-    print("%-36s %-6s %-30s %-30s %s" % ("metric", "unit", "base median [q1, q3]",
-                                          "change median [q1, q3]", "change wins"))
-    for name, unit, base, change, wins, n, claim in summary(pairs, directions(sides["base"])):
-        print("%-36s %-6s %-30s %-30s %d/%d%s" % (name, unit, fmt(base), fmt(change), wins, n,
-                                                  "  gain holds" if claim else ""))
+    print("%-36s %-6s %-30s %-30s %-11s %s" % ("metric", "unit", "base median [q1, q3]",
+                                                "change median [q1, q3]", "change wins",
+                                                "verdict"))
+    for name, unit, base, change, wins, n, claim, judged in summary(
+            pairs, metric_specs(sides["base"])):
+        print("%-36s %-6s %-30s %-30s %-11s %s%s" % (
+            name, unit, fmt(base), fmt(change), "%d/%d" % (wins, n), judged or "",
+            "  gain holds" if claim else ""))
 
 
 if __name__ == "__main__":
