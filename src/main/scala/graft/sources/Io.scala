@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -15,6 +18,9 @@ import org.apache.spark.sql.types.StructType
   * with the number of shots in the warehouse. Each read checks and lists
   * those directories afresh: a shot written a moment ago, by this process
   * or another, is visible to the next read.
+  * A warehouse may sit on any Hadoop FileSystem (a plain local path,
+  * `file:/…`, `hdfs://…`, `s3a://…`): every probe of it goes through
+  * the session's Hadoop FileSystem, never `java.io.File`.
   * CSV/JSON exist for interchange at the edges (logbook exports, event
   * dumps); ORC as the alternate columnar store. All readers take explicit
   * schemas — schema inference is an extra full pass at 100 TB.
@@ -24,7 +30,9 @@ object Io {
   /** Hive-style partitioned parquet: one directory per distinct value of
     * `cols`; equality/IN predicates on them prune at file-listing time.
     * Overwrites only the partitions `df` holds (dynamic mode, whatever the
-    * session sets), so writing one new shot keeps every earlier one. */
+    * session sets), so writing one new shot keeps every earlier one. The
+    * one dynamic-overwrite writer: the streaming batch stores write
+    * through it too. */
   def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
     df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy(cols: _*).parquet(path)
@@ -36,7 +44,14 @@ object Io {
     * (a file, or a directory of any layout) when no such directory exists. */
   def signalPath(dataDir: String, qualifiedName: String): String = {
     val base = s"$dataDir/${qualifiedName.replace('.', '_')}"
-    if (new java.io.File(base).isDirectory) base else s"$base.parquet"
+    if (isDirectory(SparkSession.active, base)) base else s"$base.parquet"
+  }
+
+  /** True when `path` is a directory on its Hadoop FileSystem. */
+  private[graft] def isDirectory(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isDirectory
+    catch { case _: FileNotFoundException => false }
   }
 
   /** Write a signal table in the preferred shot-directory layout at the
@@ -51,11 +66,11 @@ object Io {
   def shotDirs(path: String, shots: Iterable[Int]): Option[Seq[String]] =
     if (path.endsWith(".parquet")) None
     else Some(shots.toSeq.distinct.sorted.map(n => s"$path/shot=$n")
-      .filter(new java.io.File(_).isDirectory))
+      .filter(isDirectory(SparkSession.active, _)))
 
-  /** Parquet schema per path, cached for the JVM lifetime — the
-    * Tables.load footer-inference cache, shared with the signal read path
-    * (same layout-immutability assumption: read-only testdata /
+  /** Parquet schema per path, cached for the JVM lifetime — the one
+    * footer-inference cache, shared by `Tables.load` and the signal read
+    * path (layout-immutability assumption: read-only testdata /
     * write-once signal directories). Metadata only; scans, pruning and
     * results are unchanged. */
   private val schemas =
@@ -66,8 +81,12 @@ object Io {
     * column), so inference never lists the whole table. */
   def schema(spark: SparkSession, path: String): StructType =
     schemas.getOrElseUpdate(path, {
-      val first = Option(new java.io.File(path).list()).toSeq.flatten
-        .filter(_.startsWith("shot=")).sorted.headOption
+      val p = new Path(path)
+      val names =
+        try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+          .map(_.getPath.getName).toSeq
+        catch { case _: FileNotFoundException => Nil }
+      val first = names.filter(_.startsWith("shot=")).sorted.headOption
       first.fold(spark.read.parquet(path))(d =>
         spark.read.option("basePath", path).parquet(s"$path/$d")).schema
     })

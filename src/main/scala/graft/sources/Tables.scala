@@ -18,21 +18,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet footer schema per path, inferred once per JVM: every
-    * `load` call otherwise re-reads a footer on the DRIVER to infer the
-    * same schema (10-40 ms per table reference, paid by every query of
-    * a bench/verify run). Metadata-only and layout-immutable by the
-    * [[narrowScan]] cache's same assumption (read-only testdata /
-    * write-once warehouse); the DATA path is untouched — scans,
-    * pushdown and row results are identical. */
-  private val schemas =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val sch = schemas.getOrElseUpdate(path, spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
-  }
+  /** The table's rows, read with its footer schema inferred once per
+    * JVM (`Io.readParquet`): every `load` would otherwise re-read a footer
+    * on the DRIVER (10-40 ms per table reference). */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    Io.readParquet(spark, s"$dir/$name.parquet")
 
   /** True iff the parquet source at `dir/name` scans with fewer splits
     * than the cluster has cores. A single-row-group file (like the test

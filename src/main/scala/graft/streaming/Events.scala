@@ -18,6 +18,10 @@ import org.apache.spark.sql.types.DecimalType
   * Scale: watermarks bound state; aggregation state is partitioned by
   * (window, event_type) / (user_id) keys, so a 1000-executor cluster
   * shards state naturally. No driver-side state anywhere.
+  *
+  * Every append-mode gate and monitor below keeps its tables in a
+  * [[BatchStore]], which holds the one exactly-once discipline (and its
+  * prerequisite on the source) for all of them.
   */
 object Events {
 
@@ -150,22 +154,10 @@ object Events {
     * band-joined against the STATIC corpus shingle index, and only docs
     * with no verified near-dup (Jaccard >= 0.5) are admitted; rejected
     * docs land in a quarantine table with their matched corpus doc.
-    * Exactly-once: both writes are dynamic-partition overwrites keyed
-    * by batch_id (the chunk-novelty/monitor discipline) — a replayed
-    * micro-batch rewrites its own partitions byte-identically instead
-    * of double-appending, so no downstream dedup absorption is needed.
-    * PREREQUISITE: the source must replay a batch_id with the same rows
-    * (true of file sources and Kafka by offset range; NOT of a
-    * rate-limited or non-deterministic source, where a replayed batch
-    * emitting different rows would leave its partition holding the new
-    * rows only — at-least-once there, not exactly-once).
-    *
-    * Output layout note (changed from plain append in round 13): both
-    * tables gained a `batch_id` partition column, one directory per
-    * micro-batch. Long-running gates compact periodically — rewrite
-    * closed batches into a consolidated `batch_id=-1` baseline partition
-    * (admit/reject verdicts are immutable once their batch commits, so
-    * compaction commutes with replay of LIVE batches).
+    * Exactly-once: both tables are [[BatchStore]]s (one `batch_id`
+    * partition per micro-batch), so a replayed micro-batch rewrites its
+    * own partitions instead of double-appending, and no downstream dedup
+    * absorption is needed.
     *
     * Scale shape: per batch O(delta + collisions) — the corpus index is
     * the persisted artifact (at 100 TB a bucketed table on (band,
@@ -175,7 +167,7 @@ object Events {
       trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val corpusSh = graft.operators.Dedup.docShingles(corpus)
-    val gate: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, batchId) => {
+    BatchStore.start(newDocs, checkpoint, trigger) { (batch, batchId) =>
       import batch.sparkSession.implicits._
       // deliberately localCheckpoint, NOT the Ckpt durability knob: the
       // truncation only shares the batch across the two writes INSIDE
@@ -188,32 +180,16 @@ object Events {
       val matches = graft.operators.Dedup
         .deltaDedupOn(graft.operators.Dedup.docShingles(b), corpusSh)
         .localCheckpoint(true)
-      b.join(matches.select($"new_doc".as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(admittedTarget)
-      b.join(matches.groupBy($"new_doc".as("doc_id"))
-            .agg(min($"corpus_doc").as("dup_of"), max($"jaccard").as("max_jaccard")),
-          Seq("doc_id"), "inner")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(rejectedTarget)
+      BatchStore.put(b.join(matches.select($"new_doc".as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti"), admittedTarget, batchId)
+      BatchStore.put(b.join(matches.groupBy($"new_doc".as("doc_id"))
+          .agg(min($"corpus_doc").as("dup_of"), max($"jaccard").as("max_jaccard")),
+        Seq("doc_id"), "inner"), rejectedTarget, batchId)
       // batch-scoped blocks must not outlive the batch: a long-running
       // stream would otherwise pin batches x |batch| rows until GC
       graft.operators.Ckpt.release(matches)
       graft.operators.Ckpt.release(b)
     }
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(gate)
-      .start()
   }
 
   /** Streaming CHUNK-novelty ingest gate — q259's content-defined
@@ -227,13 +203,10 @@ object Events {
     * which is 90% boilerplate already ingested, which whole-doc gates
     * (dedupIngestGate) admit.
     *
-    * Exactly-once: both writes are dynamic-partition overwrites keyed
-    * by batch_id, and the store probe reads only `batch_id < current`
-    * — so a replayed batch sees the IDENTICAL prior state and rewrites
-    * its own partitions byte-identically (the conformal/CMS monitor
-    * discipline). Within-batch repeats count as novel (novelty is
-    * defined against the store, not the batch — deterministic under
-    * replay either way).
+    * Exactly-once by the [[BatchStore]] discipline: the store and the
+    * snapshot are batch stores, and the probe reads only earlier batches.
+    * Within-batch repeats count as novel (novelty is defined against the
+    * store, not the batch — deterministic under replay either way).
     *
     * Scale shape: per batch O(batch chunks + store collisions) — the
     * store is an equality join on chash (at 100 TB a bucketed table on
@@ -243,60 +216,29 @@ object Events {
       snapshotDir: String, checkpoint: String,
       minNoveltyPpm: Long = 500000L,
       trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val gate: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        import batch.sparkSession.implicits._
-        val spark = batch.sparkSession
-        val chunks = graft.operators.Dedup
-          .cdcChunkRelation(batch, Seq.empty)
-          .localCheckpoint(true) // batch-scoped; replay covers loss
-        // probe through the session's Hadoop FileSystem, not java.io.File:
-        // on HDFS/S3 (the 100 TB target) a local-file probe always
-        // returns false, which would silently report 100% novelty
-        val storePath = new org.apache.hadoop.fs.Path(storeDir)
-        val storeExists = storePath
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(storePath)
-        val known =
-          if (storeExists)
-            spark.read.parquet(storeDir)
-              .where($"batch_id" < batchId) // replay must not see itself
-              .select($"chash").distinct()
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("chash",
-                org.apache.spark.sql.types.StringType))))
-        val flagged = chunks.join(known.withColumn("seen", lit(1L)),
-            Seq("chash"), "left")
-        flagged.groupBy($"doc_id")
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.start(newDocs, checkpoint, trigger) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
+      val chunks = graft.operators.Dedup
+        .cdcChunkRelation(batch, Seq.empty)
+        .localCheckpoint(true) // batch-scoped; replay covers loss
+      val known = BatchStore.before(batch.sparkSession, storeDir, batchId,
+          chunks.select($"chash").schema)
+        .distinct()
+      val flagged = chunks.join(known.withColumn("seen", lit(1L)),
+          Seq("chash"), "left")
+      BatchStore.put(flagged.groupBy($"doc_id")
           .agg(sum($"len").as("n_tokens"),
             sum(when($"seen".isNull, $"len").otherwise(0L))
               .as("novel_tokens"))
           .select($"doc_id", $"n_tokens", $"novel_tokens",
-            expr("(novel_tokens * 1000000) div n_tokens").as("novelty_ppm"),
-            lit(batchId).as("batch_id"))
-          .withColumn("admit", $"novelty_ppm" >= minNoveltyPpm)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(snapshotDir)
-        flagged.where($"seen".isNull).select($"chash").distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        graft.operators.Ckpt.release(chunks)
-      }
-    newDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(gate)
-      .start()
-  }
+            expr("(novel_tokens * 1000000) div n_tokens").as("novelty_ppm"))
+          .withColumn("admit", $"novelty_ppm" >= minNoveltyPpm),
+        snapshotDir, batchId)
+      BatchStore.put(flagged.where($"seen".isNull).select($"chash").distinct(),
+        storeDir, batchId)
+      graft.operators.Ckpt.release(chunks)
+    }
 
   /** Streaming EMBEDDING-novelty ingest gate — the vector twin of
     * [[chunkNoveltyGate]], closing the loop between the ANN stack and
@@ -310,12 +252,9 @@ object Events {
     * admitted vector — the 20x byte fold is what makes a
     * billion-vector novelty store feasible.
     *
-    * Exactly-once: both writes are batch_id dynamic-partition
-    * overwrites and the store probe reads only `batch_id < current`
-    * (the chunk-gate discipline) — a replayed batch sees the identical
-    * prior state and rewrites its own partitions byte-identically.
-    * Deterministic-replay prerequisite as documented on
-    * [[dedupIngestGate]].
+    * Exactly-once by the [[BatchStore]] discipline: the code store and
+    * the snapshot are batch stores, and the screen reads only earlier
+    * batches' codes.
     *
     * `codebook` is the persisted quantizer artifact (at 100 TB: the
     * trained PQ codebook every encoder shares); it is collected ONCE at
@@ -325,58 +264,22 @@ object Events {
       storeDir: String, snapshotDir: String, checkpoint: String,
       maxCosPpm: Long = 950000L, nprobe: Int = 2,
       trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val gate: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        import batch.sparkSession.implicits._
-        val spark = batch.sparkSession
-        val b = batch.localCheckpoint(true) // batch-scoped; replay covers loss
-        val storePath = new org.apache.hadoop.fs.Path(storeDir)
-        val storeExists = storePath
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(storePath)
-        val store =
-          if (storeExists)
-            spark.read.parquet(storeDir)
-              .where($"batch_id" < batchId) // replay must not see itself
-              .select($"vec_id", $"cell", $"sub", $"code")
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("vec_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("cell",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("sub",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("code",
-                org.apache.spark.sql.types.LongType))))
-        val verdicts = graft.operators.Similarity
-          .adcNoveltyVerdicts(b.toDF(), store, codebook, maxCosPpm, nprobe)
-          .localCheckpoint(true)
-        verdicts
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(snapshotDir)
-        graft.operators.Similarity.encodeAgainst(b.toDF(), codebook)
-          .join(verdicts.where($"admit").select($"vec_id"), Seq("vec_id"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        graft.operators.Ckpt.release(verdicts)
-        graft.operators.Ckpt.release(b)
-      }
-    newVecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(gate)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.start(newVecs, checkpoint, trigger) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
+      val b = batch.localCheckpoint(true) // batch-scoped; replay covers loss
+      val codes = graft.operators.Similarity.encodeAgainst(b, codebook)
+      val store = BatchStore.before(batch.sparkSession, storeDir, batchId,
+        codes.schema)
+      val verdicts = graft.operators.Similarity
+        .adcNoveltyVerdicts(b, store, codebook, maxCosPpm, nprobe)
+        .localCheckpoint(true)
+      BatchStore.put(verdicts, snapshotDir, batchId)
+      BatchStore.put(codes.join(verdicts.where($"admit").select($"vec_id"), Seq("vec_id")),
+        storeDir, batchId)
+      graft.operators.Ckpt.release(verdicts)
+      graft.operators.Ckpt.release(b)
+    }
 
   /** Streaming PSI drift monitor — q149's population-stability screen
     * run continuously against a frozen reference distribution. Each
@@ -387,16 +290,12 @@ object Events {
     * stream distribution vs the reference and append a timestamped
     * snapshot row — the live dashboard a feed-health pipeline reads.
     *
-    * Exactly-once END TO END: each batch's counts land in a
-    * batch_id=<id> partition via dynamic partition overwrite, so a
-    * post-crash replayed micro-batch overwrites its own partition
-    * instead of double-appending — and the monitor snapshot is written
-    * the SAME way (its own batch_id partition, dynamic overwrite), so
-    * the entire foreachBatch body is idempotent: a replay rewrites
-    * both partitions byte-identically instead of appending a duplicate
-    * snapshot row. Scale: per batch O(batch) + a |types|×|bins|-bounded
-    * state aggregation; the partitioned-parquet state is the toy-sink
-    * form of a keyed MERGE.
+    * Exactly-once END TO END by the [[BatchStore]] discipline: the
+    * counts and the snapshot are both batch stores, so the whole
+    * foreachBatch body is idempotent — a replay rewrites both partitions
+    * instead of appending a duplicate snapshot row. Scale: per batch
+    * O(batch) + a |types|×|bins|-bounded state aggregation; the
+    * partitioned-parquet state is the toy-sink form of a keyed MERGE.
     *
     * PSI orientation matches q149: reference plays the first-half (p)
     * side, the accumulated stream the second-half (q) side; bins empty
@@ -409,46 +308,31 @@ object Events {
     // (durability again belongs to the engine's replay, not Ckpt)
     val refC = reference.localCheckpoint(true)
     val boundsC = bounds.localCheckpoint(true)
-    val body: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, batchId) => {
+    BatchStore.start(stream, checkpoint, Trigger.AvailableNow()) { (batch, batchId) =>
       import batch.sparkSession.implicits._
-      val spark = batch.sparkSession
-      batch
+      val counts = batch
         .select($"event_type", floor($"value" * 100).cast("long").as("cv"))
         .join(broadcast(boundsC), "event_type")
         .select($"event_type", expr("((cv - lo) * 10) div (hi + 1 - lo)").as("bin"))
         .groupBy($"event_type", $"bin").agg(count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(stateTarget)
-      val acc = spark.read.parquet(stateTarget)
+      val acc = BatchStore.read(batch.sparkSession, stateTarget,
+          BatchStore.put(counts, stateTarget, batchId))
         .groupBy($"event_type", $"bin").agg(sum($"n").as("b"))
       // per-side totals over ALL bins (q149 computes na/nb BEFORE the
       // one-sided-bin drop; the inner join below IS that drop)
       val tot = refC.groupBy($"event_type").agg(sum($"n").as("na"))
         .join(acc.groupBy($"event_type").agg(sum($"b").as("nb")), "event_type")
       val joined = refC.withColumnRenamed("n", "a").join(acc, Seq("event_type", "bin"))
-      joined.join(broadcast(tot), "event_type")
-        .where($"a" > 0 && $"b" > 0)
-        .withColumn("term_q",
-          floor((($"a" / $"na" - $"b" / $"nb")
-            * log(($"a" / $"na") / ($"b" / $"nb"))) * 1000000 + lit(1.0 / 3))
-            .cast("long"))
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n_bins"), sum($"term_q").as("psi_q"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(monitorTarget)
+      BatchStore.put(joined.join(broadcast(tot), "event_type")
+          .where($"a" > 0 && $"b" > 0)
+          .withColumn("term_q",
+            floor((($"a" / $"na" - $"b" / $"nb")
+              * log(($"a" / $"na") / ($"b" / $"nb"))) * 1000000 + lit(1.0 / 3))
+              .cast("long"))
+          .groupBy($"event_type")
+          .agg(count(lit(1)).as("n_bins"), sum($"term_q").as("psi_q")),
+        monitorTarget, batchId)
     }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
   }
 
   /** Streaming OOV ingest monitor — q234's vocabulary-generalization
@@ -460,15 +344,13 @@ object Events {
     * state table and the monitor appends a cumulative snapshot
     * (n_tokens, n_oov, n_oov_types, oov_ppm).
     *
-    * Exactly-once on the STATE (the driftMonitor contract): each
-    * batch's rows land in a batch_id partition via dynamic partition
-    * overwrite, so a replayed micro-batch overwrites itself. State is
-    * kind-tagged: 'total' rows carry the batch's occurrence count,
-    * 'oov' rows carry per-TOKEN occurrence counts — per-token because
-    * distinct-type counts are NOT additive across batches (the same
-    * novel token arriving twice must count once); the state stays
-    * bounded by the OOV vocabulary, which staying small is precisely
-    * what the monitor watches.
+    * Exactly-once on the state and the snapshot by the [[BatchStore]]
+    * discipline. State is kind-tagged: 'total' rows carry the batch's
+    * occurrence count, 'oov' rows carry per-TOKEN occurrence counts —
+    * per-token because distinct-type counts are NOT additive across
+    * batches (the same novel token arriving twice must count once); the
+    * state stays bounded by the OOV vocabulary, which staying small is
+    * precisely what the monitor watches.
     *
     * Scale: the vocabulary probe joins on the token key (the q234
     * rule — an induced vocabulary outgrows any broadcast); here the
@@ -481,9 +363,8 @@ object Events {
       .select(explode(graft.operators.TextOps.toks(col("text"))).as("tok"))
       .distinct().withColumn("__in", lit(1L))
       .localCheckpoint(true)
-    val body: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, batchId) => {
+    BatchStore.start(stream, checkpoint, Trigger.AvailableNow()) { (batch, batchId) =>
       import batch.sparkSession.implicits._
-      val spark = batch.sparkSession
       val probed = batch
         .select(explode(graft.operators.TextOps.toks($"text")).as("tok"))
         .join(vocab, Seq("tok"), "left")
@@ -495,34 +376,19 @@ object Events {
         .agg(count(lit(1)).as("c"))
         .select(lit("total").as("kind"), lit(null).cast("string").as("tok"),
           $"c")
-      oovRows.unionByName(totalRow)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(stateTarget)
+      val stored = BatchStore.put(oovRows.unionByName(totalRow), stateTarget, batchId)
       graft.operators.Ckpt.release(probed)
-      val st = spark.read.parquet(stateTarget)
+      val st = BatchStore.read(batch.sparkSession, stateTarget, stored)
       val tot = st.where($"kind" === "total").agg(sum($"c").as("n_tokens"))
       val oov = st.where($"kind" === "oov")
         .agg(coalesce(sum($"c"), lit(0L)).as("n_oov"),
           countDistinct($"tok").as("n_oov_types"))
-      tot.crossJoin(oov)
-        .select($"n_tokens", $"n_oov", $"n_oov_types",
-          when($"n_tokens" > 0L, expr("(n_oov * 1000000) div n_tokens"))
-            .otherwise(0L).as("oov_ppm"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(monitorTarget)
+      BatchStore.put(tot.crossJoin(oov)
+          .select($"n_tokens", $"n_oov", $"n_oov_types",
+            when($"n_tokens" > 0L, expr("(n_oov * 1000000) div n_tokens"))
+              .otherwise(0L).as("oov_ppm")),
+        monitorTarget, batchId)
     }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
   }
 
   /** Streaming burst monitor — q221's episode census run continuously
@@ -536,47 +402,31 @@ object Events {
     * "is the feed bursting RIGHT NOW" without waiting for the nightly
     * batch pass. Shares `Timeseries.burstEpisodesOn` with the batch query
     * so stream == batch is structural, and StreamingSpec proves it on a
-    * bounded stream.
+    * bounded stream. Exactly-once by the [[BatchStore]] discipline.
     *
     * State is the bounded hourly grid (|types| × |hours| rows), never
     * events — the same reduction the batch plan makes, held across
     * batches. */
   def burstMonitor(stream: DataFrame, stateTarget: String,
       monitorTarget: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val body: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, batchId) => {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.start(stream, checkpoint, Trigger.AvailableNow()) { (batch, batchId) =>
       import batch.sparkSession.implicits._
-      val spark = batch.sparkSession
-      batch
+      val counts = batch
         .groupBy($"event_type", expr("unix_millis(ts) div 3600000").as("h"))
         .agg(count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(stateTarget)
-      val grid = spark.read.parquet(stateTarget)
+      val grid = BatchStore.read(batch.sparkSession, stateTarget,
+          BatchStore.put(counts, stateTarget, batchId))
         .groupBy($"event_type", $"h").agg(sum($"n").as("c"))
-      graft.operators.Timeseries.burstEpisodesOn(grid)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(monitorTarget)
+      BatchStore.put(graft.operators.Timeseries.burstEpisodesOn(grid),
+        monitorTarget, batchId)
     }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
-  }
 
   /** Streaming split-conformal monitor — q141's distribution-free 90%
     * accept threshold maintained LIVE per event type: each micro-batch
     * collapses to (event_type, centi-quantized value, count) partial
     * counts that merge BY SUM into the additive state grid (exact under
-    * any batch slicing, the [[burstMonitor]] discipline), then the
+    * any batch slicing, as in [[burstMonitor]]), then the
     * order-statistic threshold k = ceil(0.9(n+1)) recomputes on the
     * accumulated grid and appends a batch-stamped snapshot. The
     * production question it answers: "what score cutoff does a filter
@@ -584,43 +434,28 @@ object Events {
     * far" — recalibrated every batch instead of at the nightly pass.
     * Shares `Evaluate.conformalOn` with the batch query so stream ==
     * batch is structural; StreamingSpec proves it on a bounded stream.
+    * Exactly-once by the [[BatchStore]] discipline.
     *
     * State is the bounded (|types| × |distinct centi-scores|) grid —
     * the mergeable-histogram reduction (q170's), never raw events. */
   def conformalMonitor(stream: DataFrame, stateTarget: String,
       monitorTarget: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val body: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, batchId) => {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.start(stream, checkpoint, Trigger.AvailableNow()) { (batch, batchId) =>
       import batch.sparkSession.implicits._
-      val spark = batch.sparkSession
-      batch
+      val counts = batch
         .groupBy($"event_type",
           floor($"value" * 100d).cast("long").as("score_centi"))
         .agg(count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(stateTarget)
-      val grid = spark.read.parquet(stateTarget)
+      val grid = BatchStore.read(batch.sparkSession, stateTarget,
+          BatchStore.put(counts, stateTarget, batchId))
         .groupBy($"event_type", $"score_centi").agg(sum($"n").as("c"))
-      graft.operators.Evaluate.conformalOn(grid.select(
-          $"event_type".as("source"), $"score_centi".as("n_chars"), $"c"))
-        .select($"source".as("event_type"), $"n", $"k",
-          $"threshold".as("threshold_centi"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(monitorTarget)
+      BatchStore.put(graft.operators.Evaluate.conformalOn(grid.select(
+            $"event_type".as("source"), $"score_centi".as("n_chars"), $"c"))
+          .select($"source".as("event_type"), $"n", $"k",
+            $"threshold".as("threshold_centi")),
+        monitorTarget, batchId)
     }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
-  }
 
   /** Streaming HLL vocabulary monitor — q292's cardinality sketch run
     * continuously over an arriving document stream: each micro-batch
@@ -633,55 +468,24 @@ object Events {
     * per batch, never tokens — so the live estimate is exactly the
     * batch estimate over everything ingested so far.
     *
-    * Exactly-once: both writes are batch_id dynamic-partition
-    * overwrites (the conformal/CMS discipline) — a replayed batch
-    * rewrites its own partitions byte-identically; the snapshot reads
+    * Exactly-once by the [[BatchStore]] discipline; the snapshot reads
     * the full store, and max-merge is idempotent to replayed registers
-    * by construction.
+    * by construction (so compaction commutes with replay too).
     *
     * StreamingSpec proves the final snapshot equals q292's hll_est
-    * column over the same corpus across a 3-batch split.
-    *
-    * Like every batch_id-partitioned monitor here, the state store grows
-    * one partition per micro-batch; a long-running deployment compacts
-    * it periodically by rewriting the max-merged registers as a single
-    * baseline partition (max-merge is idempotent, so compaction commutes
-    * with replay). */
+    * column over the same corpus across a 3-batch split. */
   def hllMonitor(docs: DataFrame, stateTarget: String,
       monitorTarget: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val body: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, batchId) => {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.start(docs, checkpoint, Trigger.AvailableNow()) { (batch, batchId) =>
       import batch.sparkSession.implicits._
-      val spark = batch.sparkSession
-      graft.operators.TextAnalysis.hllRegisters(batch.toDF())
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(stateTarget)
-      // a first micro-batch with zero register rows (all-empty docs)
-      // writes no parquet files — schema inference on the bare store
-      // directory would throw and kill the stream; skip the snapshot
-      // until the store holds at least one file (the next non-empty
-      // batch snapshots everything accumulated so far)
-      if (hasParquetFiles(spark, stateTarget)) {
-        val merged = spark.read.parquet(stateTarget)
-          .groupBy($"lang", $"b").agg(max($"m").as("m"))
-        graft.operators.TextAnalysis.hllEstimate(merged)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(monitorTarget)
-      }
+      val merged = BatchStore.read(batch.sparkSession, stateTarget,
+          BatchStore.put(graft.operators.TextAnalysis.hllRegisters(batch),
+            stateTarget, batchId))
+        .groupBy($"lang", $"b").agg(max($"m").as("m"))
+      BatchStore.put(graft.operators.TextAnalysis.hllEstimate(merged),
+        monitorTarget, batchId)
     }
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
-  }
 
   /** Streaming count-min heavy-hitter monitor — q102's sketch run
     * continuously over the USER dimension (the abuse/bot screen a feed
@@ -693,77 +497,44 @@ object Events {
     * against the accumulated sketch and reports those whose CMS
     * estimate clears total/200. State is 1024 cells + id-only candidate
     * rows — never raw events; at production scale the candidate side is
-    * each batch's local top-k, same shape.
+    * each batch's local top-k, same shape. Exactly-once across both
+    * state tables and the snapshot by the [[BatchStore]] discipline.
     *
     * StreamingSpec proves the final snapshot equals the one-pass batch
     * twin (same cell hash, same threshold) across a 3-batch split. */
   def cmsMonitor(stream: DataFrame, stateTarget: String,
       monitorTarget: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val body: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, batchId) => {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.start(stream, checkpoint, Trigger.AvailableNow()) { (batch, batchId) =>
       import batch.sparkSession.implicits._
       val spark = batch.sparkSession
-      batch
-        .select($"user_id", explode(sequence(lit(0), lit(3))).as("j"))
-        .withColumn("cell", cmsCell($"j", $"user_id"))
-        .groupBy($"j", $"cell").agg(count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(s"$stateTarget/cells")
-      batch.select($"user_id").distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(s"$stateTarget/users")
-      val sketch = spark.read.parquet(s"$stateTarget/cells")
+      val cells = s"$stateTarget/cells"
+      val users = s"$stateTarget/users"
+      val cellsStored = BatchStore.put(batch
+          .select($"user_id", explode(sequence(lit(0), lit(3))).as("j"))
+          .withColumn("cell", cmsCell($"j", $"user_id"))
+          .groupBy($"j", $"cell").agg(count(lit(1)).as("n")),
+        cells, batchId)
+      val usersStored = BatchStore.put(batch.select($"user_id").distinct(),
+        users, batchId)
+      val sketch = BatchStore.read(spark, cells, cellsStored)
         .groupBy($"j", $"cell").agg(sum($"n").as("c"))
       val total = sketch.where($"j" === 0)
         .agg(sum($"c").as("tot"))
-      val cands = spark.read.parquet(s"$stateTarget/users")
+      val cands = BatchStore.read(spark, users, usersStored)
         .select($"user_id").distinct()
         .select($"user_id", explode(sequence(lit(0), lit(3))).as("j"))
         .withColumn("cell", cmsCell($"j", $"user_id"))
-      cands.join(broadcast(sketch), Seq("j", "cell"))
-        .groupBy($"user_id").agg(min($"c").as("est"))
-        .crossJoin(broadcast(total))
-        .where($"est" * 200 >= $"tot")
-        .select($"user_id", $"est", $"tot")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(monitorTarget)
+      BatchStore.put(cands.join(broadcast(sketch), Seq("j", "cell"))
+          .groupBy($"user_id").agg(min($"c").as("est"))
+          .crossJoin(broadcast(total))
+          .where($"est" * 200 >= $"tot")
+          .select($"user_id", $"est", $"tot"),
+        monitorTarget, batchId)
     }
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
-  }
 
   /** Row-j CMS cell of a user id — q102's md5 cell family on the user
     * salt; shared by the monitor and its batch twin in StreamingSpec. */
-  /** True when `dir` holds at least one parquet part file (recursively —
-    * monitor stores are batch_id-partitioned). Probed through the
-    * session's Hadoop FileSystem so the guard works on HDFS/S3 too, the
-    * chunkNoveltyGate discipline. Guards schema inference over stores a
-    * zero-row first batch left file-less. */
-  private[graft] def hasParquetFiles(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext)
-      found = it.next().getPath.getName.endsWith(".parquet")
-    found
-  }
-
   private[graft] def cmsCell(j: org.apache.spark.sql.Column,
       id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     conv(substring(md5(concat(j.cast("string"), lit("#cmsu:"),

@@ -171,6 +171,30 @@ class CatalogSqlSpec extends SparkSpec {
     assert(scanRoots(viaSql) === shot4)
   }
 
+  test("a warehouse named by a file: URI resolves its shot directories on both paths") {
+    import spark.implicits._
+    warehouse
+    val local = "target/catalog_sql_uri"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(local))
+    val dir = new java.io.File(local).getAbsoluteFile.toURI.toString.stripSuffix("/")
+    assert(dir.startsWith("file:/"))
+    Io.writeSignal(teRows(Seq(1, 2, 3)).toDF("shot", "time", "radius", "value"), dir, "mpts.te")
+    assert(Io.signalPath(dir, "mpts.te") === s"$dir/mpts_te")
+    register("grafturi", dir)
+    val m = Machine(spark, SignalCatalog(SignalCatalog.fromFile(s"$warehouse/machine.xml")
+      .signals.map(s => s.copy(qualifiedName = s.qualifiedName.stripPrefix("root.")))), dir)
+    val viaApi = m.shot(2).signal("mpts.te").df
+    val viaSql = spark.sql("SELECT * FROM grafturi.mpts.te WHERE shot = 2")
+    for (df <- Seq(viaApi, viaSql)) {
+      val got = teOf(df)
+      assert(got.length === 50)
+      assert(got.toSet === teRows(Seq(2)).toSet)
+    }
+    val shot2 = Seq(canonPath(s"$local/mpts_te/shot=2"))
+    assert(scanRoots(viaApi) === shot2)
+    assert(scanRoots(viaSql) === shot2)
+  }
+
   test("XML-declared units ride through the SQL path as column metadata") {
     warehouse
     // the API path carries units in StructField metadata; the SQL path

@@ -942,4 +942,121 @@ class StreamingSpec extends SparkSpec {
     // second wave must see SOME non-novel mass or the probe is dead
     assert(second.count() > 0 && expect2.values.exists(_ < 1000000L))
   }
+
+  /** A fresh scratch directory for one streaming run. */
+  private def scratch(tag: String): java.io.File =
+    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${tag}_${System.nanoTime()}")
+
+  /** Ingest `waves` into `gate` in order: each wave is appended to one
+    * source directory and drained by a restart on one checkpoint, so the
+    * waves are consecutive micro-batches of one logical stream. */
+  private def ingestWaves(base: java.io.File, schema: org.apache.spark.sql.types.StructType,
+      waves: Seq[org.apache.spark.sql.DataFrame])(
+      gate: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery)
+      : Unit = {
+    val arriving = new java.io.File(base, "arriving").getPath
+    val ckpt = new java.io.File(base, "ckpt").getPath
+    waves.foreach { w =>
+      w.write.mode("append").parquet(arriving)
+      val q = gate(spark.readStream.schema(schema).parquet(arriving), ckpt)
+      q.processAllAvailable(); q.stop()
+    }
+  }
+
+  test("chunk novelty gate: an empty first wave changes no later verdict") {
+    import spark.implicits._
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val first = docs.where($"doc_id" % 5 =!= 0)
+    val second = docs.where($"doc_id" % 5 === 0)
+    // doc_id -> (novelty_ppm, admit, batch_id) over every ingested wave
+    def verdicts(waves: Seq[org.apache.spark.sql.DataFrame]) = {
+      val base = scratch("chunk_empty")
+      val snap = new java.io.File(base, "snap").getPath
+      ingestWaves(base, docs.schema, waves) { (stream, ckpt) =>
+        Events.chunkNoveltyGate(stream, new java.io.File(base, "store").getPath, snap, ckpt)
+      }
+      spark.read.parquet(snap)
+        .select($"doc_id", $"novelty_ppm", $"admit", $"batch_id".cast("long")).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2), r.getLong(3)))).toMap
+    }
+    val plain = verdicts(Seq(first, second))
+    val afterEmpty = verdicts(Seq(docs.limit(0), first, second))
+    // the same verdicts, each one micro-batch later
+    assert(afterEmpty === plain.map { case (id, (p, a, b)) => id -> ((p, a, b + 1)) })
+    assert(plain.size.toLong === docs.count())
+    assert(plain.values.exists(_._1 < 1000000L), "the store probe saw nothing")
+  }
+
+  test("embedding novelty gate: an empty first wave changes no later verdict") {
+    import spark.implicits._
+    val emb = graft.sources.Tables.embeddings(spark, sfDir)
+      .select($"vec_id", $"embedding")
+    val codebook: Array[(Long, Array[Double])] =
+      emb.where($"vec_id" < 8).as[(Long, Array[Float])].collect().sortBy(_._1)
+        .map { case (id, a) => (id, a.map(_.toDouble)) }
+    val wave1 = emb.where($"vec_id" % 2 === 0)
+    val wave2 = emb.where($"vec_id" % 2 === 1).unionByName(
+      emb.where($"vec_id" % 2 === 0 && $"vec_id" < 40)
+        .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"))
+    // vec_id -> (max_cos_ppm, admit, batch_id) over every ingested wave
+    def verdicts(waves: Seq[org.apache.spark.sql.DataFrame]) = {
+      val base = scratch("emb_empty")
+      val snap = new java.io.File(base, "snap").getPath
+      ingestWaves(base, emb.schema, waves) { (stream, ckpt) =>
+        Events.embeddingNoveltyGate(stream, codebook,
+          new java.io.File(base, "store").getPath, snap, ckpt)
+      }
+      spark.read.parquet(snap)
+        .select($"vec_id", $"max_cos_ppm", $"admit", $"batch_id".cast("long")).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2), r.getLong(3)))).toMap
+    }
+    val plain = verdicts(Seq(wave1, wave2))
+    val afterEmpty = verdicts(Seq(emb.limit(0), wave1, wave2))
+    assert(afterEmpty === plain.map { case (id, (c, a, b)) => id -> ((c, a, b + 1)) })
+    assert(plain.size.toLong === wave1.count() + wave2.count())
+    // wave 2 was screened against a non-empty store
+    assert(plain.values.exists { case (c, _, b) => b == 1L && c != -2000000L })
+  }
+
+  test("burst, CMS and conformal monitors: an empty first file leaves the final snapshot unchanged") {
+    import spark.implicits._
+    val ev = graft.sources.Tables.events(spark, sfDir)
+    type Monitor = (org.apache.spark.sql.DataFrame, String, String, String) =>
+      org.apache.spark.sql.streaming.StreamingQuery
+    val monitors: Seq[(String, Monitor)] = Seq(
+      "burst" -> Events.burstMonitor _,
+      "cms" -> Events.cmsMonitor _,
+      "conformal" -> Events.conformalMonitor _)
+    // (last batch_id, rows of its snapshot) of one run over the events,
+    // optionally behind a zero-row file that is its first micro-batch
+    def lastSnapshot(monitor: Monitor, emptyFirst: Boolean) = {
+      val base = scratch("monitor_empty")
+      val arriving = new java.io.File(base, "arriving")
+      if (emptyFirst) {
+        ev.limit(0).write.parquet(arriving.getPath)
+        // the file source takes the oldest file first
+        arriving.listFiles().filter(_.getName.endsWith(".parquet"))
+          .foreach(_.setLastModified(System.currentTimeMillis() - 60000L))
+      }
+      ev.coalesce(1).write.mode("append").parquet(arriving.getPath)
+      val q = monitor(
+        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
+          .parquet(arriving.getPath),
+        new java.io.File(base, "state").getPath,
+        new java.io.File(base, "monitor").getPath,
+        new java.io.File(base, "ckpt").getPath)
+      q.processAllAvailable(); q.stop()
+      val snap = spark.read.parquet(new java.io.File(base, "monitor").getPath)
+        .withColumn("batch_id", $"batch_id".cast("long"))
+      val last = snap.agg(max($"batch_id")).collect().head.getLong(0)
+      (last, snap.where($"batch_id" === last).drop("batch_id").collect().toSet)
+    }
+    monitors.foreach { case (name, monitor) =>
+      val (plainLast, plain) = lastSnapshot(monitor, emptyFirst = false)
+      val (emptyLast, afterEmpty) = lastSnapshot(monitor, emptyFirst = true)
+      assert(plain.nonEmpty, name)
+      assert(emptyLast === plainLast + 1, name)
+      assert(afterEmpty === plain, name)
+    }
+  }
 }
