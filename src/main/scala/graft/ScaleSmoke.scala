@@ -410,8 +410,7 @@ object ScaleSmoke {
     * edge table every round; star contraction rewrites the edge relation
     * itself, shrinking each round's shuffle as components collapse — the
     * big-graph trade Graph.scala's header names. Identity is
-    * spec-gated (GraphCurationSpec); this measures wall at 1x/10x. Run
-    * with GRAFT_STAGE_LOG=1 to see per-round edge counts / label sums.
+    * spec-gated (GraphCurationSpec); this measures wall at 1x/10x.
     * Run: runMain graft.ScaleSmoke starcc [n] */
   private def starCcSmoke(n: Int): Unit = {
     val spark = SparkSession.builder()
@@ -867,9 +866,7 @@ object ScaleSmoke {
     * partitions to model a wide cluster scan (the per-key partial-row
     * pileup is proportional to the MAP TASK COUNT, which local[32]'s 32
     * shuffle partitions would otherwise hide). Reports per-task
-    * shuffle-read row max/median for the phase-1 reduce stage under the
-    * single-phase (salts=1) and salted (salts=32) shapes, plus a count
-    * identity check, and dumps both formatted plans for plans/r15.
+    * shuffle-read row max/median for the single-phase reduce stage.
     * Run: runMain graft.ScaleSmoke hotpair [mapParts] */
   private def hotPairSmoke(mapParts: Int): Unit = {
     val spark = SparkSession.builder()
@@ -907,17 +904,12 @@ object ScaleSmoke {
         explode(array(lit(7L), lit(9L))).as("suppkey"))
     val inter = graft.operators.Ckpt(
       normal.unionByName(hot).repartition(mapParts, $"custkey"), eager = false)
-    def run(label: String, salts: Int, planFile: Option[String]): Long = {
+    def run(label: String): Unit = {
       taskRows.clear()
-      val co = graft.operators.Graph.itemCfCoCounts(inter, Some(salts))
-      planFile.foreach { f =>
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
-          co.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      }
+      val co = graft.operators.Graph.itemCfCoCounts(inter)
       val n = co.agg(sum($"c_ab"), count(lit(1))).collect()(0)
       val tot = n.getLong(0); val keys = n.getLong(1)
-      // the phase-1 reduce stage = the stage with the largest per-task
+      // the reduce stage = the stage with the largest per-task
       // row spread reading ~mapParts-sized shuffle output
       import scala.jdk.CollectionConverters._
       val interesting = taskRows.asScala.toSeq
@@ -930,15 +922,10 @@ object ScaleSmoke {
       interesting.sortBy(-_._2).take(3).foreach { case (sid, s, mx, md) =>
         println(f"   stage $sid%4d shuffle-read rows: total=$s%9d max-task=$mx%8d median-task=$md%8d ratio=${mx.toDouble / math.max(1, md)}%6.1f")
       }
-      tot
     }
     // warm (codegen)
-    run("warmup (salts=1)", 1, None)
-    val a = run("single-phase (salts=1)", 1,
-      Some("plans/r15/q202_co_single.txt"))
-    val b = run("salted (salts=32)", 32,
-      Some("plans/r15/q202_co_salted.txt"))
-    println(s"identity: ${if (a == b) "OK" else "MISMATCH"} (sum of c_ab equal)")
+    run("warmup")
+    run("single-phase")
     spark.stop()
   }
 

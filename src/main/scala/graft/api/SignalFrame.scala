@@ -61,8 +61,8 @@ final case class ShotView(machine: Machine, shotNo: Int) {
   def signal(qualifiedName: String): SignalFrame = {
     ParamLiterals.ensureRegistered(machine.spark)
     val meta = machine.catalog.signal(qualifiedName)
-    SignalFrame(meta, Io.readShots(machine.spark,
-      Io.signalPath(machine.dataDir, meta.qualifiedName), Seq(shotNo)))
+    val (path, schema) = Io.signal(machine.spark, machine.dataDir, meta.qualifiedName)
+    SignalFrame(meta, Io.readShots(machine.spark, path, schema, Seq(shotNo)))
   }
 }
 

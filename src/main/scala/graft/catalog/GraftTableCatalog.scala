@@ -46,8 +46,9 @@ import graft.sources.Io
   * named shot however large the warehouse is, and keeps everything the
   * native scan does: row-group filter pushdown, column pruning and
   * partition filters on `shot`. A query with no shot equality, or a flat
-  * `.parquet` signal, reads the whole path. The catalog caches each
-  * table's schema; it never caches a listing. Initializing the catalog
+  * `.parquet` signal, reads the whole path. The file schema comes from
+  * `Io`'s schema cache, which infers again after a shot directory is
+  * added or replaced; nothing caches a listing. Initializing the catalog
   * registers `graft.plans.ParamLiteralsStrategy` on the session, so the
   * per-request constants of a query (`channel = 3`, the `time BETWEEN`
   * bounds) do not compile a new class per request.
@@ -118,17 +119,13 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
   override def tableExists(ident: Identifier): Boolean =
     cat.get(qualified(ident)).isDefined
 
-  /** Merged schema per signal: file column types inferred once, from one
-    * shot directory (`Io.schema`), plus the XML-declared metadata. */
-  private val schemas =
-    scala.collection.concurrent.TrieMap.empty[String, StructType]
-
+  /** The signal's merged schema: the file column types (`Io.signal`, the
+    * one schema cache) plus the XML-declared metadata. */
   override def loadTable(ident: Identifier): Table = {
     val qn = qualified(ident)
     val meta = cat.get(qn).getOrElse(throw new NoSuchTableException(ident))
-    val path = Io.signalPath(dataDir, qn)
-    new ShotTable(qn, path, schemas.getOrElseUpdate(qn,
-      withDeclared(Io.schema(SparkSession.active, path), meta.schema)))
+    val (path, fileSchema) = Io.signal(SparkSession.active, dataDir, qn)
+    new ShotTable(qn, path, withDeclared(fileSchema, meta.schema))
   }
 
   /** Column TYPES and presence come from the files (the XML declares axis

@@ -93,13 +93,8 @@ object Dedup {
     // thread pool — wall = 1x subtree despite 2x CPU — and the stage
     // is not CPU-bound; both rewrites trade that free parallelism for
     // serial latency. On a CPU-saturated cluster the trade flips to
-    // (b), which halves the CPU without a barrier — that regime is now
-    // selectable IN CODE via `spark.graft.ppjoin.candidateShape` =
-    // shuffle_hash (default broadcast keeps the measured local
-    // optimum); both shapes are plan-pinned in plans/r15 and
-    // PlanShapeSpec, and hash-identical (join strategy is layout-only).
-    val candShape = docs.sparkSession.conf
-      .get("spark.graft.ppjoin.candidateShape", "broadcast")
+    // (b), which halves the CPU without a barrier. The broadcast shape
+    // is plan-pinned in Round15Spec.
     val docSh = docs
       .select(col("doc_id"), TextOps.shingles(TextOps.toks(col("text")), 3).as("sh"))
       .where(size(col("sh")) > 0)
@@ -121,12 +116,7 @@ object Dedup {
     // distinct keeps the pair if ANY occurrence passes) — cuts
     // candidates 193k -> 69k at sf0.1 before the verify pays for them.
     val alpha = ceil(lit(t / (1 + t)) * (col("a.__n") + col("b.__n")) - lit(1e-9))
-    // shuffle_hash regime: both self-join sides share ONE exchange
-    // (ReusedExchange) instead of a broadcast build — halves the prefix
-    // subtree's CPU at the cost of serializing what broadcast overlaps
-    val prefix0 =
-      if (candShape == "shuffle_hash") prefix.hint("shuffle_hash") else prefix
-    val cand = prefix0.as("a").join(prefix0.as("b"),
+    val cand = prefix.as("a").join(prefix.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
           col("b.__n") >= ceilT(col("a.__n"), t) && col("b.__n") * t <= col("a.__n") &&
           lit(1) + least(col("a.__n") - col("a.__rk"), col("b.__n") - col("b.__rk")) >= alpha)
@@ -1433,7 +1423,7 @@ object Dedup {
     // the ≤11-row histogram feeds FOUR union branches in lshCurveOn —
     // without truncation each branch re-plans (and AQE re-executes) the
     // entire PPJoin pipeline: 48 parquet scans / 48 exchanges in the
-    // before-plan vs 12 after (plans/r14/q252_lsh_curve_*.txt)
+    // before-plan vs 12 after
     lshCurveOn(Ckpt(thresholdSweep(spark, dir)
       .select($"decile", $"n_pairs",
         least($"decile" * 10L + 5L, lit(100L)).as("jc")), eager = false))

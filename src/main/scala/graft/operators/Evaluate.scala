@@ -1587,7 +1587,7 @@ object Evaluate {
     // ONE grouped rank pass over the stacked (which, value) rows instead
     // of three sequential rank pipelines + two doc_id joins — the ranks
     // per `which` are bit-identical (segmentedRankLongBy scaladoc) and
-    // rsum needs no join at all (the Overhead probe read this query 96%
+    // rsum needs no join at all (a per-job overhead probe read this query 96%
     // fixed DAG floor; the floor was the three chained pipelines)
     val stacked = scores.select($"doc_id",
       expr("stack(3, 1L, s1, 2L, s2, 3L, s3)").as(Seq("which", "v")))

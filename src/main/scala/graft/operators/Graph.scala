@@ -204,8 +204,6 @@ object Graph {
       converged = s == prevSum
       prevSum = s
       round += 1
-      if (sys.env.contains("GRAFT_STAGE_LOG"))
-        System.err.println(s"[graft.cc] round $round sum=$s converged=$converged")
     }
     } finally {
       // the cached edge closure must not outlive the loop on ANY exit
@@ -335,8 +333,6 @@ object Graph {
       if (!converged) { Ckpt.release(cur); cur = next }
       else Ckpt.release(next)
       round += 1
-      if (sys.env.contains("GRAFT_STAGE_LOG"))
-        System.err.println(s"[graft.starcc] round $round converged=$converged")
     }
     if (!converged) {
       Ckpt.release(cur)
@@ -1079,32 +1075,24 @@ object Graph {
   def itemCf(spark: SparkSession, dir: String): DataFrame =
     itemCfOn(spark, dir, Some(ItemCfDegCap))
 
+  /** Co-occurrence counts `(s_a, s_b, c_ab)` from a `(custkey, suppkey)`
+    * interaction relation — the pair self-join + reduce at the heart of
+    * [[itemCfOn]], exposed for its plan-shape spec and the ScaleSmoke
+    * hot-pair axis (the reduce hides behind the `sims` checkpoint in the
+    * full query plan). A single-phase groupBy — see the measured
+    * rationale at the itemCfOn call site. */
+  private[graft] def itemCfCoCounts(capped: DataFrame): DataFrame = {
+    val spark = capped.sparkSession
+    import spark.implicits._
+    capped.as("a").join(capped.as("b"),
+        $"a.custkey" === $"b.custkey" && $"a.suppkey" < $"b.suppkey")
+      .select($"a.suppkey".as("s_a"), $"b.suppkey".as("s_b"))
+      .groupBy($"s_a", $"s_b").agg(count(lit(1)).as("c_ab"))
+  }
+
   /** itemCf with an optional cap — `cap = None` is the UNCAPPED variant
     * kept only so ScaleSmoke's megacust mode can demonstrate what the
     * cap buys (never registered as a query). */
-  /** Co-occurrence counts `(s_a, s_b, c_ab)` from a `(custkey, suppkey)`
-    * interaction relation — the pair self-join + reduce at the heart of
-    * [[itemCfOn]], exposed for the salted-shape identity spec and the
-    * ScaleSmoke hot-pair axis (the reduce hides behind the `sims`
-    * checkpoint in the full query plan). `saltsOverride` bypasses the
-    * conf for A/B runs. Default (conf unset / 1) is the single-phase
-    * groupBy — see the measured rationale at the itemCfOn call site. */
-  private[graft] def itemCfCoCounts(capped: DataFrame,
-      saltsOverride: Option[Int] = None): DataFrame = {
-    val spark = capped.sparkSession
-    import spark.implicits._
-    val salts = saltsOverride.getOrElse(
-      spark.conf.get("spark.graft.itemcf.salts", "1").toInt)
-    val pairRows = capped.as("a").join(capped.as("b"),
-        $"a.custkey" === $"b.custkey" && $"a.suppkey" < $"b.suppkey")
-      .select($"a.suppkey".as("s_a"), $"b.suppkey".as("s_b"))
-    if (salts > 1)
-      Skew.saltedAgg(pairRows, Seq("s_a", "s_b"), salts, withCount = true)
-        .withColumnRenamed("n", "c_ab")
-    else
-      pairRows.groupBy($"s_a", $"s_b").agg(count(lit(1)).as("c_ab"))
-  }
-
   def itemCfOn(spark: SparkSession, dir: String,
       cap: Option[Long]): DataFrame = {
     import spark.implicits._
@@ -1124,13 +1112,11 @@ object Graph {
         inter.join(keep, "custkey")
       case None => inter
     }
-    // Co-occurrence reduce: single-phase groupBy + count, with a
-    // conf-gated two-phase SALTED shape (`spark.graft.itemcf.salts`,
-    // guide §2.5 / the q50 saltedAgg machinery) kept available and
-    // spec-pinned identical. The salted shape is NOT the default at any
-    // scale, because it was MEASURED WORSE on a planted hot pair
-    // (ScaleSmoke `hotpair`, 4096 map tasks, one pair shared by 300k
-    // customers): map-side partial aggregation already collapses a hot
+    // Co-occurrence reduce: single-phase groupBy + count. A two-phase
+    // SALTED shape (guide §2.5 / the q50 saltedAgg machinery) was
+    // MEASURED WORSE on a planted hot pair (4096 map tasks, one pair
+    // shared by 300k customers; ScaleSmoke `hotpair` still reports the
+    // single-phase pile-up): map-side partial aggregation already collapses a hot
     // key to ≤1 row per map task, so the unsalted hot reducer reads
     // ~M partial rows (M = map tasks; 16 MB even at M = 10⁶), while the
     // salt DEFEATS that collapse — hotpair read max-task 4726 rows
@@ -1251,8 +1237,6 @@ object Graph {
       converged = mNext == m
       m = mNext
       round += 1
-      if (sys.env.contains("GRAFT_STAGE_LOG"))
-        System.err.println(s"[graft.kcore] round $round edges=$m")
     }
     val out =
       if (converged)

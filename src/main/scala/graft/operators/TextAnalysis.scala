@@ -1229,7 +1229,7 @@ object TextAnalysis {
     // Round-14 history of this lattice: the original per-stage
     // RELATIONAL formulation (8 DP stages x <=4 branch joins, each stage
     // checkpointed, + 8 backtrack joins) was 100% job floor / 0% data by
-    // the Overhead probe, and both relaxations of its checkpoints
+    // a per-job overhead probe, and both relaxations of its checkpoints
     // (all-cache, stride-2) blew up the driver (COVERAGE/SCALE.md). The
     // optimization round replaced the relational lattice with a MAP-SIDE
     // one: each word type joins the scores of its own <=26 positioned

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -42,22 +42,42 @@ object Io {
     * `shot=N/…`, written by `writeSignal`), which `shotDirs` addresses one
     * shot at a time. Falls back to the flat `<root>/<qualified_name>.parquet`
     * (a file, or a directory of any layout) when no such directory exists. */
-  def signalPath(dataDir: String, qualifiedName: String): String = {
-    val base = s"$dataDir/${qualifiedName.replace('.', '_')}"
-    if (isDirectory(SparkSession.active, base)) base else s"$base.parquet"
+  def signalPath(dataDir: String, qualifiedName: String): String =
+    locate(SparkSession.active, dataDir, qualifiedName)._1
+
+  /** `signalPath` and the file schema there (`schema`), from the one
+    * status call that resolves the path. */
+  private[graft] def signal(spark: SparkSession, dataDir: String,
+      qualifiedName: String): (String, StructType) = {
+    val (path, dir) = locate(spark, dataDir, qualifiedName)
+    (path, dir.fold(schema(spark, path))(schemaAt(spark, path, _)))
+  }
+
+  /** The signal's path, with its status when it is the shot directory. */
+  private def locate(spark: SparkSession, dataDir: String,
+      qualifiedName: String): (String, Option[FileStatus]) = {
+    val base = signalDir(dataDir, qualifiedName)
+    val dir = status(spark, base).filter(_.isDirectory)
+    (if (dir.isDefined) base else s"$base.parquet", dir)
+  }
+
+  private def signalDir(dataDir: String, qualifiedName: String): String =
+    s"$dataDir/${qualifiedName.replace('.', '_')}"
+
+  private def status(spark: SparkSession, path: String): Option[FileStatus] = {
+    val p = new Path(path)
+    try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+    catch { case _: FileNotFoundException => None }
   }
 
   /** True when `path` is a directory on its Hadoop FileSystem. */
-  private[graft] def isDirectory(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isDirectory
-    catch { case _: FileNotFoundException => false }
-  }
+  private[graft] def isDirectory(spark: SparkSession, path: String): Boolean =
+    status(spark, path).exists(_.isDirectory)
 
   /** Write a signal table in the preferred shot-directory layout at the
     * path `signalPath` resolves first. */
   def writeSignal(df: DataFrame, dataDir: String, qualifiedName: String): Unit =
-    writePartitioned(df, s"$dataDir/${qualifiedName.replace('.', '_')}", "shot")
+    writePartitioned(df, signalDir(dataDir, qualifiedName), "shot")
 
   /** The `<path>/shot=N` directories of `shots` that exist, in shot order,
     * for a `path` in the shot-directory layout; `None` for the flat
@@ -68,28 +88,44 @@ object Io {
     else Some(shots.toSeq.distinct.sorted.map(n => s"$path/shot=$n")
       .filter(isDirectory(SparkSession.active, _)))
 
-  /** Parquet schema per path, cached for the JVM lifetime — the one
-    * footer-inference cache, shared by `Tables.load` and the signal read
-    * path (layout-immutability assumption: read-only testdata /
-    * write-once signal directories). Metadata only; scans, pruning and
-    * results are unchanged. */
+  /** Inferred schema and the modification time of its path at inference:
+    * the one footer-inference cache, shared by `Tables.load` and both
+    * signal read paths. */
   private val schemas =
-    scala.collection.concurrent.TrieMap.empty[String, StructType]
+    scala.collection.concurrent.TrieMap.empty[String, (Long, StructType)]
 
-  /** The file schema of `path`. A directory of `shot=N` subdirectories is
-    * inferred from its first shot alone (with `shot` as the partition
-    * column), so inference never lists the whole table. */
+  /** The file schema of `path`, inferred again whenever the modification
+    * time of `path` has changed since the last inference: writing or
+    * replacing a shot directory adds or renames an entry of the signal
+    * directory, and so changes it. A directory of `shot=N` subdirectories
+    * is inferred from its newest shot alone (with `shot` as the partition
+    * column), so inference never lists the whole table and a column added
+    * by a new shot appears at once. The time is taken before inference,
+    * so a racing write costs one more inference, never a stale schema. A
+    * store whose directories carry no modification time (0) infers on
+    * every call. */
   def schema(spark: SparkSession, path: String): StructType =
-    schemas.getOrElseUpdate(path, {
-      val p = new Path(path)
-      val names =
-        try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
-          .map(_.getPath.getName).toSeq
-        catch { case _: FileNotFoundException => Nil }
-      val first = names.filter(_.startsWith("shot=")).sorted.headOption
-      first.fold(spark.read.parquet(path))(d =>
-        spark.read.option("basePath", path).parquet(s"$path/$d")).schema
-    })
+    status(spark, path).fold(infer(spark, path))(schemaAt(spark, path, _))
+
+  private def schemaAt(spark: SparkSession, path: String, st: FileStatus): StructType = {
+    val stamp = st.getModificationTime
+    schemas.get(path).collect { case (`stamp`, s) if stamp != 0 => s }.getOrElse {
+      val s = infer(spark, path)
+      schemas.put(path, stamp -> s)
+      s
+    }
+  }
+
+  private def infer(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val shots =
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("shot="))
+      catch { case _: FileNotFoundException => Nil }
+    val newest = shots.maxByOption(s => (s.getModificationTime, s.getPath.getName))
+    newest.fold(spark.read.parquet(path))(d =>
+      spark.read.option("basePath", path).parquet(s"$path/${d.getPath.getName}")).schema
+  }
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema(spark, path)).parquet(path)
@@ -99,9 +135,15 @@ object Io {
     * listed and read, with `basePath = path` so `shot` stays a partition
     * column; a shot with no directory contributes no rows. The flat
     * fallback is read whole and filtered. */
-  def readShots(spark: SparkSession, path: String, shots: Seq[Int]): DataFrame = {
-    val df = shotDirs(path, shots).fold(readParquet(spark, path))(dirs =>
-      spark.read.schema(schema(spark, path)).option("basePath", path).parquet(dirs: _*))
+  def readShots(spark: SparkSession, path: String, shots: Seq[Int]): DataFrame =
+    readShots(spark, path, schema(spark, path), shots)
+
+  /** `readShots` with the schema of `path` already in hand (`signal`). */
+  private[graft] def readShots(spark: SparkSession, path: String, schema: StructType,
+      shots: Seq[Int]): DataFrame = {
+    val read = spark.read.schema(schema)
+    val df = shotDirs(path, shots).fold(read.parquet(path))(dirs =>
+      read.option("basePath", path).parquet(dirs: _*))
     df.where(col("shot").isin(shots: _*))
   }
 

@@ -75,7 +75,7 @@ object Tables {
     * The nanosAsLong conf is session-global and must stay set while the
     * plan executes (it is captured at physical planning, not here), so it
     * cannot be set/restored around this call. Our own entry points
-    * (Bench/Verify/tests) set it at session construction; for sessions we
+    * (Verify/tests/perfbench) set it at session construction; for sessions we
     * don't build (the driver's smoke session) we set it here — silently,
     * since on a MICROS layout it is simply inert. */
   def events(spark: SparkSession, dir: String): DataFrame = {

@@ -171,6 +171,34 @@ class CatalogSqlSpec extends SparkSpec {
     assert(scanRoots(viaSql) === shot4)
   }
 
+  test("a shot written with a new column after the first read brings that column on both paths") {
+    import spark.implicits._
+    warehouse
+    val dir = "target/catalog_sql_newcol"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    Io.writeSignal(teRows(Seq(1, 2, 3)).toDF("shot", "time", "radius", "value"), dir, "mpts.te")
+    register("graftnewcol", dir)
+    val m = Machine(spark, SignalCatalog(SignalCatalog.fromFile(s"$warehouse/machine.xml")
+      .signals.map(s => s.copy(qualifiedName = s.qualifiedName.stripPrefix("root.")))), dir)
+    def shot(n: Int) = Seq(m.shot(n).signal("mpts.te").df,
+      spark.sql(s"SELECT * FROM graftnewcol.mpts.te WHERE shot = $n"))
+    for (df <- shot(1)) {
+      assert(!df.columns.contains("value_err"))
+      assert(teOf(df).toSet === teRows(Seq(1)).toSet)
+    }
+    Io.writeSignal(teRows(Seq(4)).toDF("shot", "time", "radius", "value")
+      .withColumn("value_err", $"value" / 100), dir, "mpts.te")
+    for (df <- shot(4)) {
+      val got = df.select($"time", $"radius", $"value", $"value_err")
+        .as[(Double, Double, Double, Double)].collect()
+      assert(got.toSet === teRows(Seq(4)).map { case (_, t, r, v) => (t, r, v, v / 100) }.toSet)
+    }
+    for (df <- shot(1)) {
+      assert(teOf(df).toSet === teRows(Seq(1)).toSet)
+      assert(df.where($"value_err".isNotNull).isEmpty)
+    }
+  }
+
   test("a warehouse named by a file: URI resolves its shot directories on both paths") {
     import spark.implicits._
     warehouse
