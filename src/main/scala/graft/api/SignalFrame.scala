@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{SignalCatalog, SignalMeta}
 import graft.operators.{AsOf, Interp}
-import graft.plans.ParamLiterals
+import graft.plans.{ParamLiteralsStrategy, Planner}
 import graft.sources.Io
 
 /** The engine's user-facing verbs (SURVEY §7.1 step 3) — the FDF access
@@ -59,7 +59,7 @@ final case class Machine(spark: SparkSession, catalog: SignalCatalog,
   * compile a new class per request. */
 final case class ShotView(machine: Machine, shotNo: Int) {
   def signal(qualifiedName: String): SignalFrame = {
-    ParamLiterals.ensureRegistered(machine.spark)
+    Planner.register(machine.spark, strategies = Seq(ParamLiteralsStrategy()))
     val meta = machine.catalog.signal(qualifiedName)
     val (path, schema) = Io.signal(machine.spark, machine.dataDir, meta.qualifiedName)
     SignalFrame(meta, Io.readShots(machine.spark, path, schema, Seq(shotNo)))

@@ -6,18 +6,18 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, In, InSet, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, In, InSet, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.types.{IntegerType, Metadata, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.plans.ParamLiterals
+import graft.plans.{ParamLiteralsStrategy, Planner}
 import graft.sources.Io
 
 /** DataSourceV2 `TableCatalog` over the XML signal catalog — the SQL
@@ -38,20 +38,15 @@ import graft.sources.Io
   * nesting = namespace nesting); its data is found by `Io.signalPath`, the
   * same resolution `api.Machine` uses: the shot-directory layout
   * `dataDir/mpts_te/shot=N/`, else the flat `dataDir/mpts_te.parquet`.
-  * The returned table is a thin `SupportsRead` (`ShotTable`): its scan
-  * builder takes the `shot = n` / `shot IN (…)` conjuncts of the pushed
-  * filters, builds Spark's own `ParquetTable` over only those shots'
-  * directories, and hands filter pushdown, column pruning and the scan to
-  * that table's builder. So a shot-addressed query lists one directory per
-  * named shot however large the warehouse is, and keeps everything the
-  * native scan does: row-group filter pushdown, column pruning and
-  * partition filters on `shot`. A query with no shot equality, or a flat
-  * `.parquet` signal, reads the whole path. The file schema comes from
-  * `Io`'s schema cache, which infers again after a shot directory is
-  * added or replaced; nothing caches a listing. Initializing the catalog
-  * registers `graft.plans.ParamLiteralsStrategy` on the session, so the
-  * per-request constants of a query (`channel = 3`, the `time BETWEEN`
-  * bounds) do not compile a new class per request.
+  * The returned table is a thin `SupportsRead` (`ShotTable`) whose scan
+  * `ShotScanRule` replaces with the file relation `Io.readShots` reads, so
+  * SQL and `api.Machine` plan one V1 file scan: a shot-addressed query
+  * lists one directory per named shot however large the warehouse is. The
+  * file schema comes from `Io`'s schema cache, which infers again after a
+  * shot directory is added or replaced; nothing caches a listing. Loading
+  * a table registers `ShotScanRule` and `graft.plans.ParamLiteralsStrategy`
+  * on the session, so the per-request constants of a query (`channel = 3`,
+  * the `time BETWEEN` bounds) do not compile a new class per request.
   *
   * Options:
   *  - `xml`          (required) catalog XML file, or a directory whose
@@ -74,7 +69,6 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
   override def name(): String = catalogName
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
-    ParamLiterals.ensureRegistered(SparkSession.active)
     catalogName = name
     dataDir = Option(options.get("dataDir")).getOrElse(
       throw new IllegalArgumentException(s"catalog $name: dataDir option is required"))
@@ -120,11 +114,14 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
     cat.get(qualified(ident)).isDefined
 
   /** The signal's merged schema: the file column types (`Io.signal`, the
-    * one schema cache) plus the XML-declared metadata. */
+    * one schema cache) plus the XML-declared metadata. Runs at analysis,
+    * so `ShotScanRule` is registered before the query is optimized. */
   override def loadTable(ident: Identifier): Table = {
     val qn = qualified(ident)
     val meta = cat.get(qn).getOrElse(throw new NoSuchTableException(ident))
-    val (path, fileSchema) = Io.signal(SparkSession.active, dataDir, qn)
+    val spark = SparkSession.active
+    Planner.register(spark, Seq(ParamLiteralsStrategy()), Seq(ShotScanRule))
+    val (path, fileSchema) = Io.signal(spark, dataDir, qn)
     new ShotTable(qn, path, withDeclared(fileSchema, meta.schema))
   }
 
@@ -230,8 +227,7 @@ object GraftTableCatalog {
 }
 
 /** The table `GraftTableCatalog.loadTable` returns: the signal's merged
-  * schema, and a scan builder (`ShotScanBuilder`) that reads only the shot
-  * directories the query's filters name. */
+  * schema, and a scan that `ShotScanRule` replaces. */
 private[catalog] final class ShotTable(qn: String, path: String, tableSchema: StructType)
     extends Table with SupportsRead {
   override def name(): String = qn
@@ -239,37 +235,35 @@ private[catalog] final class ShotTable(qn: String, path: String, tableSchema: St
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ShotScanBuilder(qn, path, tableSchema, options)
+    () => ShotScan(path, tableSchema)
 }
 
-/** Chooses the directories from the pushed filters, then delegates every
-  * pushdown and the scan itself to a `ParquetTable`'s own builder over
-  * just those directories (`basePath = path`, so `shot` stays a partition
-  * column). Spark pushes filters, when there are any, before it prunes
-  * columns or builds the scan; without a pinned shot, or for the flat
-  * `.parquet` fallback, the table covers the whole path. */
-private[catalog] final class ShotScanBuilder(qn: String, path: String,
-    tableSchema: StructType, options: CaseInsensitiveStringMap)
-    extends SupportsPushDownCatalystFilters with SupportsPushDownRequiredColumns {
+/** A `ShotTable`'s scan: the signal's path and schema, with no pushdown
+  * and no listing. It has no `toBatch`, so a plan that `ShotScanRule` did
+  * not rewrite fails rather than reading another way. */
+private[catalog] final case class ShotScan(path: String, schema: StructType) extends Scan {
+  override def readSchema(): StructType = schema
+}
 
-  private var shots: Option[Set[Int]] = None
-
-  private lazy val inner = {
-    val dirs = shots.flatMap(Io.shotDirs(path, _))
-    val tableOptions = dirs.fold(Map.empty[String, String])(_ => Map("basePath" -> path))
-    ParquetTable(qn, SparkSession.active, new CaseInsensitiveStringMap(tableOptions.asJava),
-      dirs.getOrElse(Seq(path)), Some(tableSchema), classOf[ParquetFileFormat])
-      .newScanBuilder(options)
+/** Replaces each scan of a `ShotScan` with `Io.scan`'s file relation over
+  * the shots that `pinnedShots` finds in the `Filter` directly above it,
+  * or over the whole path. The relation keeps the scan's output attributes
+  * by name, so their ids and the XML units/title metadata survive, and
+  * `FileSourceStrategy` plans it as it plans `api.ShotView`'s read. It runs
+  * in "User Provided Optimizers", after "Early Filter and Projection
+  * Push-Down" has built the scan and left the query's filters above it. */
+object ShotScanRule extends Rule[LogicalPlan] with PredicateHelper {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDownWithSubqueries {
+    case f @ Filter(cond, s @ DataSourceV2ScanRelation(_, scan: ShotScan, _, _, _)) =>
+      f.copy(child = relation(s, scan, GraftTableCatalog.pinnedShots(splitConjunctivePredicates(cond))))
+    case s @ DataSourceV2ScanRelation(_, scan: ShotScan, _, _, _) => relation(s, scan, None)
   }
 
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    shots = GraftTableCatalog.pinnedShots(filters)
-    inner.pushFilters(filters)
+  private def relation(s: DataSourceV2ScanRelation, scan: ShotScan,
+      shots: Option[Set[Int]]): LogicalRelation = {
+    val byName = s.output.map(a => a.name -> a).toMap
+    val rel = Io.scan(SparkSession.active, scan.path, scan.schema, shots)
+      .queryExecution.analyzed.asInstanceOf[LogicalRelation]
+    rel.copy(output = rel.output.map(a => byName.getOrElse(a.name, a)))
   }
-
-  override def pushedFilters: Array[Predicate] = inner.pushedFilters
-
-  override def pruneColumns(requiredSchema: StructType): Unit = inner.pruneColumns(requiredSchema)
-
-  override def build(): Scan = inner.build()
 }

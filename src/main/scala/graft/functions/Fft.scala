@@ -192,6 +192,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // spark.graft.rangeJoin.bucketWidth > 0)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
     // per-request numeric constants bound by reference in generated code
-    ext.injectPlannerStrategy(graft.plans.ParamLiteralsStrategy(_))
+    ext.injectPlannerStrategy(_ => graft.plans.ParamLiteralsStrategy())
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -46,8 +46,8 @@ case class AsOfJoin(
 }
 
 /** Plans AsOfJoin to its physical exec. Registered per-session via
-  * `spark.experimental.extraStrategies` (see GraftPlans.ensureRegistered)
-  * or through SparkSessionExtensions. */
+  * `spark.experimental.extraStrategies` (`GraftPlans.asofMergeJoin` calls
+  * `Planner.register`) or through SparkSessionExtensions. */
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsOfJoin =>
@@ -190,13 +190,6 @@ case class AsOfJoinExec(
 /** Public API over the custom operator. */
 object GraftPlans {
 
-  /** Idempotently register the as-of strategy on this session. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = strategies :+ AsOfJoinStrategy
-  }
-
   /** Merge-based as-of join: for each left row, attach the right row with
     * the nearest `rightOn` among rows sharing the join keys. `rightTie`
     * breaks exact ties deterministically (numpy-first-minimum semantics).
@@ -207,7 +200,7 @@ object GraftPlans {
       leftOn: String, rightOn: String,
       rightTie: Seq[String] = Nil): DataFrame = {
     val spark = left.sparkSession
-    ensureRegistered(spark)
+    Planner.register(spark, strategies = Seq(AsOfJoinStrategy))
     val lPlan = left.queryExecution.analyzed
     val rPlan0 = right.queryExecution.analyzed
     // self-join lineage: if the sides share attribute ids (right derived

@@ -1,13 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryArithmetic, BinaryComparison, Expression, In, LeafExpression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, DataSourceV2Strategy}
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** A numeric constant that generated code reads from a field instead of
@@ -41,9 +39,9 @@ case class Param(value: Any, dataType: DataType) extends LeafExpression {
   * carries (the interactive `sig.slice(...)`, `channels(...)`, `at(...)`
   * and SQL `WHERE ... BETWEEN` traffic, where only the constants change).
   *
-  * Over a file relation the plan comes from Spark's own strategy —
-  * `FileSourceStrategy` for the DataFrame path, `DataSourceV2Strategy`
-  * for the catalog path — and only the `FilterExec`/`ProjectExec` above
+  * Over a file relation (the DataFrame path's, and the catalog path's
+  * after `graft.catalog.ShotScanRule`) the plan comes from Spark's own
+  * `FileSourceStrategy`, and only the `FilterExec`/`ProjectExec` above
   * the scan are rewritten: pushed data filters and partition filters keep
   * their `Literal`s, so Parquet row-group pushdown and shot pruning are
   * unchanged. Over any other leaf (cached, JDBC, local relations) it
@@ -54,18 +52,13 @@ case class Param(value: Any, dataType: DataType) extends LeafExpression {
   * `In` and arithmetic become `Param`s. Ordinals (`element_at`), scales
   * (`round`), `sequence` bounds, strings and nulls stay `Literal`: Spark
   * requires some of them to be foldable, and they rarely vary per request.
-  * Registered by `ParamLiterals.ensureRegistered` or through
-  * `graft.functions.GraftExtensions`. */
-case class ParamLiteralsStrategy(session: SparkSession) extends SparkStrategy {
-
-  private lazy val v2Strategy =
-    new DataSourceV2Strategy(session.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+  * Registered through `Planner.register` or `graft.functions.GraftExtensions`. */
+case class ParamLiteralsStrategy() extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case _: Filter | _: Project => leafBelow(plan) match {
       case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
         FileSourceStrategy(plan).map(bindAboveScan)
-      case _: DataSourceV2ScanRelation => v2Strategy(plan).map(bindAboveScan)
       case _: LeafNode => Nil
       case _ => bindAboveScan(plan match {
         case Filter(cond, child) => FilterExec(cond, planLater(child))
@@ -92,14 +85,6 @@ case class ParamLiteralsStrategy(session: SparkSession) extends SparkStrategy {
 }
 
 object ParamLiterals {
-
-  /** Idempotently add `ParamLiteralsStrategy` to this session's
-    * `spark.experimental.extraStrategies`. */
-  def ensureRegistered(spark: SparkSession): Unit = spark.experimental.synchronized {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.exists(_.isInstanceOf[ParamLiteralsStrategy]))
-      spark.experimental.extraStrategies = strategies :+ ParamLiteralsStrategy(spark)
-  }
 
   private def param(e: Expression): Expression = e match {
     case Literal(v, t @ (IntegerType | LongType | FloatType | DoubleType)) if v != null => Param(v, t)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -24,18 +23,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
   * pair satisfying `lo <= p <= hi` always shares the bucket
   * `floor(p/w)` in `[floor(lo/w), floor(hi/w)]`. Null bounds produce a
   * null bucket/empty sequence and match nothing, as in the original.
+  *
+  * Registered on an existing session with `Planner.register(spark, rules
+  * = Seq(RangeJoinRule))`, or through
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   val WidthConf = "spark.graft.rangeJoin.bucketWidth"
-
-  /** Register on an existing session (the extensions-config path is
-    * `spark.sql.extensions=graft.functions.GraftExtensions`). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.contains(RangeJoinRule))
-      spark.experimental.extraOptimizations = existing :+ RangeJoinRule
-  }
 
   private sealed trait Bound
   private case class Lower(p: Expression, bound: Expression) extends Bound

@@ -39,7 +39,7 @@ object Io {
 
   /** Resolve a signal's storage under a warehouse root. The PREFERRED
     * layout is the shot directory `<root>/<qualified_name>/` (hive dirs
-    * `shot=N/…`, written by `writeSignal`), which `shotDirs` addresses one
+    * `shot=N/…`, written by `writeSignal`), which `scan` addresses one
     * shot at a time. Falls back to the flat `<root>/<qualified_name>.parquet`
     * (a file, or a directory of any layout) when no such directory exists. */
   def signalPath(dataDir: String, qualifiedName: String): String =
@@ -78,15 +78,6 @@ object Io {
     * path `signalPath` resolves first. */
   def writeSignal(df: DataFrame, dataDir: String, qualifiedName: String): Unit =
     writePartitioned(df, signalDir(dataDir, qualifiedName), "shot")
-
-  /** The `<path>/shot=N` directories of `shots` that exist, in shot order,
-    * for a `path` in the shot-directory layout; `None` for the flat
-    * `*.parquet` fallback, which is read whole. Checks each directory on
-    * every call and lists nothing. */
-  def shotDirs(path: String, shots: Iterable[Int]): Option[Seq[String]] =
-    if (path.endsWith(".parquet")) None
-    else Some(shots.toSeq.distinct.sorted.map(n => s"$path/shot=$n")
-      .filter(isDirectory(SparkSession.active, _)))
 
   /** Inferred schema and the modification time of its path at inference:
     * the one footer-inference cache, shared by `Tables.load` and both
@@ -130,21 +121,31 @@ object Io {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema(spark, path)).parquet(path)
 
-  /** Rows of `shots` of the signal stored at `path` (see `signalPath`).
-    * In the shot-directory layout only the named shots' directories are
-    * listed and read, with `basePath = path` so `shot` stays a partition
-    * column; a shot with no directory contributes no rows. The flat
-    * fallback is read whole and filtered. */
+  /** Rows of `shots` of the signal stored at `path` (see `signalPath`):
+    * `scan` filtered to `shots`; a shot with no directory contributes no
+    * rows. */
   def readShots(spark: SparkSession, path: String, shots: Seq[Int]): DataFrame =
     readShots(spark, path, schema(spark, path), shots)
 
   /** `readShots` with the schema of `path` already in hand (`signal`). */
   private[graft] def readShots(spark: SparkSession, path: String, schema: StructType,
-      shots: Seq[Int]): DataFrame = {
+      shots: Seq[Int]): DataFrame =
+    scan(spark, path, schema, Some(shots)).where(col("shot").isin(shots: _*))
+
+  /** The unfiltered file relation of both signal read paths (SQL reaches
+    * it through `graft.catalog.ShotScanRule`). In the shot-directory
+    * layout it reads the `<path>/shot=N` directories of `shots` that
+    * exist, each checked on every call and none listed beforehand, with
+    * `basePath = path` so `shot` stays a partition column. With no
+    * `shots`, or for the flat `*.parquet` fallback, it reads all of `path`. */
+  private[graft] def scan(spark: SparkSession, path: String, schema: StructType,
+      shots: Option[Iterable[Int]]): DataFrame = {
     val read = spark.read.schema(schema)
-    val df = shotDirs(path, shots).fold(read.parquet(path))(dirs =>
-      read.option("basePath", path).parquet(dirs: _*))
-    df.where(col("shot").isin(shots: _*))
+    shots match {
+      case Some(ns) if !path.endsWith(".parquet") => read.option("basePath", path)
+        .parquet(ns.toSeq.distinct.sorted.map(n => s"$path/shot=$n").filter(isDirectory(spark, _)): _*)
+      case _ => read.parquet(path)
+    }
   }
 
   def writeCsv(df: DataFrame, path: String): Unit =

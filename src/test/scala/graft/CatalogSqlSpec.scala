@@ -2,18 +2,24 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import java.util.concurrent.{Callable, CountDownLatch, Executors}
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.api.Machine
-import graft.catalog.{GraftTableCatalog, SignalCatalog}
+import graft.catalog.{GraftTableCatalog, ShotScanRule, SignalCatalog}
+import graft.plans.ParamLiteralsStrategy
 import graft.sources.Io
 
 /** SQL-surface catalog (SURVEY §2.1 S5/S6 at the SQL layer): XML-declared
   * signals resolve as `SELECT … FROM graft.<container>.<signal>` through a
-  * DSv2 TableCatalog, with shot-partition pruning in the plan — the SQL
-  * twin of the reference's attribute-chain factory addressing. */
+  * DSv2 `TableCatalog`, and plan the same V1 file scan as
+  * `Machine.shot(n).signal`, with shot-partition pruning — the SQL twin
+  * of the reference's attribute-chain factory addressing. */
 class CatalogSqlSpec extends SparkSpec {
 
   private lazy val warehouse = {
@@ -66,16 +72,16 @@ class CatalogSqlSpec extends SparkSpec {
     warehouse
     val df = spark.sql("SELECT time, value FROM graft.mpts.te WHERE shot = 1")
     val scans = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.scan
+      case f: FileSourceScanExec => f
     }
-    assert(scans.nonEmpty, "expected a DSv2 BatchScan")
-    val fs = scans.head.asInstanceOf[FileScan]
+    assert(scans.nonEmpty, "expected a V1 FileSourceScanExec")
+    val fs = scans.head
     // the shot=1 predicate must land in partitionFilters (directory
     // pruning), not survive as a post-scan filter on data
     assert(fs.partitionFilters.map(_.sql).exists(_.contains("shot")),
       s"shot filter not pushed to partition pruning: ${fs.partitionFilters}")
     // and the pruned scan reads exactly the one shot directory (of 3)
-    assert(fs.fileIndex.listFiles(fs.partitionFilters, fs.dataFilters).size === 1)
+    assert(fs.relation.location.listFiles(fs.partitionFilters, fs.dataFilters).size === 1)
   }
 
   private def teRows(shots: Seq[Int]) = for {
@@ -221,6 +227,94 @@ class CatalogSqlSpec extends SparkSpec {
     val shot2 = Seq(canonPath(s"$local/mpts_te/shot=2"))
     assert(scanRoots(viaApi) === shot2)
     assert(scanRoots(viaSql) === shot2)
+  }
+
+  private def machineOver(dir: String) =
+    Machine(spark, SignalCatalog(SignalCatalog.fromFile(s"$warehouse/machine.xml")
+      .signals.map(s => s.copy(qualifiedName = s.qualifiedName.stripPrefix("root.")))), dir)
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Runs `df`, then returns each file scan of its executed plan as its
+    * canonical root paths, partition filters (expression ids removed) and
+    * pushed filters, after checking that every scan is a V1 file scan. */
+  private def fileScans(df: DataFrame): Seq[(Seq[String], String, String)] = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(Aqe.collect(plan) { case b: BatchScanExec => b }.isEmpty, plan)
+    val scans = Aqe.collect(plan) { case f: FileSourceScanExec => f }
+    assert(scans.nonEmpty, plan)
+    scans.map(f => (f.relation.location.rootPaths.map(p => new java.io.File(p.toUri).getCanonicalPath),
+      f.metadata("PartitionFilters").replaceAll("#\\d+", ""), f.metadata("PushedFilters")))
+  }
+
+  private def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
+  test("Machine and SQL plan the same V1 file scan for the same request") {
+    val dir = dirWarehouse
+    val m = machineOver(dir)
+    val shots = Seq(1, 3) ++ (11 to 30)
+    val flat = machineOver(warehouse)
+    val pairs = Seq(
+      "time slice" -> (m.shot(2).signal("mpts.te").slice("time", 0.2, 0.5).df,
+        "SELECT * FROM graftdir.mpts.te WHERE shot = 2 AND time BETWEEN 0.2 AND 0.5"),
+      "channel filter" -> (m.shot(1).signal("bes.ch").channels(Seq(2, 4)).df,
+        "SELECT * FROM graftdir.bes.ch WHERE shot = 1 AND channel IN (2, 4)"),
+      "shot IN, 22 values" -> (Io.readShots(spark, Io.signalPath(dir, "mpts.te"), shots),
+        s"SELECT * FROM graftdir.mpts.te WHERE shot IN (${shots.mkString(", ")})"),
+      "join and aggregate" -> {
+        val te = m.shot(1).signal("mpts.te").df
+        val ch = m.shot(1).signal("bes.ch").df
+        (te.join(ch, te("time") === ch("time")).groupBy(te("radius"))
+          .agg(count(lit(1)).as("n"), sum(ch("value")).as("v")),
+          """SELECT t.radius, count(1) AS n, sum(c.value) AS v
+             FROM graftdir.mpts.te t JOIN graftdir.bes.ch c ON t.time = c.time
+             WHERE t.shot = 1 AND c.shot = 1 GROUP BY t.radius""")
+      },
+      "flat .parquet fallback" -> (flat.shot(1).signal("bes.ch").channels(Seq(2, 4)).df,
+        "SELECT * FROM graft.bes.ch WHERE shot = 1 AND channel IN (2, 4)"))
+    for ((name, (viaApi, sql)) <- pairs) {
+      val viaSql = spark.sql(sql)
+      val api = fileScans(viaApi)
+      assert(fileScans(viaSql) === api, name)
+      // every scan is addressed: roots, and `shot` among its filters
+      assert(api.forall(s => s._1.nonEmpty && (s._2 + s._3).contains("shot")), s"$name: $api")
+      assert(rowsOf(viaSql) === rowsOf(viaApi), name)
+      assert(rowsOf(viaSql).nonEmpty, name)
+    }
+    // no filter at all: one V1 scan over the whole signal directory
+    val all = spark.sql("SELECT * FROM graftdir.bes.ch")
+    assert(fileScans(all).map(_._1) === Seq(Seq(canonPath(s"$dir/bes_ch"))))
+    assert(all.count() === chRows(Seq(1, 2)).length)
+  }
+
+  test("a fresh session's first SQL queries, from two threads at once, plan the V1 scan") {
+    val dir = dirWarehouse
+    val s = spark.newSession()
+    Seq("" -> classOf[GraftTableCatalog].getName, ".xml" -> s"$warehouse/machine.xml",
+      ".dataDir" -> dir, ".stripPrefix" -> "root")
+      .foreach { case (k, v) => s.conf.set(s"spark.sql.catalog.graftthreads$k", v) }
+    assert(!s.experimental.extraOptimizations.contains(ShotScanRule))
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val runs = Seq(1, 2).map(n => n -> pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = {
+          start.await()
+          val df = s.sql(s"SELECT * FROM graftthreads.mpts.te WHERE shot = $n")
+          df.collect()
+          df
+        }
+      }))
+      start.countDown()
+      for ((n, run) <- runs) {
+        val df = run.get()
+        assert(teOf(df).toSet === teRows(Seq(n)).toSet)
+        assert(fileScans(df).map(_._1) === Seq(Seq(canonPath(s"$dir/mpts_te/shot=$n"))))
+      }
+    } finally pool.shutdown()
+    assert(s.experimental.extraOptimizations.count(_ == ShotScanRule) === 1)
+    assert(s.experimental.extraStrategies.count(_.isInstanceOf[ParamLiteralsStrategy]) === 1)
   }
 
   test("XML-declared units ride through the SQL path as column metadata") {

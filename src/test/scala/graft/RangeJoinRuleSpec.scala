@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.RangeJoinRule
+import graft.plans.{Planner, RangeJoinRule}
 
 /** The optimizer-level range-join rewrite: with a bucket width configured,
   * a pure inequality join must plan as a hash join (bucket equality
@@ -23,7 +23,7 @@ class RangeJoinRuleSpec extends SparkSpec {
     val expected = pts.join(iv, $"p" >= $"lo" && $"p" <= $"hi")
       .select("pid", "iid").as[(Long, Long)].collect().toSet
 
-    RangeJoinRule.ensureRegistered(spark)
+    Planner.register(spark, rules = Seq(RangeJoinRule))
     spark.conf.set(RangeJoinRule.WidthConf, "4.0")
     try {
       val joined = pts.join(iv, $"p" >= $"lo" && $"p" <= $"hi")
@@ -38,7 +38,7 @@ class RangeJoinRuleSpec extends SparkSpec {
   test("rewrite handles flipped comparisons and strict bounds") {
     import spark.implicits._
     val (pts, iv) = fixtures
-    RangeJoinRule.ensureRegistered(spark)
+    Planner.register(spark, rules = Seq(RangeJoinRule))
     spark.conf.set(RangeJoinRule.WidthConf, "2.5")
     try {
       val joined = pts.join(iv, $"lo" <= $"p" && $"p" < $"hi")
@@ -53,7 +53,7 @@ class RangeJoinRuleSpec extends SparkSpec {
   test("equi-joins and non-bracket joins are left untouched") {
     import spark.implicits._
     val (pts, iv) = fixtures
-    RangeJoinRule.ensureRegistered(spark)
+    Planner.register(spark, rules = Seq(RangeJoinRule))
     spark.conf.set(RangeJoinRule.WidthConf, "4.0")
     try {
       // equality conjunct present -> no rewrite (no __graft_bucket in plan)
