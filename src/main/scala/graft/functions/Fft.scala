@@ -134,14 +134,6 @@ object Fft {
   def powerSpectrum(c: Column): Column =
     org.apache.spark.sql.functions.transform(fft(c), x =>
       x.getField("re") * x.getField("re") + x.getField("im") * x.getField("im"))
-
-  private def info = new ExpressionInfo(classOf[FftExpr].getName, "graft_fft")
-
-  /** Register `graft_fft` on an existing session (tests / REPL). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_fft"), info,
-      (exprs: Seq[Expression]) => FftExpr(exprs.head))
 }
 
 /** SparkSessionExtensions entry point: wire with
@@ -149,49 +141,44 @@ object Fft {
   * The injection point for future custom rules/strategies as well. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_fft"),
-      new ExpressionInfo(classOf[FftExpr].getName, "graft_fft"),
-      (exprs: Seq[Expression]) => FftExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotExpr].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotExpr(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_norm"),
-      new ExpressionInfo(classOf[NormExpr].getName, "graft_norm"),
-      (exprs: Seq[Expression]) => NormExpr(exprs.head)))
-    // text-hash kernels for the SQL surface; integer args must be literals
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[TextHash.ShinglesExpr].getName, "graft_shingles"),
-      (exprs: Seq[Expression]) =>
-        TextHash.ShinglesExpr(exprs.head, TextHash.litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[TextHash.MinHashExpr].getName, "graft_minhash"),
-      (exprs: Seq[Expression]) =>
-        TextHash.MinHashExpr(exprs.head, TextHash.litInt(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[TextHash.SimHashExpr].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => TextHash.SimHashExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[TextHash.FingerprintExpr].getName, "graft_fingerprint"),
-      (exprs: Seq[Expression]) => TextHash.FingerprintExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_intersect_count"),
-      new ExpressionInfo(classOf[TextHash.IntersectCountExpr].getName, "graft_intersect_count"),
-      (exprs: Seq[Expression]) => TextHash.IntersectCountExpr(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_word_starts"),
-      new ExpressionInfo(classOf[TextHash.WordStartsExpr].getName, "graft_word_starts"),
-      (exprs: Seq[Expression]) => TextHash.WordStartsExpr(exprs.head)))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // bucketed range-join rewrite (active only when
     // spark.graft.rangeJoin.bucketWidth > 0)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
     // per-request numeric constants bound by reference in generated code
     ext.injectPlannerStrategy(_ => graft.plans.ParamLiteralsStrategy())
   }
+}
+
+object GraftExtensions {
+
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Every SQL function graft adds: its name, its description and the
+    * builder from argument expressions. Integer arguments of the
+    * text-hash kernels must be literals. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("graft_fft", classOf[FftExpr])(e => FftExpr(e.head)),
+    fn("graft_dot", classOf[DotExpr])(e => DotExpr(e.head, e(1))),
+    fn("graft_norm", classOf[NormExpr])(e => NormExpr(e.head)),
+    fn("graft_shingles", classOf[TextHash.ShinglesExpr])(e =>
+      TextHash.ShinglesExpr(e.head, TextHash.litInt(e(1)))),
+    fn("graft_minhash", classOf[TextHash.MinHashExpr])(e =>
+      TextHash.MinHashExpr(e.head, TextHash.litInt(e(1)))),
+    fn("graft_simhash", classOf[TextHash.SimHashExpr])(e => TextHash.SimHashExpr(e.head)),
+    fn("graft_fingerprint", classOf[TextHash.FingerprintExpr])(e =>
+      TextHash.FingerprintExpr(e.head)),
+    fn("graft_intersect_count", classOf[TextHash.IntersectCountExpr])(e =>
+      TextHash.IntersectCountExpr(e.head, e(1))),
+    fn("graft_word_starts", classOf[TextHash.WordStartsExpr])(e =>
+      TextHash.WordStartsExpr(e.head)))
+
+  /** Register [[functions]] on an existing session (tests / REPL; a new
+    * session gets them from the extension class). */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }

@@ -595,46 +595,10 @@ object TextHash {
   def fingerprint(toks: Column): Column =
     ColumnBridge.column(FingerprintExpr(ColumnBridge.expression(toks)))
 
-  /** Literal-int extraction for SQL function builders (shared by
-    * register() and GraftExtensions — one canonical implementation). */
+  /** Literal-int extraction for the SQL function builders
+    * (`GraftExtensions.functions`). */
   def litInt(e: Expression): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(s"expected literal int, got $other")
-  }
-
-  /** Register the kernels on an existing session (tests / REPL — the
-    * config-file path is GraftExtensions). Integer args must be literal. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingles"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ShinglesExpr].getName, "graft_shingles"),
-      (exprs: Seq[Expression]) => ShinglesExpr(exprs.head, litInt(exprs(1))))
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHashExpr].getName, "graft_minhash"),
-      (exprs: Seq[Expression]) => MinHashExpr(exprs.head, litInt(exprs(1))))
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_simhash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SimHashExpr].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimHashExpr(exprs.head))
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_fingerprint"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FingerprintExpr].getName, "graft_fingerprint"),
-      (exprs: Seq[Expression]) => FingerprintExpr(exprs.head))
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_intersect_count"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[IntersectCountExpr].getName, "graft_intersect_count"),
-      (exprs: Seq[Expression]) => IntersectCountExpr(exprs.head, exprs(1)))
-    reg.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_word_starts"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[WordStartsExpr].getName, "graft_word_starts"),
-      (exprs: Seq[Expression]) => WordStartsExpr(exprs.head))
   }
 }

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage-truncation with a durability knob.
@@ -25,9 +25,9 @@ import org.apache.spark.storage.StorageLevel
   * to the named fault-tolerant store (HDFS/S3/local dir), surviving any
   * executor death; a preempted 50-round CC job resumes from materialized
   * state instead of aborting. The knob is a session conf so one pipeline
-  * can run durable while another stays fast; loop clones created via
-  * `newSession()` do NOT inherit runtime confs, so every clone site calls
-  * [[propagate]] explicitly.
+  * can run durable while another stays fast. Runtime confs do not cross
+  * to a cloned session, so [[Loop.run]] copies the knob onto the clone
+  * its loop runs on.
   *
   * Durable mode costs: the checkpoint write is its own job, run by the
   * scheduler right after the action that materializes the frame. Without
@@ -106,13 +106,6 @@ object Ckpt {
       if (prev == null) collector.remove() else collector.set(prev)
     }
   }
-
-  /** Copy the durability knob from a caller session onto a loop clone
-    * (`newSession()` starts from the base conf, dropping runtime-set
-    * values — without this the clone would silently fall back to
-    * localCheckpoint and the knob would only "work" on non-cloned paths). */
-  def propagate(from: SparkSession, to: SparkSession): Unit =
-    from.conf.getOption(DirConf).foreach(to.conf.set(DirConf, _))
 
   /** Truncate `df`'s lineage: reliable `checkpoint()` when
     * `spark.graft.checkpointDir` is set, `localCheckpoint()` otherwise. */

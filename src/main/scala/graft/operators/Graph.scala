@@ -27,28 +27,15 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** Shuffle width for the iterative graph loops (CC, PageRank, HITS,
-    * k-core): `spark.graft.cc.partitions` when set — read on the CALLER
-    * session, because runtime confs do not cross the `newSession()`
-    * clone the loops run on — else max(8, cores/4): the loops move
-    * kilobytes per task at toy scale and are driver-latency-bound, so a
-    * narrow fixed width beats the session default; at cluster scale set
-    * the knob to O(cores). ScaleSmoke's `ccparts` axis measures the
-    * width/data-size crossover. */
-  private def ccLoopParts(caller: SparkSession): Int =
-    caller.conf.getOption("spark.graft.cc.partitions")
-      .map(_.toInt)
-      .getOrElse(math.max(8, caller.sparkContext.defaultParallelism / 4))
-
   /** Connected components of an undirected edge list.
     *
-    * Hybrid execution (the [[kCoreOn]] localCutoff discipline): the
-    * oriented, deduped edge set is counted once; at or under
-    * `spark.graft.cc.localCutoff` (default 4M edges ≈ 64 MB) the whole
-    * problem runs as a single-task union-find — bit-identical labels,
-    * one job instead of ~5 fixpoint rounds of fixed scheduler latency —
-    * and above it the distributed min-label/pointer-jump loop runs
-    * unchanged (the only path that can bind at 100 TB).
+    * Hybrid execution (the [[kCoreOn]] discipline): the oriented, deduped
+    * edge set is counted once; when it fits one task
+    * ([[Loop.CutoffConf]], default 4M edges ≈ 64 MB) the whole problem
+    * runs as a single-task union-find — bit-identical labels, one job
+    * instead of ~5 fixpoint rounds of fixed scheduler latency — and above
+    * it the distributed min-label/pointer-jump loop runs unchanged (the
+    * only path that can bind at 100 TB).
     *
     * @param edges two integral columns, one row per edge (direction
     *              ignored, self-loops and duplicates fine)
@@ -56,44 +43,10 @@ object Graph {
     *              keep their own id as component)
     * @return (node, component) with component = min node id reachable
     */
-  /** Edge-count bound under which [[connectedComponents]] runs its
-    * single-task union-find tail instead of the distributed fixpoint —
-    * `spark.graft.cc.localCutoff` on the caller session, default 4M
-    * oriented edges (≈ 64 MB of (long, long) rows, the [[kCoreOn]]
-    * `localCutoff` rationale: one task peels/unions that in
-    * milliseconds, while every distributed round costs a fixed
-    * scheduler latency that dwarfs the data at that size). */
-  private def ccLocalCutoff(caller: SparkSession): Long =
-    caller.conf.getOption("spark.graft.cc.localCutoff")
-      .map(_.toLong).getOrElse(4L << 20)
-
   def connectedComponents(edges: DataFrame, nodes: DataFrame,
-      maxRounds: Int = 50): DataFrame = {
-    val caller = edges.sparkSession
-    // the loop wants its own SQL conf (AQE off, narrow shuffles — its
-    // stages move kilobytes and AQE's per-stage re-planning barrier is
-    // pure driver latency at that size). Mutating the session conf would
-    // race with concurrently planned queries on a shared session (Verify
-    // runs a thread pool), so the loop runs on a CLONED session instead:
-    // same SparkContext, shared cache manager, isolated conf. Input and
-    // output plans are re-bound across sessions via DatasetBridge.
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    val e = rebind(edges, spark).toDF("src", "dst")
-    // loop width: the label/edge shuffles move kilobytes per task at toy
-    // scale and the loop is driver-latency-bound, so a narrow fixed width
-    // beats the session default; at cluster scale set spark.graft.cc
-    // .partitions to O(cores). Everything in the loop (cached sym, every
-    // shuffle) uses this ONE width so partitionings line up and reuse.
-    // Read on the CALLER: runtime confs don't cross newSession, so
-    // reading the clone would silently ignore the user's knob (the
-    // trianglesOn discipline; ScaleSmoke's ccparts axis measures it).
-    val loopParts = ccLoopParts(caller)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+      maxRounds: Int = 50): DataFrame = Loop.run(edges.sparkSession) { loop =>
+    import loop.spark.implicits._
+    val e = loop.on(edges).toDF("src", "dst")
     // canonical oriented edge set, deduped ONCE (half the dedup input of
     // the old both-directions distinct; self-loops carry no label
     // information and are dropped — a self-loop-only node labels itself
@@ -110,121 +63,118 @@ object Graph {
       .where($"u" =!= $"v" && $"u".isNotNull && $"v".isNotNull)
       .distinct(), eager = false)
     val m = oriented.count()
-    if (m <= ccLocalCutoff(caller)) {
+    val labels = if (loop.fitsOneTask(m)) {
       // union-by-min with path compression: the root of every tree is the
       // component's min node id, which is exactly the fixpoint label the
       // distributed loop converges to — bit-identical output, one job.
       // comp must come back in the label type the distributed branch
       // produces: the common type of (src, dst) = oriented's u column
       val nodeType = oriented.schema.fields(0).dataType
-      val labels = oriented
+      oriented
         .select($"u".cast("long"), $"v".cast("long")).as[(Long, Long)]
         .coalesce(1) // one task reading the checkpoint blocks, no shuffle
         .mapPartitions(it => localUnionFind(it))
         .toDF("node", "comp")
         .select($"node".cast(nodeType).as("node"),
           $"comp".cast(nodeType).as("comp"))
-      val out = rebind(nodes, spark).toDF("node").distinct()
-        .join(labels.withColumnRenamed("comp", "__c"), Seq("node"), "left")
-        .select($"node", coalesce($"__c", $"node").as("comp"))
-      return rebind(out, caller)
+    } else {
+      // symmetric closure once, so each round is a single join direction;
+      // pre-partitioned by dst (the loop's join key) so every round's edge
+      // join reuses the cached partitioning instead of re-exchanging the
+      // edge table — labels are the only relation that moves per round.
+      // Everything in the loop uses the ONE loop width so partitionings
+      // line up and reuse.
+      val sym = oriented
+        .select($"u".as("src"), $"v".as("dst"))
+        .union(oriented.select($"v".as("src"), $"u".as("dst")))
+        .repartition(loop.parts, $"dst")
+        .cache()
+      // checkpoint (not cache) per round: caching alone leaves each
+      // round's LOGICAL plan nested inside the next — the analyzer re-walks
+      // a plan that doubles per iteration and the driver heap dies long
+      // before the data does; checkpointing truncates the lineage so every
+      // round optimizes a constant-size plan. Ckpt routes to executor-local
+      // blocks by default, or to the reliable store when
+      // spark.graft.checkpointDir is set (preemption-safe long loops). Only
+      // edge-incident nodes iterate; isolated nodes are their own component
+      // by definition and join back in at the end.
+      val touched = sym.select($"src".as("node")).distinct()
+      var cur = Ckpt(touched
+        .select($"node", $"node".as("comp")))
+      // convergence probe: labels only ever decrease, so ANY change strictly
+      // decreases sum(comp) — one agg action per round materializes the
+      // (lazy) checkpoint AND answers "did anything move", with no second
+      // join-and-count job
+      var prevSum = BigDecimal(-1)
+      var round = 0
+      var converged = false
+      try {
+      while (!converged && round < maxRounds) {
+        // min label over the closed neighborhood (own label U neighbors'),
+        // applied TWICE per round: convergence is gated by edge-hop
+        // propagation (a min label travels one hop per application), so two
+        // applications halve the round count — measured 9 -> 5 rounds at
+        // sf0.1 — while living in the SAME job (the loop is scheduling-
+        // latency-bound: every stage is milliseconds of data, an extra
+        // round costs ~0.5 s of latency). Each step checkpoints LAZILY so
+        // (a) the plan the next step/round sees is a leaf (a plan reused on
+        // both sides of a join trips Catalyst's union-constraint attribute
+        // dedup) and (b) nothing materializes before the round's single
+        // convergence-sum action.
+        def nbhdMin(l: DataFrame): DataFrame = Ckpt(l
+          .union(sym
+            .join(l.withColumnRenamed("node", "dst"), "dst")
+            .select($"src".as("node"), $"comp"))
+          .groupBy($"node").agg(min($"comp").as("comp")), eager = false)
+        val step1 = nbhdMin(cur.select($"node", $"comp"))
+        val nbrMin = nbhdMin(step1)
+        // pointer jump (path halving): follow the label's own label —
+        // shortcuts label chains on top of the edge propagation. Every
+        // label IS a node id (labels are minima over node ids), so the
+        // self-join is total; label monotonicity keeps it exact.
+        val next = Ckpt(nbrMin.as("x")
+          .join(nbrMin.select($"node".as("comp"), $"comp".as("comp2")).as("m"), "comp")
+          .select($"node", $"comp2".as("comp")), eager = false)
+        // per-row decimal BEFORE the sum (a long sum could overflow first —
+        // 1e9+ nodes with wide ids exceed Long.MaxValue); coalesce covers
+        // the empty-graph case (sum over zero rows is null)
+        val s = BigDecimal(
+          next.agg(coalesce(sum($"comp".cast("decimal(38,0)")),
+            lit(0).cast("decimal(38,0)"))).head.getDecimal(0))
+        // previous rounds' checkpointed storage is dead once `next` has
+        // materialized — release it, or every run pins rounds x |nodes|
+        // label rows in block storage (and, in durable mode, rounds x
+        // |labels| dead files on the reliable store) for the app lifetime.
+        // Ckpt.release frees blocks, the pre-checkpoint cache, AND the
+        // checkpoint files — Dataset.unpersist alone touches none of the
+        // durable state.
+        Ckpt.release(cur)
+        Ckpt.release(step1)
+        Ckpt.release(nbrMin)
+        cur = next
+        converged = s == prevSum
+        prevSum = s
+        round += 1
+      }
+      } finally {
+        // the cached edge closure must not outlive the loop on ANY exit
+        // path (normal, the non-convergence throw below, or a failure
+        // inside the loop); the oriented checkpoint's only consumer is sym
+        sym.unpersist()
+        Ckpt.release(oriented)
+      }
+      // exiting via the cap means the labels are NOT a fixed point — wrong
+      // components with no other signal. Practically unreachable with path
+      // halving (O(log d) rounds), so make it loud rather than silent.
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxRounds rounds; " +
+            "labels are not a fixed point (raise maxRounds)")
+      cur
     }
-    // symmetric closure once, so each round is a single join direction;
-    // pre-partitioned by dst (the loop's join key) so every round's edge
-    // join reuses the cached partitioning instead of re-exchanging the
-    // edge table — labels are the only relation that moves per round
-    val sym = oriented
-      .select($"u".as("src"), $"v".as("dst"))
-      .union(oriented.select($"v".as("src"), $"u".as("dst")))
-      .repartition(loopParts, $"dst")
-      .cache()
-    // checkpoint (not cache) per round: caching alone leaves each
-    // round's LOGICAL plan nested inside the next — the analyzer re-walks
-    // a plan that doubles per iteration and the driver heap dies long
-    // before the data does; checkpointing truncates the lineage so every
-    // round optimizes a constant-size plan. Ckpt routes to executor-local
-    // blocks by default, or to the reliable store when
-    // spark.graft.checkpointDir is set (preemption-safe long loops). Only
-    // edge-incident nodes iterate; isolated nodes are their own component
-    // by definition and join back in at the end.
-    val touched = sym.select($"src".as("node")).distinct()
-    var labels = Ckpt(touched
-      .select($"node", $"node".as("comp")))
-    // convergence probe: labels only ever decrease, so ANY change strictly
-    // decreases sum(comp) — one agg action per round materializes the
-    // (lazy) checkpoint AND answers "did anything move", with no second
-    // join-and-count job
-    var prevSum = BigDecimal(-1)
-    var round = 0
-    var converged = false
-    try {
-    while (!converged && round < maxRounds) {
-      // min label over the closed neighborhood (own label U neighbors'),
-      // applied TWICE per round: convergence is gated by edge-hop
-      // propagation (a min label travels one hop per application), so two
-      // applications halve the round count — measured 9 -> 5 rounds at
-      // sf0.1 — while living in the SAME job (the loop is scheduling-
-      // latency-bound: every stage is milliseconds of data, an extra
-      // round costs ~0.5 s of latency). Each step checkpoints LAZILY so
-      // (a) the plan the next step/round sees is a leaf (a plan reused on
-      // both sides of a join trips Catalyst's union-constraint attribute
-      // dedup) and (b) nothing materializes before the round's single
-      // convergence-sum action.
-      def nbhdMin(l: DataFrame): DataFrame = Ckpt(l
-        .union(sym
-          .join(l.withColumnRenamed("node", "dst"), "dst")
-          .select($"src".as("node"), $"comp"))
-        .groupBy($"node").agg(min($"comp").as("comp")), eager = false)
-      val step1 = nbhdMin(labels.select($"node", $"comp"))
-      val nbrMin = nbhdMin(step1)
-      // pointer jump (path halving): follow the label's own label —
-      // shortcuts label chains on top of the edge propagation. Every
-      // label IS a node id (labels are minima over node ids), so the
-      // self-join is total; label monotonicity keeps it exact.
-      val next = Ckpt(nbrMin.as("x")
-        .join(nbrMin.select($"node".as("comp"), $"comp".as("comp2")).as("m"), "comp")
-        .select($"node", $"comp2".as("comp")), eager = false)
-      // per-row decimal BEFORE the sum (a long sum could overflow first —
-      // 1e9+ nodes with wide ids exceed Long.MaxValue); coalesce covers
-      // the empty-graph case (sum over zero rows is null)
-      val s = BigDecimal(
-        next.agg(coalesce(sum($"comp".cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)"))).head.getDecimal(0))
-      // previous rounds' checkpointed storage is dead once `next` has
-      // materialized — release it, or every run pins rounds x |nodes|
-      // label rows in block storage (and, in durable mode, rounds x
-      // |labels| dead files on the reliable store) for the app lifetime.
-      // Ckpt.release frees blocks, the pre-checkpoint cache, AND the
-      // checkpoint files — Dataset.unpersist alone touches none of the
-      // durable state.
-      Ckpt.release(labels)
-      Ckpt.release(step1)
-      Ckpt.release(nbrMin)
-      labels = next
-      converged = s == prevSum
-      prevSum = s
-      round += 1
-    }
-    } finally {
-      // the cached edge closure must not outlive the loop on ANY exit
-      // path (normal, the non-convergence throw below, or a failure
-      // inside the loop); the oriented checkpoint's only consumer is sym
-      sym.unpersist()
-      Ckpt.release(oriented)
-    }
-    // exiting via the cap means the labels are NOT a fixed point — wrong
-    // components with no other signal. Practically unreachable with path
-    // halving (O(log d) rounds), so make it loud rather than silent.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds; " +
-          "labels are not a fixed point (raise maxRounds)")
-    val out = rebind(nodes, spark).toDF("node").distinct()
+    loop.on(nodes).toDF("node").distinct()
       .join(labels.withColumnRenamed("comp", "__c"), Seq("node"), "left")
       .select($"node", coalesce($"__c", $"node").as("comp"))
-    // hand the result back on the CALLER's session: downstream planning
-    // must see the caller's confs, not the loop clone's
-    rebind(out, caller)
   }
 
   /** Single-task connected components of an oriented (u, v) edge
@@ -279,17 +229,9 @@ object Graph {
     * on the testdata pair graphs; ScaleSmoke's `starcc` axis measures the
     * round/wall crossover on a diameter-heavy chain graph. */
   def connectedComponentsStar(edges: DataFrame, nodes: DataFrame,
-      maxRounds: Int = 50): DataFrame = {
-    val caller = edges.sparkSession
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    val loopParts = ccLoopParts(caller)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    val e0 = rebind(edges, spark).toDF("src", "dst")
+      maxRounds: Int = 50): DataFrame = Loop.run(edges.sparkSession) { loop =>
+    import loop.spark.implicits._
+    val e0 = loop.on(edges).toDF("src", "dst")
     // state: directed (u, v) with v < u — "u points down to v"
     var cur = Ckpt(e0
       .select(greatest($"src", $"dst").as("u"), least($"src", $"dst").as("v"))
@@ -342,10 +284,9 @@ object Graph {
     }
     // at the star fixpoint every edge is (child, root); roots and
     // isolated nodes label themselves
-    val out = rebind(nodes, spark).toDF("node").distinct()
+    loop.on(nodes).toDF("node").distinct()
       .join(cur.select($"u".as("node"), $"v".as("__c")), Seq("node"), "left")
       .select($"node", coalesce($"__c", $"node").as("comp"))
-    rebind(out, caller)
   }
 
   /** Pipeline-reuse form of q62: clusters from PRECOMPUTED near-dup pairs
@@ -478,72 +419,57 @@ object Graph {
     * the materialized relation instead of re-running the simhash
     * pipeline per round. Each round is one hash join (ranks ⋈ edges on
     * src — ranks is |V|-sized, edges pre-shuffled) plus one partial-
-    * agged sum by dst. Rank state never exceeds one row per node. For
-    * web-scale graphs the loop would adopt q62's machinery (AQE-off
-    * cloned session, pointer-state checkpoint cadence); five rounds on
-    * a near-dup graph doesn't need it. */
+    * agged sum by dst. Rank state never exceeds one row per node. */
   def pageRank(spark: SparkSession, dir: String): DataFrame =
     pageRankOn(Dedup.simhashPairs(spark, dir).select(
       col("doc_a"), col("doc_b")))
 
   /** Testable core over any undirected `(doc_a, doc_b)` pair relation.
     *
-    * The five rounds run AQE-off on a CLONED session (q62's loop
-    * discipline: the round stages move kilobytes, and AQE's per-stage
-    * re-plan barrier is pure driver latency at that size; a shared-
-    * session conf mutation would race Verify's concurrent planning).
-    * Unlike CC there is no convergence probe, so the rounds need NO
-    * per-round action or checkpoint: the whole recurrence is ONE lazy
-    * plan over the once-materialized edge relation, executed as a
-    * single job — fixed 5-round unrolling is what makes that safe
-    * (plan depth is constant, not data-dependent). */
-  private[graft] def pageRankOn(pairs0: DataFrame): DataFrame = {
-    val caller = pairs0.sparkSession
-    // knob read on the CALLER (runtime confs don't cross newSession)
-    val loopParts = ccLoopParts(caller)
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // materialize the PAIR relation once: the hybrid-size probe and the
-    // symmetrizing union both read it (the union's two branches would
-    // otherwise each re-run the upstream pair pipeline)
-    val pairs = Ckpt(rebind(pairs0, spark).toDF("doc_a", "doc_b"),
-      eager = false)
-    val m = pairs.count()
-    if (m <= ccLocalCutoff(caller)) {
-      // the connectedComponents hybrid discipline: the five integer
-      // rounds on a bounded pair relation are pure scheduler latency
-      // distributed — run them in one task, identical arithmetic
-      val nodeType = pairs.schema.fields(0).dataType
-      val out = pairs.select($"doc_a".cast("long"), $"doc_b".cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => localPageRank(it))
-        .toDF("doc_id", "rank_q")
-        .select($"doc_id".cast(nodeType).as("doc_id"), $"rank_q")
-      return rebind(out, caller)
+    * The five rounds run on a [[Loop]] session. Unlike CC there is no
+    * convergence probe, so the rounds need NO per-round action or
+    * checkpoint: the whole recurrence is ONE lazy plan over the
+    * once-materialized edge relation, executed as a single job — fixed
+    * 5-round unrolling is what makes that safe (plan depth is constant,
+    * not data-dependent). */
+  private[graft] def pageRankOn(pairs0: DataFrame): DataFrame =
+    Loop.run(pairs0.sparkSession) { loop =>
+      import loop.spark.implicits._
+      // materialize the PAIR relation once: the hybrid-size probe and the
+      // symmetrizing union both read it (the union's two branches would
+      // otherwise each re-run the upstream pair pipeline)
+      val pairs = Ckpt(loop.on(pairs0).toDF("doc_a", "doc_b"), eager = false)
+      val m = pairs.count()
+      if (loop.fitsOneTask(m)) {
+        // the connectedComponents hybrid discipline: the five integer
+        // rounds on a bounded pair relation are pure scheduler latency
+        // distributed — run them in one task, identical arithmetic
+        val nodeType = pairs.schema.fields(0).dataType
+        pairs.select($"doc_a".cast("long"), $"doc_b".cast("long"))
+          .as[(Long, Long)].coalesce(1)
+          .mapPartitions(it => localPageRank(it))
+          .toDF("doc_id", "rank_q")
+          .select($"doc_id".cast(nodeType).as("doc_id"), $"rank_q")
+      } else {
+        val edges = Ckpt(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
+          .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))),
+          eager = false)
+        val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
+        // pre-partitioned on the per-round join key so the five rank joins
+        // reuse one exchange of the edge relation
+        val withDeg = Ckpt(edges.join(deg, "src").repartition(loop.parts, $"src"),
+          eager = false)
+        var ranks = deg.select($"src".as("node"), lit(1000000L).as("r"))
+        for (_ <- 1 to 5) {
+          ranks = withDeg.join(ranks, $"node" === $"src")
+            .select($"dst", expr("r div deg").as("contrib"))
+            .groupBy($"dst").agg(sum($"contrib").as("s"))
+            .select($"dst".as("node"),
+              expr("150000 + (85 * s) div 100").as("r"))
+        }
+        ranks.select($"node".as("doc_id"), $"r".as("rank_q"))
+      }
     }
-    val edges = Ckpt(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))),
-      eager = false)
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    // pre-partitioned on the per-round join key so the five rank joins
-    // reuse one exchange of the edge relation
-    val withDeg = Ckpt(edges.join(deg, "src").repartition(loopParts, $"src"),
-      eager = false)
-    var ranks = deg.select($"src".as("node"), lit(1000000L).as("r"))
-    for (_ <- 1 to 5) {
-      ranks = withDeg.join(ranks, $"node" === $"src")
-        .select($"dst", expr("r div deg").as("contrib"))
-        .groupBy($"dst").agg(sum($"contrib").as("s"))
-        .select($"dst".as("node"),
-          expr("150000 + (85 * s) div 100").as("r"))
-    }
-    rebind(ranks.select($"node".as("doc_id"), $"r".as("rank_q")), caller)
-  }
 
   /** Single-task q103 kernel: identical integer recurrence
     * (`r' = 150000 + (85 * Σ r div deg) div 100` over the symmetric
@@ -595,62 +521,54 @@ object Graph {
       col("doc_a"), col("doc_b")))
 
   /** Testable core over any undirected `(doc_a, doc_b)` pair relation. */
-  private[graft] def pprSeedsOn(pairs0: DataFrame): DataFrame = {
-    val caller = pairs0.sparkSession
-    val loopParts = ccLoopParts(caller)
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // pair relation materialized once (size probe + both union branches)
-    val pairs = Ckpt(rebind(pairs0, spark).toDF("doc_a", "doc_b"),
-      eager = false)
-    val m = pairs.count()
-    val ranks: DataFrame = if (m <= ccLocalCutoff(caller)) {
-      // one-task kernel for the five (seed x frontier) integer rounds;
-      // the top-10 window below stays in Spark so every ordering /
-      // tie-break semantic is shared with the distributed branch
-      pairs.select($"doc_a".cast("long"), $"doc_b".cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => localPpr(it))
-        .toDF("seed", "node", "r")
-    } else {
-      val edges = Ckpt(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-        .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))),
-        eager = false)
-      val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-      val withDeg = Ckpt(edges.join(deg, "src").repartition(loopParts, $"src"),
-        eager = false)
-      val seeds = deg.select($"src").orderBy($"src".asc).limit(3)
-        .as[Long].collect().sorted.toSeq
-      val seedDf = seeds.map(s => (s, s, 1000000L))
-        .toDF("seed", "node", "r")
-      val restart = seeds.map(s => (s, s, 150000L))
-        .toDF("seed", "node", "r")
-      var rk = seedDf
-      for (_ <- 1 to 5) {
-        val prop = withDeg.join(rk, $"node" === $"src")
-          .select($"seed", $"dst", expr("r div deg").as("contrib"))
-          .groupBy($"seed", $"dst")
-          .agg(sum($"contrib").as("s"))
-          .select($"seed", $"dst".as("node"),
-            expr("(85 * s) div 100").as("r"))
-        rk = prop.unionByName(restart)
-          .groupBy($"seed", $"node").agg(sum($"r").as("r"))
+  private[graft] def pprSeedsOn(pairs0: DataFrame): DataFrame =
+    Loop.run(pairs0.sparkSession) { loop =>
+      import loop.spark.implicits._
+      // pair relation materialized once (size probe + both union branches)
+      val pairs = Ckpt(loop.on(pairs0).toDF("doc_a", "doc_b"), eager = false)
+      val m = pairs.count()
+      val ranks: DataFrame = if (loop.fitsOneTask(m)) {
+        // one-task kernel for the five (seed x frontier) integer rounds;
+        // the top-10 window below stays in Spark so every ordering /
+        // tie-break semantic is shared with the distributed branch
+        pairs.select($"doc_a".cast("long"), $"doc_b".cast("long"))
+          .as[(Long, Long)].coalesce(1)
+          .mapPartitions(it => localPpr(it))
+          .toDF("seed", "node", "r")
+      } else {
+        val edges = Ckpt(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
+          .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))),
+          eager = false)
+        val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
+        val withDeg = Ckpt(edges.join(deg, "src").repartition(loop.parts, $"src"),
+          eager = false)
+        val seeds = deg.select($"src").orderBy($"src".asc).limit(3)
+          .as[Long].collect().sorted.toSeq
+        val seedDf = seeds.map(s => (s, s, 1000000L))
+          .toDF("seed", "node", "r")
+        val restart = seeds.map(s => (s, s, 150000L))
+          .toDF("seed", "node", "r")
+        var rk = seedDf
+        for (_ <- 1 to 5) {
+          val prop = withDeg.join(rk, $"node" === $"src")
+            .select($"seed", $"dst", expr("r div deg").as("contrib"))
+            .groupBy($"seed", $"dst")
+            .agg(sum($"contrib").as("s"))
+            .select($"seed", $"dst".as("node"),
+              expr("(85 * s) div 100").as("r"))
+          rk = prop.unionByName(restart)
+            .groupBy($"seed", $"node").agg(sum($"r").as("r"))
+        }
+        rk
       }
-      rk
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy($"seed").orderBy($"r".desc, $"node".asc)
+      ranks
+        .withColumn("rk", row_number().over(w))
+        .where($"rk" <= 10)
+        .select($"seed", $"rk".cast("long").as("rk"),
+          $"node".as("doc_id"), $"r".as("rank_q"))
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"seed").orderBy($"r".desc, $"node".asc)
-    rebind(ranks
-      .withColumn("rk", row_number().over(w))
-      .where($"rk" <= 10)
-      .select($"seed", $"rk".cast("long").as("rk"),
-        $"node".as("doc_id"), $"r".as("rank_q")), caller)
-  }
 
   /** Single-task q324 kernel: the identical per-(seed, node) integer
     * recurrence — propagate `(85 · Σ r div deg) div 100`, re-inject
@@ -708,50 +626,41 @@ object Graph {
       col("doc_a"), col("doc_b")))
 
   /** Testable core over any undirected `(doc_a, doc_b)` pair relation. */
-  private[graft] def lpaCommunitiesOn(pairs0: DataFrame): DataFrame = {
-    val caller = pairs0.sparkSession
-    val loopParts = ccLoopParts(caller)
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // pair relation materialized once (size probe + both union branches)
-    val pairs = Ckpt(rebind(pairs0, spark).toDF("doc_a", "doc_b"),
-      eager = false)
-    val m = pairs.count()
-    val labelsOut: DataFrame = if (m <= ccLocalCutoff(caller)) {
-      // one-task kernel for the four synchronous plurality rounds; the
-      // census aggregation below stays in Spark
-      pairs.select($"doc_a".cast("long"), $"doc_b".cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => localLpa(it))
-        .toDF("node", "label")
-    } else {
-      val edges = Ckpt(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-        .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))),
-        eager = false)
-      var labels = edges.select($"src".as("node")).distinct()
-        .select($"node", $"node".as("label"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"node").orderBy($"c".desc, $"lb".asc)
-      for (_ <- 1 to 4) {
-        labels = edges.join(labels, $"node" === $"src")
-          .groupBy($"dst", $"label")
-          .agg(count(lit(1)).as("c"))
-          .select($"dst".as("node"), $"label".as("lb"), $"c")
-          .withColumn("rk", row_number().over(w))
-          .where($"rk" === 1)
-          .select($"node", $"lb".as("label"))
+  private[graft] def lpaCommunitiesOn(pairs0: DataFrame): DataFrame =
+    Loop.run(pairs0.sparkSession) { loop =>
+      import loop.spark.implicits._
+      // pair relation materialized once (size probe + both union branches)
+      val pairs = Ckpt(loop.on(pairs0).toDF("doc_a", "doc_b"), eager = false)
+      val m = pairs.count()
+      val labelsOut: DataFrame = if (loop.fitsOneTask(m)) {
+        // one-task kernel for the four synchronous plurality rounds; the
+        // census aggregation below stays in Spark
+        pairs.select($"doc_a".cast("long"), $"doc_b".cast("long"))
+          .as[(Long, Long)].coalesce(1)
+          .mapPartitions(it => localLpa(it))
+          .toDF("node", "label")
+      } else {
+        val edges = Ckpt(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
+          .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))),
+          eager = false)
+        var labels = edges.select($"src".as("node")).distinct()
+          .select($"node", $"node".as("label"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy($"node").orderBy($"c".desc, $"lb".asc)
+        for (_ <- 1 to 4) {
+          labels = edges.join(labels, $"node" === $"src")
+            .groupBy($"dst", $"label")
+            .agg(count(lit(1)).as("c"))
+            .select($"dst".as("node"), $"label".as("lb"), $"c")
+            .withColumn("rk", row_number().over(w))
+            .where($"rk" === 1)
+            .select($"node", $"lb".as("label"))
+        }
+        labels
       }
-      labels
+      labelsOut.groupBy($"label".as("community"))
+        .agg(count(lit(1)).as("n_members"), min($"node").as("min_node"))
     }
-    rebind(labelsOut.groupBy($"label".as("community"))
-      .agg(count(lit(1)).as("n_members"), min($"node").as("min_node")),
-      caller)
-  }
 
   /** Single-task q325 kernel: 4 synchronous plurality-label rounds
     * over the symmetric closure with multiplicity, exact
@@ -859,66 +768,59 @@ object Graph {
     *    is bounded rows × bounded lists. */
   private[graft] def trianglesOn(edges0: DataFrame): DataFrame = {
     val caller = edges0.sparkSession
-    // read on the CALLER (runtime confs don't cross newSession)
     val shuffleAdj = caller.conf.getOption(TriShuffleConf).exists(_.toBoolean)
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      spark.sparkContext.defaultParallelism.toString)
-    // feeds the adjacency build and the per-edge probe — materialize once
-    val e = Ckpt(rebind(edges0, spark), eager = false)
-    val probe =
-      if (!shuffleAdj) {
-        // |nodes| rows; checkpointed so the TWO broadcast legs below
-        // don't each re-run the adjacency aggregation
-        val adj = Ckpt(e.groupBy($"u").agg(sort_array(collect_list($"v")).as("nb")),
-          eager = false)
-        e.join(broadcast(adj.select($"u".as("__u"), $"nb".as("nb_u"))), $"u" === $"__u")
-          .join(broadcast(adj.select($"u".as("__v"), $"nb".as("nb_v"))), $"v" === $"__v", "left")
-          .select($"u", $"v",
-            array_intersect($"nb_u", coalesce($"nb_v", array().cast("array<bigint>")))
-              .as("common"))
-      } else {
-        // degree-ordered orientation: a < b iff (deg,id) smaller
-        val deg = e.select($"u".as("n")).unionByName(e.select($"v".as("n")))
-          .groupBy($"n").agg(count(lit(1)).as("dg"))
-        val oriented = Ckpt(e
-          .join(deg.select($"n".as("u"), $"dg".as("du")), "u")
-          .join(deg.select($"n".as("v"), $"dg".as("dv")), "v")
-          .select(
-            when($"du" < $"dv" || ($"du" === $"dv" && $"u" < $"v"),
-              struct($"u".as("x"), $"v".as("y")))
-              .otherwise(struct($"v".as("x"), $"u".as("y"))).as("o"))
-          .select($"o.x".as("a"), $"o.y".as("b")), eager = false)
-        // forward lists bounded by arboricity; SHUFFLED equi-joins, no
-        // broadcast — the adjacency never has to fit on one executor
-        val adj = Ckpt(oriented.groupBy($"a")
-          .agg(sort_array(collect_list($"b")).as("nb")), eager = false)
-        oriented
-          .join(adj.select($"a".as("__a"), $"nb".as("nb_a")), $"a" === $"__a")
-          .join(adj.select($"a".as("__b"), $"nb".as("nb_b")), $"b" === $"__b", "left")
-          .select($"a".as("u"), $"b".as("v"),
-            array_intersect($"nb_a", coalesce($"nb_b", array().cast("array<bigint>")))
-              .as("common"))
-      }
-    // corner credit: u and v get one per common neighbor, each w gets 1
-    val corners = probe
-      .select(explode(concat(
-        array(struct($"u".as("n"), size($"common").cast("long").as("c")),
-          struct($"v".as("n"), size($"common").cast("long").as("c"))),
-        transform($"common", w => struct(w.as("n"), lit(1L).as("c"))))).as("s"))
-      .select($"s.n".as("supp"), $"s.c".as("c"))
-    // EAGER checkpoint: the enumeration job must run on THIS session
-    // (AQE off, full width) — a lazy plan rebound to the caller would
-    // re-plan under the caller's AQE and re-coalesce the kilobyte
-    // exchanges below the width the probe stage's CPU needs
-    val counts = Ckpt(corners.groupBy($"supp").agg(sum($"c").as("n_tri"))
-      .where($"n_tri" > 0))
-    rebind(counts, caller)
+    Loop.run(caller, Some(caller.sparkContext.defaultParallelism)) { loop =>
+      import loop.spark.implicits._
+      // feeds the adjacency build and the per-edge probe — materialize once
+      val e = Ckpt(loop.on(edges0), eager = false)
+      val probe =
+        if (!shuffleAdj) {
+          // |nodes| rows; checkpointed so the TWO broadcast legs below
+          // don't each re-run the adjacency aggregation
+          val adj = Ckpt(e.groupBy($"u").agg(sort_array(collect_list($"v")).as("nb")),
+            eager = false)
+          e.join(broadcast(adj.select($"u".as("__u"), $"nb".as("nb_u"))), $"u" === $"__u")
+            .join(broadcast(adj.select($"u".as("__v"), $"nb".as("nb_v"))), $"v" === $"__v", "left")
+            .select($"u", $"v",
+              array_intersect($"nb_u", coalesce($"nb_v", array().cast("array<bigint>")))
+                .as("common"))
+        } else {
+          // degree-ordered orientation: a < b iff (deg,id) smaller
+          val deg = e.select($"u".as("n")).unionByName(e.select($"v".as("n")))
+            .groupBy($"n").agg(count(lit(1)).as("dg"))
+          val oriented = Ckpt(e
+            .join(deg.select($"n".as("u"), $"dg".as("du")), "u")
+            .join(deg.select($"n".as("v"), $"dg".as("dv")), "v")
+            .select(
+              when($"du" < $"dv" || ($"du" === $"dv" && $"u" < $"v"),
+                struct($"u".as("x"), $"v".as("y")))
+                .otherwise(struct($"v".as("x"), $"u".as("y"))).as("o"))
+            .select($"o.x".as("a"), $"o.y".as("b")), eager = false)
+          // forward lists bounded by arboricity; SHUFFLED equi-joins, no
+          // broadcast — the adjacency never has to fit on one executor
+          val adj = Ckpt(oriented.groupBy($"a")
+            .agg(sort_array(collect_list($"b")).as("nb")), eager = false)
+          oriented
+            .join(adj.select($"a".as("__a"), $"nb".as("nb_a")), $"a" === $"__a")
+            .join(adj.select($"a".as("__b"), $"nb".as("nb_b")), $"b" === $"__b", "left")
+            .select($"a".as("u"), $"b".as("v"),
+              array_intersect($"nb_a", coalesce($"nb_b", array().cast("array<bigint>")))
+                .as("common"))
+        }
+      // corner credit: u and v get one per common neighbor, each w gets 1
+      val corners = probe
+        .select(explode(concat(
+          array(struct($"u".as("n"), size($"common").cast("long").as("c")),
+            struct($"v".as("n"), size($"common").cast("long").as("c"))),
+          transform($"common", w => struct(w.as("n"), lit(1L).as("c"))))).as("s"))
+        .select($"s.n".as("supp"), $"s.c".as("c"))
+      // EAGER checkpoint: the enumeration job must run on THIS session
+      // (AQE off, full width) — a lazy plan rebound to the caller would
+      // re-plan under the caller's AQE and re-coalesce the kilobyte
+      // exchanges below the width the probe stage's CPU needs
+      Ckpt(corners.groupBy($"supp").agg(sum($"c").as("n_tri"))
+        .where($"n_tri" > 0))
+    }
   }
 
   /** q184: HITS hubs & authorities (Kleinberg 1999) on the bipartite
@@ -952,63 +854,54 @@ object Graph {
       .distinct())
   }
 
-  private[graft] def hitsOn(pairs0: DataFrame): DataFrame = {
-    val caller = pairs0.sparkSession
-    // knob read on the CALLER (runtime confs don't cross newSession)
-    val loopParts = ccLoopParts(caller)
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // interaction relation materialized ONCE: the hybrid-size probe and
-    // (on the distributed path) BOTH per-key repartitions read it — the
-    // two Ckpts used to each re-run the upstream distinct pipeline
-    val pairs = Ckpt(rebind(pairs0, spark).toDF("cust", "supp"),
-      eager = false)
-    val m = pairs.count()
-    val (auth, hub) = if (m <= ccLocalCutoff(caller)) {
-      // one-task kernel for the 6 integer half-rounds (each half-round
-      // distributed costs a checkpoint job + a max-aggregate job on a
-      // KB-sized relation); the top-10 cuts stay in Spark
-      val scores = Ckpt(pairs.select($"cust".cast("long"), $"supp".cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions(it => localHits(it))
-        .toDF("role", "node", "score"), eager = false)
-      (scores.where($"role" === "authority")
-         .select($"node".as("supp"), $"score".as("a")),
-       scores.where($"role" === "hub")
-         .select($"node".as("cust"), $"score".as("h")))
-    } else {
-      val edgesByCust = Ckpt(pairs.repartition(loopParts, $"cust"), eager = false)
-      val edgesBySupp = Ckpt(pairs.repartition(loopParts, $"supp"), eager = false)
-      var hubD = edgesByCust.select($"cust").distinct()
-        .select($"cust", lit(1000000L).as("h"))
-      var authD: DataFrame = null
-      for (_ <- 1 to 3) {
-        val a = Ckpt(edgesByCust.join(hubD, "cust")
-          .groupBy($"supp").agg(sum($"h").as("a")), eager = false)
-        val amax = a.agg(max($"a").as("amax"))
-        authD = a.crossJoin(broadcast(amax))
-          .select($"supp", expr("(a * 1000000) div amax").as("a"))
-        val h = Ckpt(edgesBySupp.join(authD, "supp")
-          .groupBy($"cust").agg(sum($"a").as("h")), eager = false)
-        val hmax = h.agg(max($"h").as("hmax"))
-        hubD = h.crossJoin(broadcast(hmax))
-          .select($"cust", expr("(h * 1000000) div hmax").as("h"))
+  private[graft] def hitsOn(pairs0: DataFrame): DataFrame =
+    Loop.run(pairs0.sparkSession) { loop =>
+      import loop.spark.implicits._
+      // interaction relation materialized ONCE: the hybrid-size probe and
+      // (on the distributed path) BOTH per-key repartitions read it — the
+      // two Ckpts used to each re-run the upstream distinct pipeline
+      val pairs = Ckpt(loop.on(pairs0).toDF("cust", "supp"), eager = false)
+      val m = pairs.count()
+      val (auth, hub) = if (loop.fitsOneTask(m)) {
+        // one-task kernel for the 6 integer half-rounds (each half-round
+        // distributed costs a checkpoint job + a max-aggregate job on a
+        // KB-sized relation); the top-10 cuts stay in Spark
+        val scores = Ckpt(pairs.select($"cust".cast("long"), $"supp".cast("long"))
+          .as[(Long, Long)].coalesce(1)
+          .mapPartitions(it => localHits(it))
+          .toDF("role", "node", "score"), eager = false)
+        (scores.where($"role" === "authority")
+           .select($"node".as("supp"), $"score".as("a")),
+         scores.where($"role" === "hub")
+           .select($"node".as("cust"), $"score".as("h")))
+      } else {
+        val edgesByCust = Ckpt(pairs.repartition(loop.parts, $"cust"), eager = false)
+        val edgesBySupp = Ckpt(pairs.repartition(loop.parts, $"supp"), eager = false)
+        var hubD = edgesByCust.select($"cust").distinct()
+          .select($"cust", lit(1000000L).as("h"))
+        var authD: DataFrame = null
+        for (_ <- 1 to 3) {
+          val a = Ckpt(edgesByCust.join(hubD, "cust")
+            .groupBy($"supp").agg(sum($"h").as("a")), eager = false)
+          val amax = a.agg(max($"a").as("amax"))
+          authD = a.crossJoin(broadcast(amax))
+            .select($"supp", expr("(a * 1000000) div amax").as("a"))
+          val h = Ckpt(edgesBySupp.join(authD, "supp")
+            .groupBy($"cust").agg(sum($"a").as("h")), eager = false)
+          val hmax = h.agg(max($"h").as("hmax"))
+          hubD = h.crossJoin(broadcast(hmax))
+            .select($"cust", expr("(h * 1000000) div hmax").as("h"))
+        }
+        (authD, hubD)
       }
-      (authD, hubD)
+      val topAuth = auth.orderBy($"a".desc, $"supp".asc).limit(10)
+        .select(lit("authority").as("role"), $"supp".as("node_id"),
+          $"a".as("score"))
+      val topHub = hub.orderBy($"h".desc, $"cust".asc).limit(10)
+        .select(lit("hub").as("role"), $"cust".as("node_id"),
+          $"h".as("score"))
+      topAuth.unionByName(topHub)
     }
-    val topAuth = auth.orderBy($"a".desc, $"supp".asc).limit(10)
-      .select(lit("authority").as("role"), $"supp".as("node_id"),
-        $"a".as("score"))
-    val topHub = hub.orderBy($"h".desc, $"cust".asc).limit(10)
-      .select(lit("hub").as("role"), $"cust".as("node_id"),
-        $"h".as("score"))
-    rebind(topAuth.unionByName(topHub), caller)
-  }
 
   /** Single-task q184 kernel: the identical 3-round integer HITS —
     * authority(s) = Σ hub over buyers, hub(c) = Σ authority over
@@ -1177,9 +1070,10 @@ object Graph {
   /** Testable core: k-core of an undirected (a, b) pair relation.
     *
     * Hybrid peel: DISTRIBUTED rounds (degree agg + two semi-joins, Ckpt
-    * lineage truncation) only while the oriented edge set exceeds
-    * `localCutoff`; once it fits one task, the remaining cascade runs as
-    * a single-task `mapPartitions` Matula–Beck peel. The convergence
+    * lineage truncation) only while the oriented edge set exceeds the
+    * one-task cutoff ([[Loop.CutoffConf]]); once it fits one task, the
+    * remaining cascade runs as a single-task `mapPartitions` Matula–Beck
+    * peel. The convergence
     * tail of an iterative peel is where per-round scheduler overhead
     * dominates — real dup graphs spend 1-2 rounds peeling 99% of the
     * volume and then 3-5 rounds chasing a shrinking chain; paying a full
@@ -1193,24 +1087,14 @@ object Graph {
     * remove it) sharing the distributed `maxRounds` budget, preserving
     * the oracle's unrolled-round alignment and the throw-on-non-
     * convergence contract. */
-  private[graft] def kCoreOn(pairs: DataFrame, k: Int, maxRounds: Int,
-      localCutoff: Long = 4L << 20): DataFrame = {
-    val caller = pairs.sparkSession
-    // q62's clone discipline: loop confs (AQE off, narrow width) live on
-    // a cloned session so concurrent planning on the caller is untouched
-    val loopParts = ccLoopParts(caller)
-    val spark = caller.newSession()
-    Ckpt.propagate(caller, spark)
-    import spark.implicits._
-    def rebind(df: DataFrame, to: SparkSession): DataFrame =
-      org.apache.spark.sql.graft.DatasetBridge.ofRows(to, df.queryExecution.analyzed)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+  private[graft] def kCoreOn(pairs: DataFrame, k: Int, maxRounds: Int)
+      : DataFrame = Loop.run(pairs.sparkSession) { loop =>
+    import loop.spark.implicits._
     // materialize the PAIR relation once before orienting: the union's
     // two branches would otherwise each evaluate the (often expensive)
     // upstream pair pipeline — measured 2× the simhash-band join cost on
     // q230 before this truncation
-    val p = Ckpt(rebind(pairs, spark).toDF("a", "b"), eager = false)
+    val p = Ckpt(loop.on(pairs).toDF("a", "b"), eager = false)
     var edges = Ckpt(
       p.union(p.select($"b".as("a"), $"a".as("b"))), eager = false)
     // materializes the checkpoint and sizes the first routing decision
@@ -1218,7 +1102,7 @@ object Graph {
     Ckpt.release(p) // the union was p's only consumer
     var round = 0
     var converged = false
-    while (!converged && m > localCutoff) {
+    while (!converged && !loop.fitsOneTask(m)) {
       if (round >= maxRounds)
         throw new IllegalStateException(
           s"kCore did not converge in $maxRounds rounds (raise maxRounds)")
@@ -1238,18 +1122,16 @@ object Graph {
       m = mNext
       round += 1
     }
-    val out =
-      if (converged)
-        edges.groupBy($"a").agg(count(lit(1)).as("core_deg"))
-          .select($"a".as("doc_id"), $"core_deg")
-      else {
-        val budget = maxRounds - round
-        edges.select($"a".cast("long"), $"b".cast("long")).as[(Long, Long)]
-          .coalesce(1) // one task reading the checkpoint blocks, no shuffle
-          .mapPartitions(it => localKCore(it, k, budget))
-          .toDF("doc_id", "core_deg")
-      }
-    rebind(out, caller)
+    if (converged)
+      edges.groupBy($"a").agg(count(lit(1)).as("core_deg"))
+        .select($"a".as("doc_id"), $"core_deg")
+    else {
+      val budget = maxRounds - round
+      edges.select($"a".cast("long"), $"b".cast("long")).as[(Long, Long)]
+        .coalesce(1) // one task reading the checkpoint blocks, no shuffle
+        .mapPartitions(it => localKCore(it, k, budget))
+        .toDF("doc_id", "core_deg")
+    }
   }
 
   /** Single-task synchronous peel of an oriented edge iterator: each

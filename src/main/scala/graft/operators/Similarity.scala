@@ -1689,7 +1689,7 @@ object Similarity {
     def covAt(id: Long): Column = element_at($"cov", (id + 1).toInt)
     var selected = Vector.empty[(Long, Long, Long)] // (cand_id, gain, obj)
     var obj = 0L
-    // hybrid (the Graph localCutoff discipline): the greedy loop is k
+    // hybrid (the graph loops' one-task cutoff): the greedy loop is k
     // sequential full-relation aggregations — pure scheduler latency on
     // a relation this narrow (n × 32 longs). At or under the cutoff the
     // k rounds run inside ONE single-task job over the checkpointed
@@ -1699,10 +1699,7 @@ object Similarity {
     // embedding volume — the per-round aggregation loop below is the
     // right plan and runs unchanged.
     val nCov = withCov.count()
-    val localCutoff = vecs.sparkSession.conf
-      .getOption("spark.graft.facility.localCutoff")
-      .map(_.toLong).getOrElse(1L << 20) // ~1M rows ≈ 300 MB of cov arrays
-    if (nCov <= localCutoff) {
+    if (Loop.fitsOneTask(vecs.sparkSession, nCov, Loop.FacilityCutoffConf)) {
       val candIds = cands.map(_._1)
       selected = withCov.as[Seq[Long]].coalesce(1)
         .mapPartitions { it =>

@@ -1956,10 +1956,7 @@ object TextAnalysis {
       .union(adj.select($"w2".as("u"), $"w1".as("v")))
       .groupBy($"u", $"v").agg(count(lit(1)).as("w")), eager = false)
     val m = edges0.count()
-    val cutoff = docs.sparkSession.conf
-      .getOption("spark.graft.cc.localCutoff").map(_.toLong)
-      .getOrElse(4L << 20)
-    val scored: DataFrame = if (m <= cutoff) {
+    val scored: DataFrame = if (Loop.fitsOneTask(docs.sparkSession, m)) {
       // the Graph-loop hybrid discipline (connectedComponents): the five
       // weighted integer rounds on a bounded token graph are pure
       // scheduler latency distributed — one-task kernel, identical

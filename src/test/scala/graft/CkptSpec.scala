@@ -15,7 +15,7 @@ import graft.operators.{Ckpt, Graph}
   * specs pin the three things that must hold for the knob to be real:
   * (1) outputs are bit-identical to the default path, (2) checkpoint
   * files actually land under the configured dir — including from inside
-  * the loops' `newSession()` clones, i.e. `Ckpt.propagate` works — and
+  * the loops' cloned sessions, i.e. `Loop.run` copies the knob — and
   * (3) storage is bounded: one app subdir per knob value (not re-minted
   * per round) and superseded rounds' files deleted by `Ckpt.release`.
   */
@@ -119,11 +119,35 @@ class CkptSpec extends SparkSpec {
       Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val nodeSeq = (1L to 40L) ++ Seq(100L, 101L, 102L, 999L)
 
-    def run(s: SparkSession): Seq[(Long, Long)] = {
+    // a loop runs on its own clone: the caller's session conf is the
+    // same after the loop as before it
+    def callerConfKept[T](s: SparkSession)(loop: => T): T = {
+      val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      val before = keys.map(s.conf.get)
+      val out = loop
+      assert(keys.map(s.conf.get) === before, "a graph loop changed its caller's conf")
+      out
+    }
+    def run(s: SparkSession): Seq[(Long, Long)] = callerConfKept(s) {
       import s.implicits._
       Graph.connectedComponents(edgeSeq.toDF("src", "dst"), nodeSeq.toDF("node"))
         .as[(Long, Long)].collect().toSeq.sorted
     }
+    // PageRank with the cutoff at 0: its distributed loop
+    def pageRank(s: SparkSession): Seq[(Long, Long)] = callerConfKept(s) {
+      import s.implicits._
+      s.conf.set("spark.graft.cc.localCutoff", "0")
+      try Graph.pageRankOn(edgeSeq.toDF("doc_a", "doc_b"))
+        .as[(Long, Long)].collect().toSeq.sorted
+      finally s.conf.unset("spark.graft.cc.localCutoff")
+    }
+
+    val tmpRank = Files.createTempDirectory("graft-ckpt-pagerank")
+    val rankDefault = pageRank(spark)
+    assert(pageRank(durableSession(tmpRank.toString)) === rankDefault,
+      "durable PageRank diverged from localCheckpoint PageRank")
+    assert(rddDirs(tmpRank).nonEmpty,
+      "no checkpoint files under the knob dir from the PageRank loop clone")
 
     val default = run(spark)
     val durable = run(durableSession(tmp.toString))
@@ -135,7 +159,7 @@ class CkptSpec extends SparkSpec {
     // the knob reached the loop's newSession() clone: files appeared here
     val apps = appDirs(tmp)
     assert(apps.nonEmpty, "no checkpoint files under the knob dir — " +
-      "Ckpt.propagate did not reach the loop clone")
+      "the knob did not reach the loop clone")
     // one app subdir per knob value — setCheckpointDir was not re-run
     // per round (each call mints a fresh uuid dir)
     assert(apps.size === 1, s"checkpoint dir re-minted: $apps")

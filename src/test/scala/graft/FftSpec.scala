@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Fft
+import graft.functions.{Fft, GraftExtensions}
 
 /** FFT expression: radix-2 vs naive DFT agreement, analytic cases,
   * Parseval, and the SQL/Column integration paths. */
@@ -65,11 +65,15 @@ class FftSpec extends SparkSpec {
   }
 
   test("SQL registration exposes graft_fft") {
-    Fft.register(spark)
+    GraftExtensions.register(spark)
     val row = spark.sql(
-      "SELECT graft_fft(array(1.0d, 2.0d, 3.0d, 4.0d)) AS sp").head()
+      """SELECT graft_fft(array(1.0d, 2.0d, 3.0d, 4.0d)) AS sp,
+                graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS dt,
+                graft_norm(array(3.0d, 4.0d)) AS nm""").head()
     val sp = row.getSeq[org.apache.spark.sql.Row](0)
     assert(sp.length === 4)
     assert(math.abs(sp.head.getDouble(0) - 10.0) < 1e-12) // X_0 = sum
+    assert(row.getDouble(1) === 32.0)
+    assert(row.getDouble(2) === 5.0)
   }
 }

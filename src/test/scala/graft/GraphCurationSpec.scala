@@ -11,6 +11,11 @@ import graft.sources.Tables
   */
 class GraphCurationSpec extends SparkSpec {
 
+  private def withCutoff[T](v: String)(body: => T): T = {
+    spark.conf.set("spark.graft.cc.localCutoff", v)
+    try body finally spark.conf.unset("spark.graft.cc.localCutoff")
+  }
+
   test("connectedComponents matches a union-find model on a handcrafted graph") {
     import spark.implicits._
     // chain 1-2-3, triangle 10-11-12 with extra edge, self-loop 20,
@@ -32,12 +37,10 @@ class GraphCurationSpec extends SparkSpec {
     val pairs = Dedup.simhashPairs(spark, sfDir).select($"doc_a", $"doc_b")
     val docs = graft.operators.TextOps.docsParallel(spark, sfDir)
       .select($"doc_id")
-    def both(run: => Map[Long, Long]): (Map[Long, Long], Map[Long, Long]) = {
-      val local = run // default cutoff: the toy graphs take the local path
-      spark.conf.set("spark.graft.cc.localCutoff", "0") // force distributed
-      try (local, run)
-      finally spark.conf.unset("spark.graft.cc.localCutoff")
-    }
+    // the default cutoff takes the local path on these graphs; 0 forces
+    // the distributed one
+    def both(run: => Map[Long, Long]): (Map[Long, Long], Map[Long, Long]) =
+      (run, withCutoff("0")(run))
     val (l1, d1) = both(Graph.connectedComponents(edges, nodes)
       .as[(Long, Long)].collect().toMap)
     assert(l1 === d1)
@@ -48,14 +51,11 @@ class GraphCurationSpec extends SparkSpec {
 
   test("graph loop kernels: single-task path is bit-identical to the distributed loops") {
     import spark.implicits._
-    def withCutoff[T](v: String)(body: => T): T = {
-      spark.conf.set("spark.graft.cc.localCutoff", v)
-      try body finally spark.conf.unset("spark.graft.cc.localCutoff")
-    }
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toString).toSet
     val qs = Seq("q103_pagerank", "q184_hits", "q320_textrank",
-      "q324_ppr_seeds", "q325_lpa_communities", "q62_dup_clusters")
+      "q324_ppr_seeds", "q325_lpa_communities", "q62_dup_clusters",
+      "q230_dup_core")
     qs.foreach { q =>
       val local = rows(SparkEntry.queries(q)(spark, sfDir))
       val dist = withCutoff("0")(rows(SparkEntry.queries(q)(spark, sfDir)))
@@ -108,9 +108,8 @@ class GraphCurationSpec extends SparkSpec {
     assert(got === Map(4L -> 2L, 5L -> 2L, 6L -> 2L))
     // cutoff 0 forces every round through the distributed semi-join
     // path; the k-core is unique, so both phases must agree exactly
-    val gotDist = Graph.kCoreOn(edges, k = 2, maxRounds = 8,
-      localCutoff = 0L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gotDist = withCutoff("0")(Graph.kCoreOn(edges, k = 2, maxRounds = 8)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(gotDist === got)
     // the round budget is shared: the 3-deep cascade + confirm round
     // cannot fit in 2 rounds on either path (the local throw arrives
@@ -121,7 +120,7 @@ class GraphCurationSpec extends SparkSpec {
     assert(eLocal.getMessage.contains("did not converge") ||
       Option(eLocal.getCause).exists(_.getMessage.contains("did not converge")))
     val eDist = intercept[Exception] {
-      Graph.kCoreOn(edges, k = 2, maxRounds = 2, localCutoff = 0L).collect()
+      withCutoff("0")(Graph.kCoreOn(edges, k = 2, maxRounds = 2).collect())
     }
     assert(eDist.getMessage.contains("did not converge"))
     // real near-dup graph: sequential peel model + convergence <= 8

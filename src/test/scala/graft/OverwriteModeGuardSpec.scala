@@ -6,25 +6,43 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** How a partition is overwritten in place is decided in one module:
-  * `Io.writePartitioned` is the only dynamic-overwrite writer, and the
-  * streaming batch stores write through it. A source file elsewhere that
-  * sets the overwrite mode itself fails this check. */
+/** Decisions that live in one module each. A token in the table below
+  * may appear, within its scope, only in its owner file:
+  *  - how a partition is overwritten in place: `Io.writePartitioned` is
+  *    the only dynamic-overwrite writer, and the streaming batch stores
+  *    write through it;
+  *  - how an iterative operator sets up the session it loops on (the
+  *    clone, its checkpoint dir, AQE off, its width, re-binding plans
+  *    between sessions) and when a loop fits one task: `Loop`.
+  * A source file elsewhere in the scope that names a token fails this
+  * check. */
 class OverwriteModeGuardSpec extends AnyFunSuite {
 
-  test("partitionOverwriteMode appears in graft/sources/Io.scala only") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val owner = root.resolve("graft/sources/Io.scala")
-    val sources = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.contains(owner))
-    val offenders = for {
-      file <- sources if file != owner
-      (line, n) <- Files.readAllLines(file).asScala.zipWithIndex
-      if line.contains("partitionOverwriteMode")
-    } yield s"$file:${n + 1}: ${line.trim}"
-    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
-    assert(Files.readString(owner).contains("partitionOverwriteMode"))
+  private val root = Paths.get("src/main/scala")
+
+  /** (tokens, owner file, scope), paths under `src/main/scala`. */
+  private val owners = Seq(
+    (Seq("partitionOverwriteMode"), "graft/sources/Io.scala", ""),
+    (Seq("newSession()", "Ckpt.propagate", "DatasetBridge.ofRows",
+      "spark.sql.adaptive.enabled", "localCutoff\"", "spark.graft.cc.partitions"),
+      "graft/operators/Loop.scala", "graft/operators"))
+
+  owners.foreach { case (tokens, ownerPath, scopePath) =>
+    val verb = if (tokens.size == 1) "appears" else "appear"
+    val scope = if (scopePath.isEmpty) "" else s" (scope $scopePath)"
+    test(s"${tokens.mkString(", ")} $verb in $ownerPath only$scope") {
+      assert(Files.isDirectory(root), s"run from the repository root: $root")
+      val owner = root.resolve(ownerPath)
+      val sources = Files.walk(root.resolve(scopePath)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+      assert(sources.contains(owner))
+      val offenders = for {
+        file <- sources if file != owner
+        (line, n) <- Files.readAllLines(file).asScala.zipWithIndex
+        token <- tokens if line.contains(token)
+      } yield s"$file:${n + 1}: ${line.trim}"
+      assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+      assert(tokens.exists(Files.readString(owner).contains))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.TextHash
+import graft.functions.{GraftExtensions, TextHash}
 
 /** Direct kernel checks for the TextHash expressions (the oracle gate
   * covers them end-to-end; these pin the per-row contracts). */
@@ -81,7 +81,7 @@ class TextHashSpec extends SparkSpec {
   }
 
   test("kernels are callable from SQL after register()") {
-    TextHash.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT graft_fingerprint(split('a b c', ' ')) AS fp,
                 graft_simhash(split('a b c', ' ')) AS sh,
