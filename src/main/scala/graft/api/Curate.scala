@@ -51,16 +51,7 @@ final case class Curate(
     * argmax of per-language profile hit counts, fixed precedence on
     * ties. Pure string expressions — stays in the projection. */
   def langId(name: String = "predicted"): Curate = {
-    val scores = TextAnalysis.profiles.map { case (l, tgs) =>
-      l -> tgs.map(TextAnalysis.occurrences(text, _)).reduce(_ + _)
-    }
-    val Seq(en, de, fr, es) = scores.map(_._2)
-    val predicted =
-      when(en >= de && en >= fr && en >= es, "en")
-        .when(de >= fr && de >= es, "de")
-        .when(fr >= es, "fr")
-        .otherwise("es")
-    verdict(name, predicted)
+    verdict(name, TextAnalysis.predictedLang(TextAnalysis.langScores(text)))
   }
 
   /** Composite quality score in [0,1] (q32's recipe): length saturation

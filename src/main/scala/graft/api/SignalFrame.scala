@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{SignalCatalog, SignalMeta}
 import graft.operators.{AsOf, Interp}
+import graft.operators.Relational.exact2
 import graft.plans.{ParamLiteralsStrategy, Planner}
 import graft.sources.Io
 
@@ -179,7 +180,6 @@ final case class SignalFrame(meta: SignalMeta, df: DataFrame) {
     * re-shuffles raw rows (the q72/q73 stats-broadcast pattern). */
   def trend(axis: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def exact2(c: Column) = (floor(c * 100).cast("long") / 100.0)
     val keys = Seq("shot") ++ (if (df.columns.contains("channel")) Seq("channel") else Nil)
     val kc = keys.map(col)
     val raw = df.select(kc :+ col(axis).as("__x") :+ col("value").as("__y"): _*)

@@ -37,7 +37,7 @@ object TextHash {
   private val HEX = "0123456789abcdef".toCharArray
 
   /** Lowercase hex md5 of a UTF-8 string — byte-identical to SQL md5(). */
-  private[functions] def md5hex(s: String): String = {
+  private[graft] def md5hex(s: String): String = {
     val md = mdLocal.get()
     md.reset()
     val d = md.digest(s.getBytes("UTF-8"))

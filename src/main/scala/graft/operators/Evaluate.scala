@@ -152,15 +152,7 @@ object Evaluate {
     * scanned once with no joins. */
   def langidConfusion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val scores = TextAnalysis.profiles.map { case (l, tgs) =>
-      l -> tgs.map(TextAnalysis.occurrences($"text", _)).reduce(_ + _)
-    }
-    val Seq(en, de, fr, es) = scores.map(_._2)
-    val predicted =
-      when(en >= de && en >= fr && en >= es, "en")
-        .when(de >= fr && de >= es, "de")
-        .when(fr >= es, "fr")
-        .otherwise("es")
+    val predicted = TextAnalysis.predictedLang(TextAnalysis.langScores($"text"))
     val cm = Tables.documents(spark, dir)
       .groupBy($"lang".as("gold"), predicted.as("predicted"))
       .agg(count(lit(1)).as("n"))
@@ -194,15 +186,7 @@ object Evaluate {
   def ariLangid(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType
-    val scores = TextAnalysis.profiles.map { case (l, tgs) =>
-      l -> tgs.map(TextAnalysis.occurrences($"text", _)).reduce(_ + _)
-    }
-    val Seq(en, de, fr, es) = scores.map(_._2)
-    val predicted =
-      when(en >= de && en >= fr && en >= es, "en")
-        .when(de >= fr && de >= es, "de")
-        .when(fr >= es, "fr")
-        .otherwise("es")
+    val predicted = TextAnalysis.predictedLang(TextAnalysis.langScores($"text"))
     ariOn(Tables.documents(spark, dir)
       .select($"lang".as("gold"), predicted.as("predicted")))
   }
@@ -1314,15 +1298,7 @@ object Evaluate {
     * Output: 1 row. */
   def cohenKappa(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val scores = TextAnalysis.profiles.map { case (l, tgs) =>
-      l -> tgs.map(TextAnalysis.occurrences($"text", _)).reduce(_ + _)
-    }
-    val Seq(en, de, fr, es) = scores.map(_._2)
-    val predicted =
-      when(en >= de && en >= fr && en >= es, "en")
-        .when(de >= fr && de >= es, "de")
-        .when(fr >= es, "fr")
-        .otherwise("es")
+    val predicted = TextAnalysis.predictedLang(TextAnalysis.langScores($"text"))
     kappaOn(Tables.documents(spark, dir)
       .select($"lang".as("gold"), predicted.as("predicted")))
   }

@@ -11,8 +11,133 @@ import graft.sources.Tables
   * scalar quantization (what a 100 TB vector store actually persists) and
   * a k-means codebook refinement step (how the IVF coarse quantizer in
   * Similarity.ivfAnn would actually be trained).
+  *
+  * It is also the one home of the vector quantizer's rules, which the
+  * IVF/PQ operators in Similarity and the streaming novelty gate call:
+  * the coarse-cell rule ([[cellOf]], [[rankCells]]), the PQ code rule
+  * ([[pqCode]]) and the ADC lookup table ([[adcLut]]).
   */
 object Quantize {
+
+  /** A collected codebook: (id, centroid with its floats widened to
+    * double, the centroid's L2 norm), sorted by id. The coarse-cell rule,
+    * the PQ code rule and the ADC table below all read one; each caller
+    * picks where its codebook comes from (the first k vectors, Lloyd
+    * refinement, a streamed artifact). */
+  private[graft] type Codebook = Array[(Long, Array[Double], Double)]
+
+  /** Collect the `(vec_id, embedding)` rows the caller chose as
+    * centroids (`vec_id < 8`, the k lowest ids, ...) into a codebook. */
+  private[graft] def collectCodebook(rows: DataFrame): Codebook = {
+    import rows.sparkSession.implicits._
+    rows.select($"vec_id", transform($"embedding", x => x.cast("double")),
+        VectorOps.l2norm($"embedding"))
+      .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
+  }
+
+  /** The codebook of explicit driver-side centroids (a streamed or
+    * persisted quantizer artifact). */
+  private[graft] def codebook(cents: Array[(Long, Array[Double])]): Codebook =
+    cents.map { case (id, c) => (id, c, norm(c)) }
+
+  /** `VectorOps.l2norm` on the driver: the same left-to-right sum of
+    * squares, so a driver norm and an in-engine norm are the same double. */
+  private def norm(c: Array[Double]): Double =
+    math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))
+
+  /** The coarse-cell rule: every cell scored for the row's vector `emb`
+    * (norm `nrm`) as struct(cosine, −id), so struct order is the ranking
+    * (cosine desc, id asc) — the oracle's `ORDER BY ccos DESC, cent_id
+    * ASC`. The dots widen floats to double, so a float or a double `emb`
+    * scores the same. */
+  private def cellScores(emb: Column, nrm: Column, cb: Codebook): Column =
+    array(cb.map { case (id, c, cn) =>
+      struct((VectorOps.dot(emb, lit(c)) / (nrm * cn)).as("ccos"), lit(-id).as("negid"))
+    }: _*)
+
+  /** The vector's cell: the head of its cell ranking, as one struct max
+    * over k codegen'd dots (map-only, O(k) per row). */
+  private[graft] def cellOf(emb: Column, nrm: Column, cb: Codebook): Column =
+    -array_max(cellScores(emb, nrm, cb)).getField("negid")
+
+  /** The vector's `n` first cells of the ranking — its probes; the head
+    * is [[cellOf]]. */
+  private[graft] def rankCells(emb: Column, nrm: Column, cb: Codebook,
+      n: Int): Column =
+    transform(slice(sort_array(cellScores(emb, nrm, cb), asc = false), 1, n),
+      s => -s.getField("negid"))
+
+  /** The PQ layout: m = 8 subspaces of 8 dims over a 64-dim vector. */
+  private[graft] val PqM = 8
+  private val PqSubDim = 8
+
+  /** Subspace `s` of a vector column: its contiguous slice. */
+  private[graft] def pqSlice(emb: Column)(s: Int): Column =
+    slice(emb, s * PqSubDim + 1, PqSubDim)
+
+  /** The subspaces of a driver-side centroid, cut like [[pqSlice]]. */
+  private[graft] def pqSubs(c: Array[Double]): Seq[Seq[Double]] =
+    (0 until PqM).map(s => c.slice(s * PqSubDim, s * PqSubDim + PqSubDim).toSeq)
+
+  /** One row per (vector, subspace): the generator of (sub, sl) pairs,
+    * `sl(s)` being subspace s of the row's vector. */
+  private[graft] def pqSubspaces(sl: Int => Column): Column =
+    posexplode(array((0 until PqM).map(sl): _*)).as(Seq("sub", "sl"))
+
+  /** A centroid's subspace vectors and their squared norms, the norms
+    * summed left to right (the oracle's order). */
+  private def subTable(c: Array[Double], subsOf: Array[Double] => Seq[Seq[Double]])
+      : (Seq[Seq[Double]], Seq[Double]) = {
+    val subs = subsOf(c)
+    (subs, subs.map(_.foldLeft(0.0)((a, x) => a + x * x)))
+  }
+
+  /** The PQ code rule: the codebook entry nearest to the row's subspace
+    * slice `sl` (subspace `sub`, 0-based), struct(dist, code) with the
+    * min code on ties. `subsOf` lays a centroid out in the subspaces `sl`
+    * was cut from.
+    *
+    * The distance is (‖x‖² − 2·x·c) + ‖c‖²: three fixed-order dot
+    * products (a per-dimension (x−c)² expansion was a ~2,500-node
+    * expression tree that blew the codegen method limit), every term the
+    * same left-to-right IEEE sum on both engines, so the argmin needs no
+    * quantization. A codebook sub-vector encodes to itself at exactly
+    * 0.0: its x·c and ‖c‖² are the same sum as ‖x‖². The centroids ship
+    * as nested literals indexed by `sub`, so the whole scoring is ONE
+    * ‖x‖² dot plus k dots per (vector, subspace) row. */
+  private[graft] def pqCode(sl: Column, sub: Column, cb: Codebook,
+      subsOf: Array[Double] => Seq[Seq[Double]]): Column = {
+    val sxx = VectorOps.dot(sl, sl)
+    array_min(array(cb.map { case (id, c, _) =>
+      val (subs, sccs) = subTable(c, subsOf)
+      val dist = (sxx - lit(2.0) * VectorOps.dot(sl, element_at(typedLit(subs), sub + 1)))
+        .+(element_at(typedLit(sccs), sub + 1))
+      struct(dist.as("dist"), lit(id).as("code"))
+    }: _*))
+  }
+
+  /** The asymmetric-distance (ADC) lookup table (Jégou, Douze & Schmid
+    * 2011) of `queries` (query_id, embedding) against a codebook: per
+    * (query_id, sub, code) the inner product q_s·c_{code,s} (`ip_q`) and
+    * the query-independent ‖c_{code,s}‖² (`rn_q`), both on the PQ code
+    * rule's float path and floor(x·1e6 + 1/3)-quantized, so a scan sums
+    * them as exact longs. |queries|·m·k rows. */
+  private[graft] def adcLut(queries: DataFrame, cb: Codebook): DataFrame = {
+    import queries.sparkSession.implicits._
+    queries.select($"query_id", pqSubspaces(pqSlice($"embedding")))
+      .select($"query_id", $"sub".cast("long").as("sub"),
+        explode(array(cb.map { case (id, c, _) =>
+          val (subs, sccs) = subTable(c, pqSubs)
+          struct(lit(id).as("code"),
+            floor(VectorOps.dot($"sl",
+              element_at(typedLit(subs), $"sub" + 1)) * 1e6
+              + lit(1.0 / 3)).cast("long").as("ip_q"),
+            floor(element_at(typedLit(sccs), $"sub" + 1) * 1e6
+              + lit(1.0 / 3)).cast("long").as("rn_q"))
+        }: _*)).as("ent"))
+      .select($"query_id", $"sub", $"ent.code".as("code"),
+        $"ent.ip_q".as("ip_q"), $"ent.rn_q".as("rn_q"))
+  }
 
   /** q67: per-vector int8 scalar quantization and its reconstruction
     * error. Each vector maps to 64 codes in [0,255] on its own [lo, hi]
@@ -84,22 +209,16 @@ object Quantize {
     * vec_ids (TakeOrdered — equals the oracle's `vec_id < k` on dense
     * ids, well-defined on sparse ones). */
   private[graft] def lloydCentroidsVecs(vecs: DataFrame,
-      k: Int, iters: Int): Array[(Long, Array[Double], Double)] = {
+      k: Int, iters: Int): Codebook = {
     import vecs.sparkSession.implicits._
-    val emb = transform($"embedding", x => x.cast("double"))
     val e = Ckpt(vecs
-      .select($"vec_id", emb.as("emb"),
+      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("emb"),
         VectorOps.l2norm($"embedding").as("nrm")), eager = false)
-    var cents: Array[(Long, Array[Double], Double)] =
-      e.orderBy($"vec_id".asc).limit(k).as[(Long, Array[Double], Double)]
-        .collect().sortBy(_._1)
+    var cents = collectCodebook(
+      e.orderBy($"vec_id".asc).limit(k).select($"vec_id", $"emb".as("embedding")))
     for (_ <- 1 to iters) {
-      val scoredCells = array(cents.map { case (id, cemb, cnrm) =>
-        struct((VectorOps.dot($"emb", lit(cemb)) / ($"nrm" * cnrm)).as("c"),
-          lit(-id).as("nid"))
-      }: _*)
       val sums = e
-        .select((-array_max(scoredCells).getField("nid")).as("cell"),
+        .select(cellOf($"emb", $"nrm", cents).as("cell"),
           posexplode($"emb").as(Seq("dim", "x")))
         .groupBy($"cell", $"dim")
         .agg(count(lit(1)).as("n"),
@@ -113,9 +232,7 @@ object Quantize {
             rows.foreach { r =>
               arr(r.getInt(1)) = r.getLong(3).toDouble / 1e6 / r.getLong(2)
             }
-            var acc = 0.0; var i = 0
-            while (i < arr.length) { acc += arr(i) * arr(i); i += 1 }
-            (id, arr, math.sqrt(acc))
+            (id, arr, norm(arr))
           case None => (id, old, oldNrm)
         }
       }
@@ -128,8 +245,7 @@ object Quantize {
 
   def kmeansStep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = transform($"embedding", x => x.cast("double"))
-    val e = Tables.embeddings(spark, dir).select($"vec_id", emb.as("emb"),
+    val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding",
       VectorOps.l2norm($"embedding").as("nrm"))
     // the codebook is k=8 rows — collect it to the driver (bounded, the
     // same pattern as Similarity's LSH sign matrix) and ship the
@@ -137,21 +253,10 @@ object Quantize {
     // projection: 8 codegen'd dot products per row, an array argmax, and
     // NO window / NO shuffle of the collection before the (cell, dim)
     // partial aggregation
-    val cents: Array[(Long, Array[Double], Double)] =
-      e.where($"vec_id" < 8)
-        .select($"vec_id", $"emb", $"nrm")
-        .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
-    // argmax by cosine with the min-cent_id tie-break of the oracle's
-    // (ccos DESC, cent_id ASC) ranking: struct max compares cosine first,
-    // then the NEGATED id (max(-id) == min(id))
-    val scoredCells = array(cents.map { case (id, cemb, cnrm) =>
-      struct((VectorOps.dot($"emb", lit(cemb)) / ($"nrm" * cnrm)).as("c"),
-        lit(-id).as("nid"))
-    }: _*)
-    val assigned = e.select($"vec_id", $"emb",
-      (-array_max(scoredCells).getField("nid")).as("cell"))
-    assigned
-      .select($"cell", posexplode($"emb").as(Seq("dim", "x")))
+    val cents = collectCodebook(e.where($"vec_id" < 8))
+    e.select(cellOf($"embedding", $"nrm", cents).as("cell"),
+        posexplode(transform($"embedding", x => x.cast("double")))
+          .as(Seq("dim", "x")))
       .groupBy($"cell", $"dim")
       .agg(count(lit(1)).as("n_members"),
         sum(floor($"x" * 1e6).cast("long")).as("xq_sum"))
@@ -169,46 +274,23 @@ object Quantize {
     * then scans codes with per-subspace lookup tables instead of raw
     * vectors.
     *
-    * Engine portability: the sub-distance is computed as
-    * (‖x‖² − 2·x·c) + ‖c‖² — three fixed-order dot products (the native
-    * codegen'd kernel on the subspace slice; a per-dimension (x−c)²
-    * expansion was a ~2,500-node expression tree that blew the codegen
-    * method limit and fell back to slow interpreted eval). Every term is
-    * the same left-to-right IEEE sum on both engines, so the argmin
-    * (min-code tie-break) needs no quantization; only the REPORTED
-    * distance is offset-quantized (floor(x·1e6 + 1/3)). A codebook
-    * sub-vector encodes to itself at exactly 0.0: its x·c and ‖c‖² are
-    * the SAME left-to-right sum as ‖x‖², so the algebra cancels exactly.
+    * Engine portability: the code is [[pqCode]]'s exact float rule; only
+    * the REPORTED distance is offset-quantized (floor(x·1e6 + 1/3)), and
+    * a codebook sub-vector reports exactly 0.
     *
     * Scale shape: the codebook is m·8 literal sub-vectors (collected once,
     * k-bounded like kmeansStep); encoding is one map-only projection —
     * zero shuffles, output one row per (vector, subspace). */
   def pqEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = 8; val subDim = 8; val k = 8
     val e = Tables.rebalance(spark, dir, "embeddings",
         Tables.embeddings(spark, dir), $"vec_id")
       .select($"vec_id", $"embedding")
-    val codebook: Array[(Long, Array[Double])] =
-      e.where($"vec_id" < k).as[(Long, Array[Float])].collect().sortBy(_._1)
-        .map { case (id, a) => (id, a.map(_.toDouble)) }
+    val codebook = collectCodebook(e.where($"vec_id" < 8))
     // explode the 8 subspace slices FIRST, then score each (vector, sub)
-    // row with ONE ‖x‖² dot + k codebook dots against nested-literal
-    // sub-vectors — the flat per-sub form repeated the ‖x‖² subtree k·m
-    // times (a ~2,500-node tree, codegen fell back to interpreted eval)
-    val withSub = e.select($"vec_id",
-      posexplode(array((0 until m).map(s =>
-        slice($"embedding", s * subDim + 1, subDim)): _*)).as(Seq("sub", "sl")))
-    val sxx = VectorOps.dot($"sl", $"sl")
-    val best = array_min(array(codebook.map { case (id, cemb) =>
-      val subs: Seq[Seq[Double]] =
-        (0 until m).map(s => cemb.slice(s * subDim, s * subDim + subDim).toSeq)
-      // ‖c_s‖² per subspace, summed left-to-right (the oracle's order)
-      val sccs: Seq[Double] = subs.map(_.foldLeft(0.0)((a, x) => a + x * x))
-      val dist = (sxx - lit(2.0) * VectorOps.dot($"sl", element_at(typedLit(subs), $"sub" + 1)))
-        .+(element_at(typedLit(sccs), $"sub" + 1))
-      struct(dist.as("dist"), lit(id).as("code"))
-    }: _*))
+    // row — the flat per-sub form repeated the ‖x‖² subtree k·m times
+    val withSub = e.select($"vec_id", pqSubspaces(pqSlice($"embedding")))
+    val best = pqCode($"sl", $"sub", codebook, pqSubs)
     withSub.select($"vec_id", $"sub".cast("long").as("sub"),
         best.getField("code").as("code"),
         floor(best.getField("dist") * 1e6 + lit(1.0 / 3)).cast("long").as("dist_q"))
@@ -309,19 +391,11 @@ object Quantize {
   def clusterTerms(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val emb = transform($"embedding", x => x.cast("double"))
-    val e = Tables.embeddings(spark, dir).select($"vec_id", emb.as("emb"),
+    val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding",
       VectorOps.l2norm($"embedding").as("nrm"))
-    val cents: Array[(Long, Array[Double], Double)] =
-      e.where($"vec_id" < 8)
-        .select($"vec_id", $"emb", $"nrm")
-        .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
-    val scoredCells = array(cents.map { case (id, cemb, cnrm) =>
-      struct((VectorOps.dot($"emb", lit(cemb)) / ($"nrm" * cnrm)).as("c"),
-        lit(-id).as("nid"))
-    }: _*)
+    val cents = collectCodebook(e.where($"vec_id" < 8))
     val assigned = e.select($"vec_id",
-      (-array_max(scoredCells).getField("nid")).as("cell"))
+      cellOf($"embedding", $"nrm", cents).as("cell"))
     val docs = Tables.documents(spark, dir)
     val tf = docs.join(assigned, $"doc_id" === $"vec_id")
       .select($"cell", explode(TextOps.toks($"text")).as("tok"))
@@ -665,7 +739,7 @@ object Quantize {
 
   private[graft] def opqPermuteVecs(vecs: DataFrame): DataFrame = {
     import vecs.sparkSession.implicits._
-    val m = 8; val subDim = 8; val k = 8
+    val m = PqM; val subDim = PqSubDim
     // four consumers (moment collect, codebook collect, both encode
     // variants) and the relation carries the rebalance shuffle —
     // truncate once
@@ -691,37 +765,22 @@ object Quantize {
       }
       a
     }
-    def encoded(sl: Int => Column, cb: Array[(Long, Array[Double])],
+    val codebook = collectCodebook(e.where($"vec_id" < 8))
+    def encoded(sl: Int => Column,
         subsOf: Array[Double] => Seq[Seq[Double]]): DataFrame = {
-      val withSub = e.select($"vec_id",
-        posexplode(array((0 until m).map(sl): _*)).as(Seq("sub", "sl")))
-      val sxx = VectorOps.dot($"sl", $"sl")
-      val best = array_min(array(cb.map { case (id, cemb) =>
-        val subs = subsOf(cemb)
-        val sccs: Seq[Double] = subs.map(_.foldLeft(0.0)((a, x) => a + x * x))
-        val dist = (sxx - lit(2.0) * VectorOps.dot($"sl",
-          element_at(typedLit(subs), $"sub" + 1)))
-          .+(element_at(typedLit(sccs), $"sub" + 1))
-        struct(dist.as("dist"), lit(id).as("code"))
-      }: _*))
-      withSub.select($"vec_id", $"sub".cast("long").as("sub"),
-        best.getField("code").as("code"),
-        floor(best.getField("dist") * 1e6 + lit(1.0 / 3)).cast("long").as("dist_q"))
+      val best = pqCode($"sl", $"sub", codebook, subsOf)
+      e.select($"vec_id", pqSubspaces(sl))
+        .select($"vec_id", $"sub".cast("long").as("sub"),
+          best.getField("code").as("code"),
+          floor(best.getField("dist") * 1e6 + lit(1.0 / 3)).cast("long").as("dist_q"))
     }
-    val codebook: Array[(Long, Array[Double])] =
-      e.where($"vec_id" < k).as[(Long, Array[Float])].collect().sortBy(_._1)
-        .map { case (id, a) => (id, a.map(_.toDouble)) }
     // identity layout: q98's contiguous slices
-    val base = encoded(
-      s => slice($"embedding", s * subDim + 1, subDim),
-      codebook,
-      cemb => (0 until m).map(s => cemb.slice(s * subDim, s * subDim + subDim).toSeq))
+    val base = encoded(pqSlice($"embedding"), pqSubs)
     // OPQ layout: snake-permuted gathers (same float discipline — the
     // gathered array is float elements in pos order, dot runs on it
     // exactly as on a contiguous slice)
     val opq = encoded(
       s => array(perm(s).map(dd => $"embedding"(dd)): _*),
-      codebook,
       cemb => (0 until m).map(s => perm(s).toSeq.map(cemb(_))))
     def stats(enc: DataFrame, tag: String): DataFrame = {
       val cnt = enc.groupBy($"sub", $"code").agg(count(lit(1)).as("k"))

@@ -23,6 +23,14 @@ import graft.sources.Tables
   */
 object Relational {
 
+  /** An exact decimal sum truncated to 2 decimals via floor(x*100) BEFORE
+    * the double cast: a decimal(38,12) -> double conversion differs in
+    * the last ulp between engines, and decimal RESCALING rounds
+    * differently too — floor of the exact decimal is unambiguous, and the
+    * resulting <=15-significant-digit value converts to double exactly. */
+  private[graft] def exact2(c: Column): Column =
+    floor(c * 100).cast("long") / 100.0
+
   /** Exact money arithmetic: double column -> decimal(12,2). Sum order
     * then cannot perturb the result (a raw double sum is merge-order
     * dependent and would diverge between engines/runs at scale). */
@@ -492,13 +500,6 @@ object Relational {
     val b = Tables.events(spark, dir).select($"event_type",
       $"value".cast("decimal(18,6)").as("xd"),
       get_json_object($"props", "$.k").cast("long").cast("decimal(18,6)").as("yd"))
-    // product sums are truncated to 2 decimals via floor(x*100) BEFORE the
-    // double cast: a decimal(38,12) -> double conversion differs in the
-    // last ulp between engines, and decimal RESCALING rounds differently
-    // too — floor of the exact decimal is unambiguous, and the resulting
-    // <=15-significant-digit value converts to double exactly
-    def exact2(c: org.apache.spark.sql.Column) =
-      (floor(c * 100).cast("long") / 100.0)
     val s = b.groupBy($"event_type").agg(
       count(lit(1)).as("n"),
       sum($"xd").cast("double").as("sx"), sum($"yd").cast("double").as("sy"),
@@ -663,7 +664,6 @@ object Relational {
     * map-only. */
   def zscore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def exact2(c: Column) = (floor(c * 100).cast("long") / 100.0)
     val b = Tables.events(spark, dir)
       .select($"event_type", $"event_id", $"value")
     val stats = b
@@ -689,7 +689,6 @@ object Relational {
     * decimal products stay well inside decimal(38) exactness. */
   def linearTrend(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def exact2(c: Column) = (floor(c * 100).cast("long") / 100.0)
     val b = Tables.events(spark, dir).select(
       $"user_id",
       ((unix_millis($"ts") - 1704067200000L) / 1000.0)

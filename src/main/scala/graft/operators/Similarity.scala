@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
+import graft.functions.{TextHash, VectorOps}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -34,6 +34,17 @@ object Similarity {
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("vec_id").as("neighbor_id"))
   }
+
+  /** `e` (vec_id, embedding, nrm, ...) with each vector's coarse `cell`. */
+  private def assign(e: DataFrame, cb: Quantize.Codebook): DataFrame =
+    e.withColumn("cell", Quantize.cellOf(col("embedding"), col("nrm"), cb))
+
+  /** Query rows `q` (vec_id, embedding, nrm) with their `n` probed cells:
+    * one row per (query_id, qemb, qnrm, cell). */
+  private def probe(q: DataFrame, cb: Quantize.Codebook, n: Int): DataFrame =
+    q.select(col("vec_id").as("query_id"), col("embedding").as("qemb"),
+        col("nrm").as("qnrm"),
+        explode(Quantize.rankCells(col("embedding"), col("nrm"), cb, n)).as("cell"))
 
   /** Exact cosine top-5 neighbors for query vectors (vec_id < 10) over the
     * whole collection. Brute force is the oracle-checkable baseline; the
@@ -202,10 +213,11 @@ object Similarity {
     * vectors, so the DuckDB oracle reproduces the assignment exactly; a
     * production build would drop in k-means centroids without changing
     * the plan), every vector assigned to its nearest centroid by cosine
-    * (map-only: the codebook is broadcast), queries probe their nprobe=2
-    * nearest cells, and only vectors in probed cells are scored. At scale
-    * the collection is partitioned by cell, so a probe touches 2/8 of the
-    * data instead of all of it. */
+    * (Quantize's cell rule, map-only: the codebook ships as literals),
+    * queries probe the first nprobe=2 cells of their ranking, and only
+    * vectors in probed cells are scored. At scale the collection is
+    * partitioned by cell, so a probe touches 2/8 of the data instead of
+    * all of it. */
   def ivfAnn(spark: SparkSession, dir: String): DataFrame =
     ivfAnnOn(spark, dir, lloydIters = 0)
 
@@ -217,25 +229,11 @@ object Similarity {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).select(
       $"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    val cent =
-      if (lloydIters > 0)
-        // graft_dot accepts mixed float/double arrays, so the double
-        // centroid rows join the float collection directly
-        Quantize.lloydCentroids(spark, dir, 8, lloydIters)
-          .toSeq.toDF("cent_id", "cemb", "cnrm")
-      else
-        e.where($"vec_id" < 8)
-          .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-            $"nrm".as("cnrm"))
-    val rankedCells = e.join(broadcast(cent), lit(true))
-      .withColumn("ccos", VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-    val assigned = rankedCells.where($"crk" === 1)
-      .select($"vec_id", $"embedding", $"nrm", $"cent_id".as("cell"))
-    val probes = rankedCells.where($"crk" <= 2 && $"vec_id" < 10)
-      .select($"vec_id".as("query_id"), $"embedding".as("qemb"), $"nrm".as("qnrm"),
-        $"cent_id".as("cell"))
+    val cb =
+      if (lloydIters > 0) Quantize.lloydCentroids(spark, dir, 8, lloydIters)
+      else Quantize.collectCodebook(e.where($"vec_id" < 8))
+    val assigned = assign(e, cb)
+    val probes = probe(e.where($"vec_id" < 10), cb, 2)
     val scored = assigned.join(broadcast(probes),
         assigned("cell") === probes("cell") && $"vec_id" =!= $"query_id")
       .withColumn("cos", VectorOps.dot($"qemb", $"embedding") / ($"qnrm" * $"nrm"))
@@ -251,29 +249,21 @@ object Similarity {
     * are computed once and shared across the sweep (the probe set is
     * the only thing that varies).
     *
-    * Scale shape: q38's broadcast-codebook pass once, then per sweep
-    * point one cell-equality join against probed cells only + a 30-row
-    * truth join. The sweep adds probe work, never assignment work. */
+    * Scale shape: one collected codebook; the assignment is q38's
+    * map-only literal-codebook projection, and per sweep point the probes
+    * are the first np cells of each query's ranking, then one
+    * cell-equality join against probed cells only + a 30-row truth join.
+    * The sweep adds probe work, never a new codebook. */
   def ivfRecallSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val truth = annBrute(spark, dir).where($"rank" <= 3)
       .select($"query_id", $"neighbor_id")
     val e = Tables.embeddings(spark, dir).select(
       $"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    val cent = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-        $"nrm".as("cnrm"))
-    val rankedCells = e.join(broadcast(cent), lit(true))
-      .withColumn("ccos",
-        VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-    val assigned = rankedCells.where($"crk" === 1)
-      .select($"vec_id", $"embedding", $"nrm", $"cent_id".as("cell"))
+    val cb = Quantize.collectCodebook(e.where($"vec_id" < 8))
+    val assigned = assign(e, cb)
     Seq(1, 2, 4).map { np =>
-      val probes = rankedCells.where($"crk" <= np && $"vec_id" < 10)
-        .select($"vec_id".as("query_id"), $"embedding".as("qemb"),
-          $"nrm".as("qnrm"), $"cent_id".as("cell"))
+      val probes = probe(e.where($"vec_id" < 10), cb, np)
       val scored = assigned.join(broadcast(probes),
           assigned("cell") === probes("cell") && $"vec_id" =!= $"query_id")
         .withColumn("cos",
@@ -317,7 +307,7 @@ object Similarity {
     * double ratio with a correctly-rounded sqrt that both engines
     * compute identically (vec_id tie-breaks).
     *
-    * Scale shape: assignment/probes are q38's broadcast-codebook pass;
+    * Scale shape: assignment/probes are q38's literal-codebook map pass;
     * the LUT is |queries|·m·k rows (640 here) and broadcasts; the ADC
     * join is equality on (query_id, sub, code) against only probed-cell
     * code rows; the exact rerank touches shortlist·|queries| full
@@ -361,57 +351,26 @@ object Similarity {
       codes: DataFrame, nprobe: Int = 2, shortlist: Int = 32,
       k: Int = 3): DataFrame = {
     import spark.implicits._
-    val m = 8; val subDim = 8
     val e = Tables.embeddings(spark, dir).select(
       $"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    // coarse quantizer: q38's pinned first-8 codebook, cosine argmax
-    val cent = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-        $"nrm".as("cnrm"))
-    val rankedCells = e.join(broadcast(cent), lit(true))
-      .withColumn("ccos",
-        VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-    val assigned = rankedCells.where($"crk" === 1)
-      .select($"vec_id", $"cent_id".as("cell"))
-    val probes = rankedCells.where($"crk" <= nprobe && $"vec_id" < 10)
-      .select($"vec_id".as("query_id"), $"cent_id".as("cell"))
-    val lut = adcLut(e, m, subDim)
+    // q38's pinned first-8 codebook: the coarse quantizer AND the PQ
+    // codebook the LUT scores against
+    val cb = Quantize.collectCodebook(e.where($"vec_id" < 8))
+    val assigned = assign(e, cb).select($"vec_id", $"cell")
+    val probes = probe(e.where($"vec_id" < 10), cb, nprobe)
+      .select($"query_id", $"cell")
+    val lut = Quantize.adcLut(queries(e), cb)
     val cand = assigned.join(broadcast(probes),
         assigned("cell") === probes("cell") && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id")
     adcShortlistRerank(e, cand.join(codes, Seq("vec_id")), lut, shortlist, k)
   }
 
-  /** Per-query ADC LUT: q_s·c_{code,s} (asymmetric inner product) plus
-    * the query-independent ‖c_{code,s}‖², both on q98's exact float
-    * path and 1e6-quantized — |queries|·m·k rows, broadcast. */
-  private def adcLut(e: DataFrame, m: Int, subDim: Int): DataFrame = {
-    import e.sparkSession.implicits._
-    val codebook: Array[(Long, Array[Double])] =
-      e.where($"vec_id" < 8)
-        .select($"vec_id",
-          transform($"embedding", x => x.cast("double")).as("emb"))
-        .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val qSub = e.where($"vec_id" < 10).select($"vec_id".as("query_id"),
-      posexplode(array((0 until m).map(s =>
-        slice($"embedding", s * subDim + 1, subDim)): _*)).as(Seq("sub", "sl")))
-    qSub.select($"query_id", $"sub".cast("long").as("sub"),
-        explode(array(codebook.map { case (id, cemb) =>
-          val subs: Seq[Seq[Double]] =
-            (0 until m).map(s => cemb.slice(s * subDim, s * subDim + subDim).toSeq)
-          val sccs: Seq[Double] = subs.map(_.foldLeft(0.0)((a, x) => a + x * x))
-          struct(lit(id).as("code"),
-            floor(VectorOps.dot($"sl",
-              element_at(typedLit(subs), $"sub" + 1)) * 1e6
-              + lit(1.0 / 3)).cast("long").as("ip_q"),
-            floor(element_at(typedLit(sccs), $"sub" + 1) * 1e6
-              + lit(1.0 / 3)).cast("long").as("rn_q"))
-        }: _*)).as("ent"))
-      .select($"query_id", $"sub", $"ent.code".as("code"),
-        $"ent.ip_q".as("ip_q"), $"ent.rn_q".as("rn_q"))
-  }
+  /** The audit queries (vec_id < 10) as the ADC table's
+    * (query_id, embedding) input. */
+  private def queries(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding"))
 
   /** Shared tail of the ADC scan: compressed-domain scoring of candidate
     * code rows, per-query shortlist, exact rerank. `candCodes` is
@@ -453,16 +412,8 @@ object Similarity {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).select(
       $"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    val cent = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-        $"nrm".as("cnrm"))
-    val assigned = e.join(broadcast(cent), lit(true))
-      .withColumn("ccos",
-        VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-      .where($"crk" === 1)
-      .select($"vec_id", $"cent_id".as("cell"))
+    val assigned = assign(e, Quantize.collectCodebook(e.where($"vec_id" < 8)))
+      .select($"vec_id", $"cell")
     val codes = Quantize.pqEncode(spark, dir)
       .select($"vec_id", $"sub", $"code")
     graft.sources.Bucketing.writePartitionedBucketed(
@@ -474,37 +425,18 @@ object Similarity {
     * collected codebook — the shared kernel of the persisted-index write
     * path and the streaming embedding-novelty gate (stream and batch can
     * never encode differently because this is the only encoder either
-    * calls). Map-only: codebook sub-vectors are literals (q98's
-    * discipline); cells are the cosine argmax over literal centroids
-    * with the (ccos desc, cent_id asc) tie-break. */
+    * calls). Map-only: the cell is Quantize's cell rule and each
+    * subspace code its PQ code rule, both over literal centroids. */
   private[graft] def encodeAgainst(vecs: DataFrame,
       codebook: Array[(Long, Array[Double])]): DataFrame = {
     import vecs.sparkSession.implicits._
-    val m = 8; val subDim = 8
-    val cellOf = array_max(array(codebook.map { case (id, cemb) =>
-      val cn = math.sqrt(cemb.foldLeft(0.0)((a, x) => a + x * x))
-      struct(
-        (VectorOps.dot($"embedding", typedLit(cemb.toSeq))
-          / (VectorOps.l2norm($"embedding") * lit(cn))).as("ccos"),
-        lit(-id).as("negid"))
-    }: _*))
-    val withCell = vecs.select($"vec_id", $"embedding",
-      (-cellOf.getField("negid")).as("cell"))
-    val withSub = withCell.select($"vec_id", $"cell",
-      posexplode(array((0 until m).map(s =>
-        slice($"embedding", s * subDim + 1, subDim)): _*)).as(Seq("sub", "sl")))
-    val sxx = VectorOps.dot($"sl", $"sl")
-    val best = array_min(array(codebook.map { case (id, cemb) =>
-      val subs: Seq[Seq[Double]] =
-        (0 until m).map(s => cemb.slice(s * subDim, s * subDim + subDim).toSeq)
-      val sccs: Seq[Double] = subs.map(_.foldLeft(0.0)((a, x) => a + x * x))
-      val dist = (sxx - lit(2.0) * VectorOps.dot($"sl",
-        element_at(typedLit(subs), $"sub" + 1)))
-        .+(element_at(typedLit(sccs), $"sub" + 1))
-      struct(dist.as("dist"), lit(id).as("code"))
-    }: _*))
-    withSub.select($"vec_id", $"cell", $"sub".cast("long").as("sub"),
-      best.getField("code").as("code"))
+    val cb = Quantize.codebook(codebook)
+    val best = Quantize.pqCode($"sl", $"sub", cb, Quantize.pqSubs)
+    vecs.select($"vec_id", $"embedding",
+        Quantize.cellOf($"embedding", VectorOps.l2norm($"embedding"), cb).as("cell"))
+      .select($"vec_id", $"cell", Quantize.pqSubspaces(Quantize.pqSlice($"embedding")))
+      .select($"vec_id", $"cell", $"sub".cast("long").as("sub"),
+        best.getField("code").as("code"))
   }
 
   /** ADC novelty screen — the vector twin of the chunk-novelty probe:
@@ -523,57 +455,32 @@ object Similarity {
       storeCodes: DataFrame, codebook: Array[(Long, Array[Double])],
       maxCosPpm: Long, nprobe: Int = 2): DataFrame = {
     import arrivals.sparkSession.implicits._
-    val m = 8; val subDim = 8
-    // nprobe nearest cells per arrival: sort the literal-centroid cosine
-    // structs desc (ccos desc, then negid desc = cent_id asc)
-    val rankArr = sort_array(array(codebook.map { case (id, cemb) =>
-      val cn = math.sqrt(cemb.foldLeft(0.0)((a, x) => a + x * x))
-      struct(
-        (VectorOps.dot($"embedding", typedLit(cemb.toSeq))
-          / (VectorOps.l2norm($"embedding") * lit(cn))).as("ccos"),
-        lit(-id).as("negid"))
-    }: _*), asc = false)
-    val probes = arrivals.select($"vec_id".as("qid"),
-        explode(slice(rankArr, 1, nprobe)).as("pr"))
-      .select($"qid", (-$"pr".getField("negid")).as("cell"))
+    val cb = Quantize.codebook(codebook)
+    val q = arrivals.select($"vec_id".as("query_id"), $"embedding",
+      VectorOps.l2norm($"embedding").as("qnrm"))
+    // nprobe nearest cells per arrival
+    val probes = q.select($"query_id",
+      explode(Quantize.rankCells($"embedding", $"qnrm", cb, nprobe)).as("cell"))
     // per-arrival ADC LUT (q284's table, one relation instead of a
     // broadcast panel — arrivals are a micro-batch, not 10 audit queries)
-    val qSub = arrivals.select($"vec_id".as("qid"),
-      posexplode(array((0 until m).map(s =>
-        slice($"embedding", s * subDim + 1, subDim)): _*)).as(Seq("sub", "sl")))
-    val lut = qSub.select($"qid", $"sub".cast("long").as("sub"),
-        explode(array(codebook.map { case (id, cemb) =>
-          val subs: Seq[Seq[Double]] =
-            (0 until m).map(s => cemb.slice(s * subDim, s * subDim + subDim).toSeq)
-          val sccs: Seq[Double] = subs.map(_.foldLeft(0.0)((a, x) => a + x * x))
-          struct(lit(id).as("code"),
-            floor(VectorOps.dot($"sl",
-              element_at(typedLit(subs), $"sub" + 1)) * 1e6
-              + lit(1.0 / 3)).cast("long").as("ip_q"),
-            floor(element_at(typedLit(sccs), $"sub" + 1) * 1e6
-              + lit(1.0 / 3)).cast("long").as("rn_q"))
-        }: _*)).as("ent"))
-      .select($"qid", $"sub", $"ent.code".as("code"),
-        $"ent.ip_q".as("ip_q"), $"ent.rn_q".as("rn_q"))
+    val lut = Quantize.adcLut(q, cb)
     val cand = storeCodes.join(probes, Seq("cell"))
-      .select($"qid", $"vec_id".as("store_vec"), $"sub", $"code")
+      .select($"query_id", $"vec_id".as("store_vec"), $"sub", $"code")
     // q284's ranking score ip/√rn2 omits the query norm (constant per
     // query, ranking-neutral); a THRESHOLD gate needs the actual cosine,
     // so divide by the arrival's norm too
-    val qNrm = arrivals.select($"vec_id".as("qid"),
-      VectorOps.l2norm($"embedding").as("qnrm"))
-    val scored = cand.join(lut, Seq("qid", "sub", "code"))
-      .groupBy($"qid", $"store_vec")
+    val scored = cand.join(lut, Seq("query_id", "sub", "code"))
+      .groupBy($"query_id", $"store_vec")
       .agg(sum($"ip_q").as("ip"), sum($"rn_q").as("rn2"))
-      .join(qNrm, Seq("qid"))
+      .join(q.select($"query_id", $"qnrm"), Seq("query_id"))
       // units: ip_q ≈ ip·1e6, rn_q ≈ rn2·1e6 ⇒ cos = ip_q/(1e3·√rn_q·‖q‖);
       // ×1e3 lands the report on the ppm grid
-      .select($"qid", floor($"ip".cast("double")
+      .select($"query_id", floor($"ip".cast("double")
         / (sqrt($"rn2".cast("double")) * $"qnrm") * 1e3 + lit(1.0 / 3))
         .cast("long").as("cos_ppm"))
-      .groupBy($"qid").agg(max($"cos_ppm").as("max_cos_ppm"))
+      .groupBy($"query_id").agg(max($"cos_ppm").as("max_cos_ppm"))
     arrivals.select($"vec_id").join(
-        scored.withColumnRenamed("qid", "vec_id"), Seq("vec_id"), "left")
+        scored.withColumnRenamed("query_id", "vec_id"), Seq("vec_id"), "left")
       .select($"vec_id",
         coalesce($"max_cos_ppm", lit(-2000000L)).as("max_cos_ppm"))
       .withColumn("admit", $"max_cos_ppm" < maxCosPpm)
@@ -592,21 +499,13 @@ object Similarity {
       nprobe: Int = 2, shortlist: Int = 32, k: Int = 3,
       nQueries: Int = 10): DataFrame = {
     import spark.implicits._
-    val m = 8; val subDim = 8
     val e = Tables.embeddings(spark, dir).select(
       $"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    val cent = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-        $"nrm".as("cnrm"))
+    val cb = Quantize.collectCodebook(e.where($"vec_id" < 8))
     // rank cells for the QUERY vectors only — corpus assignment lives
     // in the table
-    val probes = e.where($"vec_id" < nQueries).join(broadcast(cent), lit(true))
-      .withColumn("ccos",
-        VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-      .where($"crk" <= nprobe)
-      .select($"vec_id".as("query_id"), $"cent_id".as("cell"))
+    val probes = probe(e.where($"vec_id" < nQueries), cb, nprobe)
+      .select($"query_id", $"cell")
     val probedCells: Seq[Long] =
       probes.select($"cell").distinct().as[Long].collect().toSeq.sorted
     val candCodes = graft.sources.Bucketing.table(spark, table)
@@ -614,7 +513,7 @@ object Similarity {
       .join(broadcast(probes), Seq("cell"))
       .where($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", $"sub", $"code")
-    adcShortlistRerank(e, candCodes, adcLut(e, m, subDim), shortlist, k)
+    adcShortlistRerank(e, candCodes, Quantize.adcLut(queries(e), cb), shortlist, k)
   }
 
   /** q286: embedding-cell JS divergence between gold labels — q182's
@@ -634,23 +533,15 @@ object Similarity {
     * quantized ln of exact long ratios, closed-form ln 2 tail for
     * cells only one label occupies).
     *
-    * Scale shape: one broadcast-codebook map-only assignment, one
+    * Scale shape: one literal-codebook map-only assignment, one
     * (label, cell) partial agg to a k·|labels| grid, a grid-sized pair
     * join — corpus volume touches only the assignment scan. */
   def cellLabelJs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding",
       $"label", VectorOps.l2norm($"embedding").as("nrm"))
-    val cent = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-        $"nrm".as("cnrm"))
-    val ranked = e.join(broadcast(cent), lit(true))
-      .withColumn("ccos",
-        VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-    val counts = ranked.where($"crk" === 1)
-      .groupBy($"label".cast("long").as("source"), $"cent_id".as("tok"))
+    val counts = assign(e, Quantize.collectCodebook(e.where($"vec_id" < 8)))
+      .groupBy($"label".cast("long").as("source"), $"cell".as("tok"))
       .agg(count(lit(1)).as("n"))
     TextAnalysis.jsOnCounts(counts)
       .select($"src_a".as("label_a"), $"src_b".as("label_b"),
@@ -680,16 +571,7 @@ object Similarity {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).where($"vec_id" < 60)
       .select($"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    val cent = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-        $"nrm".as("cnrm"))
-    val assigned = e.join(broadcast(cent), lit(true))
-      .withColumn("ccos",
-        VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-      .where($"crk" === 1)
-      .select($"vec_id", $"embedding", $"nrm", $"cent_id".as("cell"))
+    val assigned = assign(e, Quantize.collectCodebook(e.where($"vec_id" < 8)))
     val pairs = assigned.as("x").join(broadcast(assigned.as("y")),
         col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("vec_id"), col("x.cell").as("cell"),
@@ -735,20 +617,12 @@ object Similarity {
     * the standard exact-cosine compare. */
   def pqSemDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val m = 8; val subDim = 8
+    val m = Quantize.PqM
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    val cents: Array[(Long, Array[Double], Double)] = e.where($"vec_id" < 8)
-      .select($"vec_id",
-        transform($"embedding", x => x.cast("double")).as("emb"), $"nrm")
-      .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
-    // q94's pinned assignment: cosine argmax, min-cent_id tie-break
-    val scoredCells = array(cents.map { case (id, cemb, cnrm) =>
-      struct((VectorOps.dot($"embedding", lit(cemb)) / ($"nrm" * cnrm)).as("c"),
-        lit(-id).as("nid"))
-    }: _*)
-    val assigned = e.select($"vec_id", $"embedding", $"nrm",
-      (-array_max(scoredCells).getField("nid")).as("cell"))
+    // q94's pinned assignment
+    val cents = Quantize.collectCodebook(e.where($"vec_id" < 8))
+    val assigned = assign(e, cents)
     val codes = Quantize.pqEncode(spark, dir).select($"vec_id", $"sub", $"code")
     // driver LUTs from the same first-8 codebook (q98's): code-to-code
     // sub inner products and per-code sub norms, 1e6-quantized — shipped
@@ -756,13 +630,11 @@ object Similarity {
     // pair (the first cut joined 8 (pair, sub) rows through a broadcast
     // LUT + re-agg: 8x the rows through the hot join, measured 6.7x at
     // 10x emb vs q94's own 3.9x — this shape scores in-row instead)
-    val cb: Array[Array[Double]] = cents.map(_._2)
-    def subSlice(c: Array[Double], s: Int): Array[Double] =
-      c.slice(s * subDim, s * subDim + subDim)
+    val cb: Array[Seq[Seq[Double]]] = cents.map(c => Quantize.pqSubs(c._2))
     val lutLit: Seq[Seq[Seq[Long]]] = (0 until m).map { s =>
       cb.indices.map { a =>
         cb.indices.map { b =>
-          val va = subSlice(cb(a), s); val vb = subSlice(cb(b), s)
+          val va = cb(a)(s); val vb = cb(b)(s)
           val ip = va.indices.foldLeft(0.0)((acc, i) => acc + va(i) * vb(i))
           math.floor(ip * 1e6 + 1.0 / 3).toLong
         }.toSeq
@@ -770,7 +642,7 @@ object Similarity {
     }
     val rnLit: Seq[Seq[Long]] = (0 until m).map { s =>
       cb.indices.map { a =>
-        val va = subSlice(cb(a), s)
+        val va = cb(a)(s)
         math.floor(va.foldLeft(0.0)((acc, x) => acc + x * x) * 1e6
           + 1.0 / 3).toLong
       }.toSeq
@@ -875,19 +747,10 @@ object Similarity {
     import vecs.sparkSession.implicits._
     val e = vecs
       .select($"vec_id", $"embedding", VectorOps.l2norm($"embedding").as("nrm"))
-    val cents: Array[(Long, Array[Double], Double)] =
+    val cents =
       if (lloydIters > 0) Quantize.lloydCentroidsVecs(vecs, k, lloydIters)
-      else e.orderBy($"vec_id".asc).limit(k)
-        .select($"vec_id",
-          transform($"embedding", x => x.cast("double")).as("emb"), $"nrm")
-        .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
-    // argmax by cosine, min-cent_id tie-break: max over struct(cos, -id)
-    val scoredCells = array(cents.map { case (id, cemb, cnrm) =>
-      struct((VectorOps.dot($"embedding", lit(cemb)) / ($"nrm" * cnrm)).as("c"),
-        lit(-id).as("nid"))
-    }: _*)
-    val assigned = e.select($"vec_id", $"embedding", $"nrm",
-      (-array_max(scoredCells).getField("nid")).as("cell"))
+      else Quantize.collectCodebook(e.orderBy($"vec_id".asc).limit(k))
+    val assigned = assign(e, cents)
     val dups = assigned.as("a").join(assigned.as("b"),
         $"a.cell" === $"b.cell" && $"a.vec_id" < $"b.vec_id")
       .select($"b.vec_id".as("vec_id"),
@@ -1355,7 +1218,7 @@ object Similarity {
     * the oracle reproduces it; the agreement math is q233's ariOn on
     * the (label, cell) pairs.
     *
-    * Scale shape: assignment is the broadcast-codebook map-only pass;
+    * Scale shape: assignment is the literal-codebook map-only pass;
     * ariOn reduces it to the ≤|labels|·k contingency table in one
     * partial-agged shuffle. */
   def cellLabelAri(spark: SparkSession, dir: String): DataFrame = {
@@ -1363,16 +1226,8 @@ object Similarity {
     val e = Tables.embeddings(spark, dir).select($"vec_id",
       $"label".cast("long").as("label"), $"embedding",
       VectorOps.l2norm($"embedding").as("nrm"))
-    val cent = e.where($"vec_id" < 8)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cemb"),
-        $"nrm".as("cnrm"))
-    val ranked = e.join(broadcast(cent), lit(true))
-      .withColumn("ccos",
-        VectorOps.dot($"embedding", $"cemb") / ($"nrm" * $"cnrm"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id".asc)))
-    Evaluate.ariOn(ranked.where($"crk" === 1)
-      .select($"label".as("gold"), $"cent_id".as("predicted")))
+    Evaluate.ariOn(assign(e, Quantize.collectCodebook(e.where($"vec_id" < 8)))
+      .select($"label".as("gold"), $"cell".as("predicted")))
   }
 
   /** q253: CROSS-MODAL reciprocal-rank fusion — q143 fuses two rankers
@@ -1549,15 +1404,12 @@ object Similarity {
       .groupBy($"dim").agg(min($"v").as("lo"), max($"v").as("hi"))
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     // uniform pseudo-points from the md5 chain the oracle replays:
     // u_ij = lo_j + ((h % 10001) / 10000.0) * (hi_j - lo_j)
     val uniform: Seq[(Long, Seq[Double])] = (0 until nP).map { i =>
       (1000L + i, box.toSeq.map { case (j, lo, hi) =>
         val h = java.lang.Long.parseLong(
-          md5hex(s"$i:$j").substring(0, 8), 16)
+          TextHash.md5hex(s"$i:$j").substring(0, 8), 16)
         lo + ((h % 10001L) / 10000.0) * (hi - lo)
       })
     }
@@ -1808,13 +1660,10 @@ object Similarity {
       .groupBy($"dim").agg(min($"v").as("lo"), max($"v").as("hi"))
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val ref: Seq[(Long, Seq[Double])] = (0 until 256).map { i =>
       (i.toLong, box.toSeq.map { case (j, lo, hi) =>
         val h = java.lang.Long.parseLong(
-          md5hex(s"g$i:$j").substring(0, 8), 16)
+          TextHash.md5hex(s"g$i:$j").substring(0, 8), 16)
         lo + ((h % 10001L) / 10000.0) * (hi - lo)
       })
     }

@@ -29,25 +29,35 @@ object TextAnalysis {
     "fr" -> Seq("le ", "ent", "es "),
     "es" -> Seq("de ", "la ", "os "))
 
-  /** Language-ID by trigram-profile hit counts: score_l = total occurrences
-    * of l's profile trigrams; predicted = argmax with fixed precedence
-    * (en > de > fr > es) on ties. */
+  /** Per-language scores of `text`, in `profiles` order: score_l = total
+    * occurrences of l's profile trigrams. */
+  private[graft] def langScores(text: Column): Seq[Column] =
+    profiles.map { case (_, tgs) => tgs.map(occurrences(text, _)).reduce(_ + _) }
+
+  /** The language-ID rule: the argmax of the per-language scores (in
+    * `profiles` order), fixed precedence (en > de > fr > es) on ties. */
+  private[graft] def predictedLang(scores: Seq[Column]): Column = {
+    val Seq(en, de, fr, es) = scores
+    when(en >= de && en >= fr && en >= es, "en")
+      .when(de >= fr && de >= es, "de")
+      .when(fr >= es, "fr")
+      .otherwise("es")
+  }
+
+  /** Language-ID by trigram-profile hit counts ([[langScores]],
+    * [[predictedLang]]). */
   def langid(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // trigram scoring is 12 regexp_replaces over ~2 KB of text per row —
     // spread docs across cores first (no-op on an already-wide layout)
-    val scored = profiles.foldLeft(TextOps.docsParallel(spark, dir)) {
-      case (df, (l, tgs)) =>
-        df.withColumn(s"score_$l",
-          tgs.map(occurrences($"text", _)).reduce(_ + _))
-    }
+    val scored = profiles.map(_._1).zip(langScores($"text"))
+      .foldLeft(TextOps.docsParallel(spark, dir)) {
+        case (df, (l, score)) => df.withColumn(s"score_$l", score)
+      }
     val Seq(en, de, fr, es) = profiles.map { case (l, _) => col(s"score_$l") }
     scored.select($"doc_id", en.as("score_en"), de.as("score_de"),
       fr.as("score_fr"), es.as("score_es"),
-      when(en >= de && en >= fr && en >= es, "en")
-        .when(de >= fr && de >= es, "de")
-        .when(fr >= es, "fr")
-        .otherwise("es").as("predicted"))
+      predictedLang(Seq(en, de, fr, es)).as("predicted"))
   }
 
   /** Quality scoring: token count, mean token length, stopword ratio, and

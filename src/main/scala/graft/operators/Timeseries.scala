@@ -311,8 +311,6 @@ object Timeseries {
     * type); everything after runs on ≤ 24 rows per type. */
   def hourOfDayProfile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def exact2(c: org.apache.spark.sql.Column) =
-      (floor(c * 100).cast("long") / 100.0)
     val b = Tables.events(spark, dir).select($"event_type",
       expr("(unix_millis(ts) div 3600000) % 24").as("hod"),
       $"value".cast("decimal(18,6)").as("xd"))
@@ -322,7 +320,7 @@ object Timeseries {
         // per-bin S_h²/n_h quantized to centi-units (identical doubles
         // both engines: exact2 is integer-derived, the division is one
         // correctly-rounded IEEE op) then summed as longs — order-free
-        floor(exact2($"sh" * $"sh") / $"nh" * 100).cast("long").as("ssb_cq"),
+        floor(Relational.exact2($"sh" * $"sh") / $"nh" * 100).cast("long").as("ssb_cq"),
         expr("(cast(floor(sh * 100) as bigint) * 1000000) div nh").as("mean_cq"))
     val between = byH.groupBy($"event_type")
       .agg(sum($"ssb_cq").as("ssb_cq"),
@@ -330,7 +328,7 @@ object Timeseries {
     val g = b.groupBy($"event_type").agg(
       count(lit(1)).as("n"),
       sum($"xd").cast("double").as("s"),
-      exact2(sum($"xd" * $"xd")).as("q"))
+      Relational.exact2(sum($"xd" * $"xd")).as("q"))
     g.join(between, "event_type")
       .select($"event_type", $"n",
         $"peak.hod".as("peak_hod"), $"peak.mean_cq".as("peak_mean_cq"),

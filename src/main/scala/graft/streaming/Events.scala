@@ -30,28 +30,18 @@ object Events {
     * physical layout the testdata generation used (nanos-long or naive
     * micros — see Tables.normalizeTs) and is rebuilt to a microsecond
     * session-UTC timestamp.
-    * Spark's file stream source wants a directory: a bare events.parquet
-    * file is staged into a temp dir once (in production the source would
-    * already be a directory of part files). */
+    * `events.parquet` is a directory of part files or one bare file,
+    * listed as it is when a query starts. The file source takes a
+    * directory as the base path of what it lists; a bare file streams
+    * through a glob that matches it alone, which sets no base path. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = new java.io.File(s"$dir/events.parquet")
-    val streamDir =
-      if (src.isDirectory) src.getPath
-      else {
-        val staged = new java.io.File(
-          sys.props("java.io.tmpdir"),
-          s"graft_stream_${Integer.toHexString(dir.hashCode)}")
-        val target = new java.io.File(staged, "events.parquet")
-        if (!target.exists()) {
-          staged.mkdirs()
-          java.nio.file.Files.copy(src.toPath, target.toPath)
-        }
-        staged.getPath
-      }
-    val schema = spark.read.parquet(streamDir).schema
+    val src = s"$dir/events.parquet"
+    val streamPath =
+      if (graft.sources.Io.isDirectory(spark, src)) src else s"$dir/{events.parquet}"
+    val schema = spark.read.parquet(src).schema
     graft.sources.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(streamDir))
+      spark.readStream.schema(schema).parquet(streamPath))
   }
 
   /** Tumbling 1-hour windowed counts/sums with a 1-hour watermark —

@@ -13,7 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    write through it;
   *  - how an iterative operator sets up the session it loops on (the
   *    clone, its checkpoint dir, AQE off, its width, re-binding plans
-  *    between sessions) and when a loop fits one task: `Loop`.
+  *    between sessions) and when a loop fits one task: `Loop`;
+  *  - which coarse cell a vector falls in, and which cells it probes:
+  *    `Quantize`'s cell rule. The tokens are the column and field names
+  *    only that rule uses (a windowed ranking over a codebook
+  *    cross-join would bring them back).
   * A source file elsewhere in the scope that names a token fails this
   * check. */
 class OverwriteModeGuardSpec extends AnyFunSuite {
@@ -25,7 +29,9 @@ class OverwriteModeGuardSpec extends AnyFunSuite {
     (Seq("partitionOverwriteMode"), "graft/sources/Io.scala", ""),
     (Seq("newSession()", "Ckpt.propagate", "DatasetBridge.ofRows",
       "spark.sql.adaptive.enabled", "localCutoff\"", "spark.graft.cc.partitions"),
-      "graft/operators/Loop.scala", "graft/operators"))
+      "graft/operators/Loop.scala", "graft/operators"),
+    (Seq("\"ccos\"", "\"crk\"", "\"cent_id\"", "\"negid\""),
+      "graft/operators/Quantize.scala", "graft/operators"))
 
   owners.foreach { case (tokens, ownerPath, scopePath) =>
     val verb = if (tokens.size == 1) "appears" else "appear"

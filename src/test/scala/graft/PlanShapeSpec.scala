@@ -295,6 +295,28 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("graft_dot"), plan)
   }
 
+  test("q38/q286 cell assignment is map-only: no window partitioned by vec_id") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    object Plans extends AdaptiveSparkPlanHelper
+    // the partition keys of every window (and window group limit) the
+    // finalized plan runs, stage plans included
+    def windowKeys(q: String): Seq[Seq[String]] = {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
+      Plans.collect(df.queryExecution.executedPlan) {
+        case w: WindowExec => w.partitionSpec
+        case w: WindowGroupLimitExec => w.partitionSpec
+      }.map(_.flatMap(_.references.map(_.name)))
+    }
+    val q38 = windowKeys("q38_ivf_ann")
+    assert(q38.contains(Seq("query_id")), s"q38's top-k window is gone: $q38")
+    for ((q, keys) <- Seq("q38_ivf_ann" -> q38,
+        "q286_cell_label_js" -> windowKeys("q286_cell_label_js")))
+      assert(!keys.exists(_.contains("vec_id")),
+        s"$q ranks cells in a window over the collection: $keys")
+  }
+
   test("q98 PQ encoding is map-only off literal codebooks") {
     val plan = finalPlan(graft.operators.Quantize.pqEncode(spark, sfDir))
     assert("Exchange".r.findAllIn(plan).size <= 1, plan) // scan rebalance only
