@@ -51,7 +51,11 @@ final case class Machine(spark: SparkSession, catalog: SignalCatalog,
 /** One shot of a machine. `signal` lists and reads only that shot's
   * directory when the signal is stored in the shot-directory layout
   * (`Io.readShots`), so a request costs the same however many shots the
-  * warehouse holds; the flat `<name>.parquet` fallback is read whole.
+  * warehouse holds; the flat `<name>.parquet` fallback is read whole. The
+  * file relation is built from that one listing, with no DataSource
+  * resolution, and its scan takes the Parquet reader its read shape
+  * shares with earlier requests (`Io.scan`): a request pays for no
+  * Hadoop-configuration broadcast of its own.
   *
   * `signal` is also where the signal access path registers
   * `graft.plans.ParamLiteralsStrategy` on the machine's session

@@ -41,9 +41,12 @@ import graft.sources.Io
   * The returned table is a thin `SupportsRead` (`ShotTable`) whose scan
   * `ShotScanRule` replaces with the file relation `Io.readShots` reads, so
   * SQL and `api.Machine` plan one V1 file scan: a shot-addressed query
-  * lists one directory per named shot however large the warehouse is. The
-  * file schema comes from `Io`'s schema cache, which infers again after a
-  * shot directory is added or replaced; nothing caches a listing. Loading
+  * lists one directory per named shot however large the warehouse is,
+  * builds its relation from that listing without DataSource resolution,
+  * and reads through the Parquet reader its read shape shares with
+  * earlier queries (`Io.scan`). The file schema comes from `Io`'s schema
+  * cache, which infers again after a shot directory is added or
+  * replaced; nothing caches a listing. Loading
   * a table registers `ShotScanRule` and `graft.plans.ParamLiteralsStrategy`
   * on the session, so the per-request constants of a query (`channel = 3`,
   * the `time BETWEEN` bounds) do not compile a new class per request.

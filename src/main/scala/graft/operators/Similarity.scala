@@ -359,24 +359,25 @@ object Similarity {
     val assigned = assign(e, cb).select($"vec_id", $"cell")
     val probes = probe(e.where($"vec_id" < 10), cb, nprobe)
       .select($"query_id", $"cell")
-    val lut = Quantize.adcLut(queries(e), cb)
+    val lut = Quantize.adcLut(queries(e, 10), cb)
     val cand = assigned.join(broadcast(probes),
         assigned("cell") === probes("cell") && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id")
-    adcShortlistRerank(e, cand.join(codes, Seq("vec_id")), lut, shortlist, k)
+    adcShortlistRerank(e, cand.join(codes, Seq("vec_id")), lut, shortlist, k, 10)
   }
 
-  /** The audit queries (vec_id < 10) as the ADC table's
-    * (query_id, embedding) input. */
-  private def queries(e: DataFrame): DataFrame =
-    e.where(col("vec_id") < 10)
+  /** The queries (vec_id < n; the audit panel is n = 10) as the ADC
+    * table's (query_id, embedding) input. */
+  private def queries(e: DataFrame, n: Int): DataFrame =
+    e.where(col("vec_id") < n)
       .select(col("vec_id").as("query_id"), col("embedding"))
 
   /** Shared tail of the ADC scan: compressed-domain scoring of candidate
-    * code rows, per-query shortlist, exact rerank. `candCodes` is
-    * (query_id, vec_id, sub, code); `e` is (vec_id, embedding, nrm). */
+    * code rows, per-query shortlist, exact rerank against the queries
+    * vec_id < nQueries. `candCodes` is (query_id, vec_id, sub, code); `e`
+    * is (vec_id, embedding, nrm). */
   private def adcShortlistRerank(e: DataFrame, candCodes: DataFrame,
-      lut: DataFrame, shortlist: Int, k: Int): DataFrame = {
+      lut: DataFrame, shortlist: Int, k: Int, nQueries: Int): DataFrame = {
     import e.sparkSession.implicits._
     // compressed-domain score: two sums of 8 LUT longs per candidate,
     // one double ratio — approximate cosine against the reconstruction
@@ -392,7 +393,7 @@ object Similarity {
     // exact rerank on the shortlist survivors only
     val scored = short
       .join(e, Seq("vec_id"))
-      .join(broadcast(e.where($"vec_id" < 10)
+      .join(broadcast(e.where($"vec_id" < nQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("qemb"),
           $"nrm".as("qnrm"))), Seq("query_id"))
       .withColumn("cos", VectorOps.dot($"qemb", $"embedding") / ($"qnrm" * $"nrm"))
@@ -513,7 +514,8 @@ object Similarity {
       .join(broadcast(probes), Seq("cell"))
       .where($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", $"sub", $"code")
-    adcShortlistRerank(e, candCodes, Quantize.adcLut(queries(e), cb), shortlist, k)
+    adcShortlistRerank(e, candCodes, Quantize.adcLut(queries(e, nQueries), cb),
+      shortlist, k, nQueries)
   }
 
   /** q286: embedding-cell JS divergence between gold labels — q182's

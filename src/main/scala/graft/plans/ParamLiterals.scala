@@ -43,10 +43,15 @@ case class Param(value: Any, dataType: DataType) extends LeafExpression {
   * after `graft.catalog.ShotScanRule`) the plan comes from Spark's own
   * `FileSourceStrategy`, and only the `FilterExec`/`ProjectExec` above
   * the scan are rewritten: pushed data filters and partition filters keep
-  * their `Literal`s, so Parquet row-group pushdown and shot pruning are
-  * unchanged. Over any other leaf (cached, JDBC, local relations) it
-  * returns `Nil` and Spark plans as before. Above a non-leaf operator it
-  * emits the `FilterExec`/`ProjectExec` `BasicOperators` would.
+  * their `Literal`s, so shot pruning is unchanged, and so is row-group
+  * pushdown for any other Parquet relation. A shot scan shows its pushed
+  * filters in the plan but does not skip row groups with them: its reader
+  * is shared by every request of its read shape (`graft.sources.Io.scan`),
+  * so it cannot carry one request's window, and the `FilterExec` above
+  * applies every predicate. Over any other leaf (cached, JDBC, local
+  * relations) it returns `Nil` and Spark plans as before. Above a
+  * non-leaf operator it emits the `FilterExec`/`ProjectExec`
+  * `BasicOperators` would.
   *
   * Only non-null int/long/float/double literal operands of comparisons,
   * `In` and arithmetic become `Param`s. Ordinals (`element_at`), scales

@@ -86,6 +86,26 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
+  test("IVF-PQ codes table answers every one of nQueries queries, the first ten unchanged") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    val base = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_pq_codes_nq_${System.nanoTime()}")
+    Similarity.writePqCodes(spark, sfDir, "pq_codes_nq", base.getPath)
+    try {
+      val ten = Similarity.ivfPqAdcProbeTable(spark, sfDir, "pq_codes_nq")
+      val twenty = Similarity.ivfPqAdcProbeTable(spark, sfDir, "pq_codes_nq", nQueries = 20)
+      val ids = twenty.select($"query_id").distinct().as[Long].collect().sorted.toSeq
+      assert(ids === (0L until 20L))
+      val firstTen = twenty.where($"query_id" < 10)
+      assert(firstTen.except(ten).count() === 0)
+      assert(ten.except(firstTen).count() === 0)
+      assert(ten.count() === firstTen.count())
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS pq_codes_nq")
+    }
+  }
+
   test("groupBy on the bucket key of a bucketed table needs no exchange") {
     val base = new java.io.File(sys.props("java.io.tmpdir"), "graft_bucketed")
     Bucketing.writeBucketed(

@@ -17,7 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - which coarse cell a vector falls in, and which cells it probes:
   *    `Quantize`'s cell rule. The tokens are the column and field names
   *    only that rule uses (a windowed ranking over a codebook
-  *    cross-join would bring them back).
+  *    cross-join would bring them back);
+  *  - how a shot read builds its file index and its Parquet reader:
+  *    `Io.scan` and `ShotParquet`, so no second relation builder or
+  *    reader cache appears elsewhere.
   * A source file elsewhere in the scope that names a token fails this
   * check. */
 class OverwriteModeGuardSpec extends AnyFunSuite {
@@ -31,7 +34,8 @@ class OverwriteModeGuardSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled", "localCutoff\"", "spark.graft.cc.partitions"),
       "graft/operators/Loop.scala", "graft/operators"),
     (Seq("\"ccos\"", "\"crk\"", "\"cent_id\"", "\"negid\""),
-      "graft/operators/Quantize.scala", "graft/operators"))
+      "graft/operators/Quantize.scala", "graft/operators"),
+    (Seq("buildReaderWithPartitionValues", "InMemoryFileIndex"), "graft/sources/Io.scala", ""))
 
   owners.foreach { case (tokens, ownerPath, scopePath) =>
     val verb = if (tokens.size == 1) "appears" else "appear"
