@@ -266,7 +266,6 @@ object ShotScanRule extends Rule[LogicalPlan] with PredicateHelper {
       shots: Option[Set[Int]]): LogicalRelation = {
     val byName = s.output.map(a => a.name -> a).toMap
     val rel = Io.scan(SparkSession.active, scan.path, scan.schema, shots)
-      .queryExecution.analyzed.asInstanceOf[LogicalRelation]
     rel.copy(output = rel.output.map(a => byName.getOrElse(a.name, a)))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
+import graft.functions.{TextHash, VectorOps}
 import graft.sources.Tables
 
 /** Embedding compression + codebook operators — the storage-side
@@ -12,10 +12,14 @@ import graft.sources.Tables
   * a k-means codebook refinement step (how the IVF coarse quantizer in
   * Similarity.ivfAnn would actually be trained).
   *
-  * It is also the one home of the vector quantizer's rules, which the
-  * IVF/PQ operators in Similarity and the streaming novelty gate call:
-  * the coarse-cell rule ([[cellOf]], [[rankCells]]), the PQ code rule
-  * ([[pqCode]]) and the ADC lookup table ([[adcLut]]).
+  * It is also the one home of the vector distance rules, which the
+  * operators here and in Similarity and the streaming novelty gate call:
+  * the driver dot ([[dotD]], [[norm]]), the coarse-cell rule
+  * ([[cellOf]], [[rankCells]]), the L2 nearest-centre rule
+  * ([[nearestCentre]], [[nearestDistQ]]), the nearest-code rule
+  * ([[nearestCode]], [[pqCode]]) and its driver twin ([[nearestCodeD]]),
+  * the ADC lookup table ([[adcLut]]) and the bounding-box reference
+  * points ([[boxPoints]]).
   */
 object Quantize {
 
@@ -40,10 +44,14 @@ object Quantize {
   private[graft] def codebook(cents: Array[(Long, Array[Double])]): Codebook =
     cents.map { case (id, c) => (id, c, norm(c)) }
 
-  /** `VectorOps.l2norm` on the driver: the same left-to-right sum of
-    * squares, so a driver norm and an in-engine norm are the same double. */
-  private def norm(c: Array[Double]): Double =
-    math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))
+  /** `VectorOps.dot` on the driver: the same left-to-right sum from 0.0,
+    * so a driver dot (a sum of squares, a LUT entry) and an in-engine dot
+    * are the same double. */
+  private[graft] def dotD(a: collection.Seq[Double], b: collection.Seq[Double]): Double =
+    a.iterator.zip(b.iterator).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+
+  /** `VectorOps.l2norm` on the driver: the square root of [[dotD]]. */
+  private[graft] def norm(c: collection.Seq[Double]): Double = math.sqrt(dotD(c, c))
 
   /** The coarse-cell rule: every cell scored for the row's vector `emb`
     * (norm `nrm`) as struct(cosine, −id), so struct order is the ranking
@@ -67,6 +75,21 @@ object Quantize {
     transform(slice(sort_array(cellScores(emb, nrm, cb), asc = false), 1, n),
       s => -s.getField("negid"))
 
+  /** The L2 nearest-centre rule: the id of the centre of `cents` nearest
+    * to the row's vector `emb` by squared L2 (`VectorOps.sqdist` against
+    * each centre as a literal), the min id on ties — the struct max of
+    * (−d², −id), the oracle's `ORDER BY d ASC, cid ASC`. */
+  private[graft] def nearestCentre(emb: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    -array_max(array(cents.map { case (id, c) =>
+      struct((-VectorOps.sqdist(emb, typedLit(c))).as("l2negd"), lit(-id).as("l2negid"))
+    }: _*)).getField("l2negid")
+
+  /** The squared L2 distance from `emb` to its nearest centre of `cents`,
+    * floor(d²·1e6 + 1/3)-quantized to a long. */
+  private[graft] def nearestDistQ(emb: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    floor(array_min(array(cents.map { case (_, c) => VectorOps.sqdist(emb, typedLit(c)) }: _*))
+      * 1e6 + lit(1.0 / 3)).cast("long")
+
   /** The PQ layout: m = 8 subspaces of 8 dims over a 64-dim vector. */
   private[graft] val PqM = 8
   private val PqSubDim = 8
@@ -89,32 +112,50 @@ object Quantize {
   private def subTable(c: Array[Double], subsOf: Array[Double] => Seq[Seq[Double]])
       : (Seq[Seq[Double]], Seq[Double]) = {
     val subs = subsOf(c)
-    (subs, subs.map(_.foldLeft(0.0)((a, x) => a + x * x)))
+    (subs, subs.map(v => dotD(v, v)))
   }
 
-  /** The PQ code rule: the codebook entry nearest to the row's subspace
-    * slice `sl` (subspace `sub`, 0-based), struct(dist, code) with the
-    * min code on ties. `subsOf` lays a centroid out in the subspaces `sl`
-    * was cut from.
+  /** The nearest-code rule: the entry of `cents` — (code, centre, ‖c‖²),
+    * the centre and its norm as columns — nearest to the vector `x`,
+    * struct(dist, code) with the min code on ties.
     *
     * The distance is (‖x‖² − 2·x·c) + ‖c‖²: three fixed-order dot
     * products (a per-dimension (x−c)² expansion was a ~2,500-node
     * expression tree that blew the codegen method limit), every term the
     * same left-to-right IEEE sum on both engines, so the argmin needs no
-    * quantization. A codebook sub-vector encodes to itself at exactly
-    * 0.0: its x·c and ‖c‖² are the same sum as ‖x‖². The centroids ship
-    * as nested literals indexed by `sub`, so the whole scoring is ONE
-    * ‖x‖² dot plus k dots per (vector, subspace) row. */
-  private[graft] def pqCode(sl: Column, sub: Column, cb: Codebook,
-      subsOf: Array[Double] => Seq[Seq[Double]]): Column = {
-    val sxx = VectorOps.dot(sl, sl)
-    array_min(array(cb.map { case (id, c, _) =>
-      val (subs, sccs) = subTable(c, subsOf)
-      val dist = (sxx - lit(2.0) * VectorOps.dot(sl, element_at(typedLit(subs), sub + 1)))
-        .+(element_at(typedLit(sccs), sub + 1))
-      struct(dist.as("dist"), lit(id).as("code"))
+    * quantization. A codebook vector encodes to itself at exactly 0.0:
+    * its x·c and ‖c‖² are the same sum as ‖x‖². */
+  private def codeOf(x: Column, cents: Seq[(Long, Column, Column)]): Column = {
+    val sxx = VectorOps.dot(x, x)
+    array_min(array(cents.map { case (id, c, scc) =>
+      struct(((sxx - lit(2.0) * VectorOps.dot(x, c)) + scc).as("dist"), lit(id).as("code"))
     }: _*))
   }
+
+  /** The nearest-code rule over whole vectors: each centre of `cb` and its
+    * [[dotD]] squared norm ship as literals. */
+  private[graft] def nearestCode(x: Column, cb: Seq[(Long, Seq[Double])]): Column =
+    codeOf(x, cb.map { case (id, c) => (id, typedLit(c), lit(dotD(c, c))) })
+
+  /** The nearest-code rule on the driver: [[nearestCode]]'s (dist, code),
+    * the distance in the same operation order and the same tie rule. */
+  private[graft] def nearestCodeD(x: Seq[Double], cb: Seq[(Long, Seq[Double])]): (Double, Long) = {
+    val sxx = dotD(x, x)
+    cb.map { case (id, c) => ((sxx - 2.0 * dotD(x, c)) + dotD(c, c), id) }
+      .reduceLeft((p, q) => if (q._1 < p._1 || (q._1 == p._1 && q._2 < p._2)) q else p)
+  }
+
+  /** The PQ code rule: the nearest-code rule on the row's subspace slice
+    * `sl` (subspace `sub`, 0-based). `subsOf` lays a centroid out in the
+    * subspaces `sl` was cut from. The centroids ship as nested literals
+    * indexed by `sub`, so the whole scoring is ONE ‖x‖² dot plus k dots
+    * per (vector, subspace) row. */
+  private[graft] def pqCode(sl: Column, sub: Column, cb: Codebook,
+      subsOf: Array[Double] => Seq[Seq[Double]]): Column =
+    codeOf(sl, cb.map { case (id, c, _) =>
+      val (subs, sccs) = subTable(c, subsOf)
+      (id, element_at(typedLit(subs), sub + 1), element_at(typedLit(sccs), sub + 1))
+    })
 
   /** The asymmetric-distance (ADC) lookup table (Jégou, Douze & Schmid
     * 2011) of `queries` (query_id, embedding) against a codebook: per
@@ -137,6 +178,27 @@ object Quantize {
         }: _*)).as("ent"))
       .select($"query_id", $"sub", $"ent.code".as("code"),
         $"ent.ip_q".as("ip_q"), $"ent.rn_q".as("rn_q"))
+  }
+
+  /** `n` uniform reference points in the per-dimension [lo, hi] box of
+    * the `emb` column of `e` (one d-bounded collect): point i, id
+    * `idBase + i`, has coordinate lo_j + ((h % 10001) / 10000.0)·(hi_j −
+    * lo_j) in dimension j, h the first 8 hex digits of
+    * md5("<prefix><i>:<j>") — the chain the oracle replays. */
+  private[graft] def boxPoints(e: DataFrame, prefix: String, idBase: Long,
+      n: Int): Seq[(Long, Seq[Double])] = {
+    import e.sparkSession.implicits._
+    val box = e.select(posexplode($"emb").as(Seq("dim", "v")))
+      .groupBy($"dim").agg(min($"v").as("lo"), max($"v").as("hi"))
+      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+      .sortBy(_._1)
+    (0 until n).map { i =>
+      (idBase + i, box.toSeq.map { case (j, lo, hi) =>
+        val h = java.lang.Long.parseLong(
+          TextHash.md5hex(s"$prefix$i:$j").substring(0, 8), 16)
+        lo + ((h % 10001L) / 10000.0) * (hi - lo)
+      })
+    }
   }
 
   /** q67: per-vector int8 scalar quantization and its reconstruction
@@ -286,12 +348,19 @@ object Quantize {
     val e = Tables.rebalance(spark, dir, "embeddings",
         Tables.embeddings(spark, dir), $"vec_id")
       .select($"vec_id", $"embedding")
-    val codebook = collectCodebook(e.where($"vec_id" < 8))
-    // explode the 8 subspace slices FIRST, then score each (vector, sub)
-    // row — the flat per-sub form repeated the ‖x‖² subtree k·m times
-    val withSub = e.select($"vec_id", pqSubspaces(pqSlice($"embedding")))
-    val best = pqCode($"sl", $"sub", codebook, pqSubs)
-    withSub.select($"vec_id", $"sub".cast("long").as("sub"),
+    pqEncodeWith(e, collectCodebook(e.where($"vec_id" < 8)), pqSlice($"embedding"), pqSubs)
+  }
+
+  /** The (vec_id, sub, code, dist_q) rows of `vecs` under the PQ code
+    * rule, `sl` and `subsOf` cutting the subspaces ([[pqCode]]). The 8
+    * subspace slices explode FIRST, then each (vector, sub) row scores —
+    * the flat per-sub form repeated the ‖x‖² subtree k·m times. */
+  private def pqEncodeWith(vecs: DataFrame, cb: Codebook, sl: Int => Column,
+      subsOf: Array[Double] => Seq[Seq[Double]]): DataFrame = {
+    import vecs.sparkSession.implicits._
+    val best = pqCode($"sl", $"sub", cb, subsOf)
+    vecs.select($"vec_id", pqSubspaces(sl))
+      .select($"vec_id", $"sub".cast("long").as("sub"),
         best.getField("code").as("code"),
         floor(best.getField("dist") * 1e6 + lit(1.0 / 3)).cast("long").as("dist_q"))
   }
@@ -766,20 +835,12 @@ object Quantize {
       a
     }
     val codebook = collectCodebook(e.where($"vec_id" < 8))
-    def encoded(sl: Int => Column,
-        subsOf: Array[Double] => Seq[Seq[Double]]): DataFrame = {
-      val best = pqCode($"sl", $"sub", codebook, subsOf)
-      e.select($"vec_id", pqSubspaces(sl))
-        .select($"vec_id", $"sub".cast("long").as("sub"),
-          best.getField("code").as("code"),
-          floor(best.getField("dist") * 1e6 + lit(1.0 / 3)).cast("long").as("dist_q"))
-    }
     // identity layout: q98's contiguous slices
-    val base = encoded(pqSlice($"embedding"), pqSubs)
+    val base = pqEncodeWith(e, codebook, pqSlice($"embedding"), pqSubs)
     // OPQ layout: snake-permuted gathers (same float discipline — the
     // gathered array is float elements in pos order, dot runs on it
     // exactly as on a contiguous slice)
-    val opq = encoded(
+    val opq = pqEncodeWith(e, codebook,
       s => array(perm(s).map(dd => $"embedding"(dd)): _*),
       cemb => (0 until m).map(s => perm(s).toSeq.map(cemb(_))))
     def stats(enc: DataFrame, tag: String): DataFrame = {
@@ -818,29 +879,6 @@ object Quantize {
         expr("(n_zero * 1000000) div n_vecs").as("zero_ppm"))
   }
 
-  /** q308: residual quantization (RQ) — the additive-codebook
-    * alternative to q98's product quantization (Chen, Guan & Wang 2010;
-    * the RQ/LSQ family behind modern additive quantizers): stage 1
-    * snaps the FULL 64-dim vector to its nearest coarse center, stage 2
-    * quantizes the residual against a second codebook, and the
-    * reconstruction is the SUM c₁ + c₂ — unlike PQ, every stage sees
-    * the whole vector, so correlated dimensions cost one code, not m.
-    * Emitted per vector: both codes and the stage-1 vs stage-2 squared
-    * error (d2 ≤ d1 wherever code₂ ≠ degenerate; the spec gates the
-    * mean drop). q297's usage-entropy audit applies to stage-2 codes
-    * unchanged.
-    *
-    * Codebooks follow the q98/q68 fixed-seed discipline: stage 1 =
-    * vectors 0..7, stage 2 = the residuals of vectors 8..15 under their
-    * own stage-1 assignment — a bounded 16-row driver collect (the
-    * codebook-collect pattern), with the driver-side fold written in
-    * the same ascending left-fold double chain as the oracle's
-    * list_reduce, so both engines derive bit-identical codebooks.
-    *
-    * Scale shape: map-only — one scan, 16 nested-literal distance
-    * evaluations per row inside whole-stage codegen, no shuffle at all
-    * (the output is per-vector). At 100 TB this is the encode pass a
-    * vector store runs once per ingest batch. */
   /** q321: k-means‖ oversampling initialization (Bahmani et al. 2012,
     * "Scalable k-means++") — the DISTRIBUTED seeding the Lloyd family
     * (q68, q38, q319) assumes someone already did: instead of k
@@ -853,10 +891,12 @@ object Quantize {
     * Determinism: the Bernoulli draw is a content-hash
     * (md5("kp<round>:<vec_id>") % 10⁶, the q47 sampling discipline)
     * compared against ℓ·dq·10⁶ < h·φq entirely in integers — dq is the
-    * floor-quantized min-L2² to the current centers, φq = Σdq an exact
-    * long, and the product comparison routes through decimal(38,0)
-    * (h·φq can reach ~10²⁰). Both engines walk the identical candidate
-    * chain; already-selected centers have dq = 0 and can never re-draw.
+    * quantized min-L2² to the current centers ([[nearestDistQ]]), φq =
+    * Σdq an exact long, and the product comparison routes through
+    * decimal(38,0) (h·φq can reach ~10²⁰). Both engines walk the
+    * identical candidate chain; already-selected centers have dq = 0 and
+    * can never re-draw. The weights count each point at its
+    * [[nearestCentre]] (min (L2², id)).
     *
     * Scale shape: each round is one scan (min-distance map over a
     * broadcast center literal + a 1-row φ agg + an expected-ℓ-row
@@ -873,18 +913,12 @@ object Quantize {
     val ell = 8L
     val e = vecs.select($"vec_id",
       transform($"embedding", x => x.cast("double")).as("emb"))
-    def d2(c: Seq[Double]): Column =
-      // codegen loop, bit-identical operation order to the interpreted
-      // aggregate(zip_with(...)) lambda it replaced (SqDistExpr scaladoc)
-      VectorOps.sqdist($"emb", typedLit(c))
-    def dqCol(cents: Seq[(Long, Seq[Double])]): Column =
-      floor(array_min(array(cents.map { case (_, c) => d2(c) }: _*))
-        * 1e6 + lit(1.0 / 3)).cast("long")
     var centers: Seq[(Long, Seq[Double], Long)] =
       e.where($"vec_id" === 0L).as[(Long, Seq[Double])].collect()
         .map { case (id, v) => (id, v, 0L) }.toSeq
+    def cents = centers.map { case (id, v, _) => (id, v) }
     for (r <- 1 to 3) {
-      val dq = dqCol(centers.map { case (id, v, _) => (id, v) })
+      val dq = nearestDistQ($"emb", cents)
       val phi = e.agg(sum(dq)).collect()(0).getLong(0)
       val h = conv(substring(md5(concat(lit(s"kp$r:"),
         $"vec_id".cast("string"))), 1, 8), 16, 10).cast("long") % 1000000L
@@ -895,11 +929,7 @@ object Quantize {
       centers = centers ++ picked.map { case (id, v) => (id, v, r.toLong) }
     }
     // weight pass: every point votes for its nearest candidate
-    // (min (L2², id) via the struct-argmax idiom)
-    val cid = -array_max(array(centers.map { case (id, v, _) =>
-      struct((-d2(v)).as("c"), lit(-id).as("nid"))
-    }: _*)).getField("nid")
-    val weights = e.select(cid.as("cand_id"))
+    val weights = e.select(nearestCentre($"emb", cents).as("cand_id"))
       .groupBy($"cand_id").agg(count(lit(1)).as("weight"))
     val cands = centers.map { case (id, _, r) => (id, r) }
       .toDF("cand_id", "round_added")
@@ -908,6 +938,30 @@ object Quantize {
         coalesce($"weight", lit(0L)).as("weight"))
   }
 
+  /** q308: residual quantization (RQ) — the additive-codebook
+    * alternative to q98's product quantization (Chen, Guan & Wang 2010;
+    * the RQ/LSQ family behind modern additive quantizers): stage 1
+    * snaps the FULL 64-dim vector to its nearest coarse center, stage 2
+    * quantizes the residual against a second codebook, and the
+    * reconstruction is the SUM c₁ + c₂ — unlike PQ, every stage sees
+    * the whole vector, so correlated dimensions cost one code, not m.
+    * Emitted per vector: both codes and the stage-1 vs stage-2 squared
+    * error (d2 ≤ d1 wherever code₂ ≠ degenerate; the spec gates the
+    * mean drop). q297's usage-entropy audit applies to stage-2 codes
+    * unchanged.
+    *
+    * Codebooks follow the q98/q68 fixed-seed discipline: stage 1 =
+    * vectors 0..7, stage 2 = the residuals of vectors 8..15 under their
+    * own stage-1 code — a bounded 16-row driver collect (the
+    * codebook-collect pattern). Both stages encode by [[nearestCode]],
+    * and the stage-2 build by its driver twin [[nearestCodeD]], whose
+    * [[dotD]] folds are the oracle's ascending list_reduce chain, so
+    * both engines derive bit-identical codebooks.
+    *
+    * Scale shape: map-only — one scan, 16 nested-literal distance
+    * evaluations per row inside whole-stage codegen, no shuffle at all
+    * (the output is per-vector). At 100 TB this is the encode pass a
+    * vector store runs once per ingest batch. */
   def rqEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     rqEncodeOn(Tables.rebalance(spark, dir, "embeddings",
@@ -919,44 +973,24 @@ object Quantize {
     import vecs.sparkSession.implicits._
     val k = 8
     val e = vecs.select($"vec_id", $"embedding")
-    def dotD(a: IndexedSeq[Double], b: IndexedSeq[Double]): Double =
-      a.indices.foldLeft(0.0)((s, i) => s + a(i) * b(i))
-    val head: Array[(Long, IndexedSeq[Double])] =
+    val head: Array[(Long, Seq[Double])] =
       e.where($"vec_id" < 2L * k).as[(Long, Array[Float])].collect()
-        .sortBy(_._1).map { case (id, a) =>
-          (id, a.map(_.toDouble).toIndexedSeq) }
-    val cb1: Seq[(Long, IndexedSeq[Double])] =
-      head.filter(_._1 < k).toSeq
+        .sortBy(_._1).map { case (id, a) => (id, a.map(_.toDouble).toSeq) }
+    val cb1: Seq[(Long, Seq[Double])] = head.filter(_._1 < k).toSeq
     // stage-2 codebook: residuals of vecs 8..15 under their own stage-1
-    // assignment, same (dist asc, code asc) tie rule as the column path
-    val cb2: Seq[(Long, IndexedSeq[Double])] =
+    // code, the column path's rule run on the driver
+    val cb2: Seq[(Long, Seq[Double])] =
       head.filter(t => t._1 >= k && t._1 < 2L * k).toSeq.map { case (id, x) =>
-        val sxx = dotD(x, x)
-        val bestCode = cb1.map { case (c, ce) =>
-          (sxx - 2.0 * dotD(x, ce) + dotD(ce, ce), c)
-        }.reduceLeft { (p, q) =>
-          if (q._1 < p._1 || (q._1 == p._1 && q._2 < p._2)) q else p
-        }._2
-        val ce = cb1.find(_._1 == bestCode).get._2
+        val ce = cb1.find(_._1 == nearestCodeD(x, cb1)._2).get._2
         (id - k, x.indices.map(i => x(i) - ce(i)))
       }
-    def nearest(vec: Column, cb: Seq[(Long, IndexedSeq[Double])]): Column = {
-      val sxx = VectorOps.dot(vec, vec)
-      array_min(array(cb.map { case (id, ce) =>
-        val scc = dotD(ce, ce)
-        struct(
-          (sxx - lit(2.0) * VectorOps.dot(vec, typedLit(ce.toSeq))
-            + lit(scc)).as("dist"),
-          lit(id).as("code"))
-      }: _*))
-    }
-    val cb1Lit = typedLit(cb1.map(_._2.toSeq))
-    val s1 = e.withColumn("b1", nearest($"embedding", cb1))
+    val cb1Lit = typedLit(cb1.map(_._2))
+    val s1 = e.withColumn("b1", nearestCode($"embedding", cb1))
       .select($"vec_id", $"b1.code".as("code1"), $"b1.dist".as("dist1"),
         zip_with($"embedding",
           element_at(cb1Lit, ($"b1.code" + 1L).cast("int")),
           (a, b) => a - b).as("r"))
-    s1.withColumn("b2", nearest($"r", cb2))
+    s1.withColumn("b2", nearestCode($"r", cb2))
       .select($"vec_id", $"code1", $"b2.code".as("code2"),
         floor($"dist1" * 1e6 + lit(1.0 / 3)).cast("long").as("d1_q"),
         floor($"b2.dist" * 1e6 + lit(1.0 / 3)).cast("long").as("d2_q"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextHash, VectorOps}
+import graft.functions.VectorOps
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -612,7 +612,7 @@ object Similarity {
     * between n_verified here and q94's exact screen is MEASURED, not
     * assumed (`Round13Spec` gates agreement on testdata).
     *
-    * Engine portability: LUT entries are driver-folded left-to-right
+    * Engine portability: LUT entries are `Quantize.dotD`'s left-to-right
     * doubles floor-quantized at 1e6 (the q98 discipline), both ADC
     * sums are exact longs, the SDC ratio is one fixed-form double
     * chain (rna·rnb ≤ ~6.4e13 — exact in double), and the verify is
@@ -636,17 +636,13 @@ object Similarity {
     val lutLit: Seq[Seq[Seq[Long]]] = (0 until m).map { s =>
       cb.indices.map { a =>
         cb.indices.map { b =>
-          val va = cb(a)(s); val vb = cb(b)(s)
-          val ip = va.indices.foldLeft(0.0)((acc, i) => acc + va(i) * vb(i))
-          math.floor(ip * 1e6 + 1.0 / 3).toLong
+          math.floor(Quantize.dotD(cb(a)(s), cb(b)(s)) * 1e6 + 1.0 / 3).toLong
         }.toSeq
       }.toSeq
     }
     val rnLit: Seq[Seq[Long]] = (0 until m).map { s =>
       cb.indices.map { a =>
-        val va = cb(a)(s)
-        math.floor(va.foldLeft(0.0)((acc, x) => acc + x * x) * 1e6
-          + 1.0 / 3).toLong
+        math.floor(Quantize.dotD(cb(a)(s), cb(a)(s)) * 1e6 + 1.0 / 3).toLong
       }.toSeq
     }
     // one row per vector: its 8 codes as a sub-ordered array + the
@@ -1379,8 +1375,9 @@ object Similarity {
     * corpus be cells at all" BEFORE spending the codebook budget.
     *
     * Determinism: the real probe panel is vec_ids [16, 32) (disjoint
-    * from the 0..15 codebook prefix); the uniform panel is md5-hash
-    * points in the per-dim [lo, hi] box — the oracle regenerates the
+    * from the 0..15 codebook prefix); the uniform panel is
+    * `Quantize.boxPoints`' md5-hash points in the per-dim [lo, hi] box
+    * (key prefix "", ids from 1000) — the oracle regenerates the
     * identical 16 points from the identical hash chain; each
     * nearest-neighbor distance is floor-quantized to a long before the
     * two sums, so H is an exact ppm ratio of longs.
@@ -1401,23 +1398,9 @@ object Similarity {
     val nP = 16
     val e = vecs.select($"vec_id",
       transform($"embedding", x => x.cast("double")).as("emb"))
-    // per-dim bounding box: d-bounded collect (64 rows)
-    val box = e.select(posexplode($"emb").as(Seq("dim", "v")))
-      .groupBy($"dim").agg(min($"v").as("lo"), max($"v").as("hi"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    // uniform pseudo-points from the md5 chain the oracle replays:
-    // u_ij = lo_j + ((h % 10001) / 10000.0) * (hi_j - lo_j)
-    val uniform: Seq[(Long, Seq[Double])] = (0 until nP).map { i =>
-      (1000L + i, box.toSeq.map { case (j, lo, hi) =>
-        val h = java.lang.Long.parseLong(
-          TextHash.md5hex(s"$i:$j").substring(0, 8), 16)
-        lo + ((h % 10001L) / 10000.0) * (hi - lo)
-      })
-    }
+    val uniform = Quantize.boxPoints(e, "", 1000L, nP)
     val realProbes = e.where($"vec_id" >= 16L && $"vec_id" < 16L + nP)
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-      .map { case (id, v) => (id, v) }.toSeq
+      .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
     def minDistQ(probes: Seq[(Long, Seq[Double])], excludeSelf: Boolean) = {
       val panel = probes.map { case (id, p) =>
         struct(lit(id).as("pid"), typedLit(p).as("pv"))
@@ -1522,7 +1505,6 @@ object Similarity {
       transform($"embedding", x => x.cast("double")).as("emb"))
     val cands = e.where($"vec_id" < nCand.toLong)
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    def nrm(v: Seq[Double]): Double = math.sqrt(v.map(x => x * x).sum)
     // codegen norm/dot, bit-identical order to the interpreted lambdas
     // they replaced (NormExpr/DotExpr are the same left-to-right loops)
     val rowNrm = VectorOps.l2norm($"emb")
@@ -1531,7 +1513,7 @@ object Similarity {
     val covArr = array(cands.map { case (_, cemb) =>
       greatest(lit(0L), floor(
         VectorOps.dot($"emb", typedLit(cemb))
-          / (rowNrm * lit(nrm(cemb))) * 1e6 + lit(1.0 / 3)).cast("long"))
+          / (rowNrm * lit(Quantize.norm(cemb))) * 1e6 + lit(1.0 / 3)).cast("long"))
     }: _*)
     // materialize the 32-wide coverage array ONCE: inlining covArr
     // (32 aggregate-lambda trees) into every per-round gain expression
@@ -1628,16 +1610,18 @@ object Similarity {
     * "how many cells" companion to q315's "should there be cells at
     * all": per k ∈ {2, 4, 8}, the within-cluster dispersion W_k of the
     * data after one Lloyd step is compared against W_k of a UNIFORM
-    * reference sample in the data's bounding box (same md5 pseudo-point
-    * chain as q315, 256 points), gap_k = ln(W̄_ref) − ln(W̄_data). A k
+    * reference sample in the data's bounding box (`Quantize.boxPoints`,
+    * q315's md5 pseudo-point chain with key prefix "g", 256 points from
+    * id 0), gap_k = ln(W̄_ref) − ln(W̄_data). A k
     * past the knee stops widening the gap — the codebook-budget
     * answer q68/q38/q294 currently hard-code.
     *
     * Determinism: seeds are the k lowest ids on each side; assignment
-    * is min (L2², id) on doubles both engines derive identically;
-    * recomputed centroids use the q68 recipe (per-dim long sums of
-    * floor(x·10⁶), one double division chain); per-point dispersion is
-    * floor-quantized BEFORE the sum, so W_q is a long; the two ln of
+    * is `Quantize.nearestCentre`, min (L2², id) on doubles both engines
+    * derive identically; recomputed centroids use the q68 recipe
+    * (per-dim long sums of floor(x·10⁶), one double division chain);
+    * per-point dispersion is `Quantize.nearestDistQ`, floor-quantized
+    * BEFORE the sum, so W_q is a long; the two ln of
     * the mean-dispersion ratio quantize at milli with +1/3.
     *
     * Scale shape: the three k's FUSE — per side, one 8-seed collect,
@@ -1658,18 +1642,8 @@ object Similarity {
     // checkpoint (the SCALE.md pays-iff-the-reused-subtree-shuffles rule)
     val e = vecs.select($"vec_id",
       transform($"embedding", x => x.cast("double")).as("emb"))
-    val box = e.select(posexplode($"emb").as(Seq("dim", "v")))
-      .groupBy($"dim").agg(min($"v").as("lo"), max($"v").as("hi"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    val ref: Seq[(Long, Seq[Double])] = (0 until 256).map { i =>
-      (i.toLong, box.toSeq.map { case (j, lo, hi) =>
-        val h = java.lang.Long.parseLong(
-          TextHash.md5hex(s"g$i:$j").substring(0, 8), 16)
-        lo + ((h % 10001L) / 10000.0) * (hi - lo)
-      })
-    }
-    val refDf = spark.createDataset(ref).toDF("vec_id", "emb")
+    val refDf = spark.createDataset(Quantize.boxPoints(e, "g", 0L, 256))
+      .toDF("vec_id", "emb")
     // one Lloyd step + dispersion for ALL of k ∈ {2, 4, 8} fused into
     // two scans per side (the per-k seed sets are prefixes of one
     // 8-seed collect, so assignment for every k rides one projection;
@@ -1679,23 +1653,12 @@ object Similarity {
       val ks = Seq(2, 4, 8)
       val seeds8 = pts.orderBy($"vec_id".asc).limit(8)
         .as[(Long, Seq[Double])].collect().sortBy(_._1)
-      def d2(cemb: Seq[Double]): Column =
-        // codegen loop, bit-identical order to the aggregate(zip_with)
-        // lambda it replaced (SqDistExpr scaladoc)
-        VectorOps.sqdist($"emb", typedLit(cemb))
-      def assigned(cents: Seq[(Long, Seq[Double])]): Column =
-        // max of (−d², −id) == min of (d², id) — the lloydCentroids
-        // struct-argmax idiom (same tie-break as the oracle's
-        // ORDER BY d ASC, cid ASC)
-        -array_max(array(cents.map { case (id, cemb) =>
-          struct((-d2(cemb)).as("c"), lit(-id).as("nid"))
-        }: _*)).getField("nid")
       // per-k cells materialize in their OWN projection: a generator
       // (posexplode) in the same select re-analyzes the struct-argmax
       // lambda and strips its field aliases (FIELD_NOT_FOUND col1/col2)
       val kCells = array(ks.map { k =>
         struct(lit(k.toLong).as("k"),
-          assigned(seeds8.take(k).toSeq).as("cell"))
+          Quantize.nearestCentre($"emb", seeds8.take(k).toSeq).as("cell"))
       }: _*)
       val sums = pts
         .select($"emb", kCells.as("kc"))
@@ -1720,8 +1683,7 @@ object Similarity {
             case None => (id, old)
           }
         }
-        floor(array_min(array(cents1.map { case (_, cemb) => d2(cemb) }: _*))
-          * 1e6 + lit(1.0 / 3)).cast("long").as(s"dq$k")
+        Quantize.nearestDistQ($"emb", cents1.toSeq).as(s"dq$k")
       }
       pts.select(dmins: _*)
         .agg(count(lit(1)).as("n"),

@@ -9,10 +9,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionedFile, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Cast, In, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter => LogicalFilter}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionedFile, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
@@ -135,15 +137,16 @@ object Io {
     spark.read.schema(schema(spark, path)).parquet(path)
 
   /** Rows of `shots` of the signal stored at `path` (see `signalPath`):
-    * `scan` filtered to `shots`; a shot with no directory contributes no
-    * rows. */
+    * `scan` under a filter to `shots` (its partition filters, as on the SQL
+    * path), analyzed once; a shot with no directory contributes no rows. */
   def readShots(spark: SparkSession, path: String, shots: Seq[Int]): DataFrame =
     readShots(spark, path, schema(spark, path), shots)
 
   /** `readShots` with the schema of `path` already in hand (`signal`). */
   private[graft] def readShots(spark: SparkSession, path: String, schema: StructType,
       shots: Seq[Int]): DataFrame =
-    scan(spark, path, schema, Some(shots)).where(col("shot").isin(shots: _*))
+    DatasetBridge.ofRows(spark, LogicalFilter(
+      In(UnresolvedAttribute("shot"), shots.map(Literal(_))), scan(spark, path, schema, Some(shots))))
 
   /** The unfiltered file relation of both signal read paths (SQL reaches
     * it through `graft.catalog.ShotScanRule`). In the shot-directory
@@ -156,10 +159,11 @@ object Io {
     * reader per read shape. With no `shots`, for the flat `*.parquet`
     * fallback, or when a shot directory holds a subdirectory, it reads
     * through `spark.read`: all of `path`, or the shot directories with
-    * `basePath = path`. */
+    * `basePath = path`, and returns the relation that read analyzes to. */
   private[graft] def scan(spark: SparkSession, path: String, schema: StructType,
-      shots: Option[Iterable[Int]]): DataFrame = {
+      shots: Option[Iterable[Int]]): LogicalRelation = {
     val read = spark.read.schema(schema)
+    def relationOf(df: DataFrame) = df.queryExecution.analyzed.asInstanceOf[LogicalRelation]
     shots match {
       case Some(ns) if !path.endsWith(".parquet") =>
         val fs = fileSystem(spark, new Path(path))
@@ -169,9 +173,9 @@ object Io {
           catch { case _: FileNotFoundException => None }
         }
         if (listed.exists(_._3.exists(_.isDirectory)))
-          read.option("basePath", path).parquet(listed.map(_._2.toString): _*)
-        else spark.baseRelationToDataFrame(shotRelation(spark, fs, schema, listed))
-      case _ => read.parquet(path)
+          relationOf(read.option("basePath", path).parquet(listed.map(_._2.toString): _*))
+        else LogicalRelation(shotRelation(spark, fs, schema, listed))
+      case _ => relationOf(read.parquet(path))
     }
   }
 

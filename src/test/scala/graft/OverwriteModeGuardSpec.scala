@@ -18,6 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `Quantize`'s cell rule. The tokens are the column and field names
   *    only that rule uses (a windowed ranking over a codebook
   *    cross-join would bring them back);
+  *  - which centre is nearest to a vector by L2, and how a driver-side
+  *    dot product or sum of squares is folded: `Quantize`'s nearest-centre
+  *    rule and `dotD`. The tokens are the field names only that rule
+  *    uses and the fold's zero (a local struct argmin or a local fold
+  *    would bring them back);
   *  - how a shot read builds its file index and its Parquet reader:
   *    `Io.scan` and `ShotParquet`, so no second relation builder or
   *    reader cache appears elsewhere.
@@ -34,6 +39,8 @@ class OverwriteModeGuardSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled", "localCutoff\"", "spark.graft.cc.partitions"),
       "graft/operators/Loop.scala", "graft/operators"),
     (Seq("\"ccos\"", "\"crk\"", "\"cent_id\"", "\"negid\""),
+      "graft/operators/Quantize.scala", "graft/operators"),
+    (Seq("\"l2negd\"", "\"l2negid\"", "foldLeft(0.0)"),
       "graft/operators/Quantize.scala", "graft/operators"),
     (Seq("buildReaderWithPartitionValues", "InMemoryFileIndex"), "graft/sources/Io.scala", ""))
 
