@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * Tie-breaking replicates numpy argmin: the FIRST minimum wins, realized
   * as (|diff| asc, right-time asc) — deterministic under any partitioning.
   *
-  * Scale: both forms are equi-joins on the partition keys followed by a
-  * per-key window — shuffle on the keys only, no range cross-product. For
-  * sorted co-bucketed tables Spark plans SMJ + window over the same
-  * exchange; broadcast the probe side when it is small.
+  * Scale: `asofJoin` is an equi-join on the partition keys followed by a
+  * per-left-row window — shuffle on the keys only, no range
+  * cross-product; broadcast the probe side when it is small. `nearest`
+  * joins nothing: it is one per-key window over the frame itself.
   */
 object AsOf {
 
@@ -55,19 +55,36 @@ object AsOf {
   }
 
   /** Rows of `df` at the sample of `on` nearest to `value`, per group
-    * `keys` — `sig(time=0.25)` point slicing. One partial-aggregated
-    * min(struct(diff, on)) pass, then a semi-join-like filter; no window
-    * over the full data. The struct is computed in a `select` below the
-    * `groupBy`, not inside the aggregate: there `value` sits in a project
-    * that `graft.plans.ParamLiteralsStrategy` binds as a parameter, so
-    * every point shares one generated class instead of compiling its own
-    * (in the aggregate's own code the constant would be inlined). */
+    * `keys` — `sig(time=0.25)` point slicing. Returns the columns `keys`
+    * then the other columns of `df` in their order.
+    *
+    * One per-key window: each row carries struct(|on − value|, on), and
+    * the rows whose `on` is the `v` of the group's `min` struct over the
+    * window are the answer — the nearest sample, and the smaller one of
+    * two at the same distance (numpy's first minimum on a sorted axis),
+    * with every row at that sample (the other axes' fan-out). Samples
+    * whose `on` is null are no candidates: a null struct field sorts
+    * first and would win the min. The struct is computed in a `select`
+    * below the window: there `value` sits in a project that
+    * `graft.plans.ParamLiteralsStrategy` binds as a parameter, so every
+    * point shares one generated class.
+    *
+    * A frame whose analyzed size is at most one file split
+    * (`spark.sql.files.maxPartitionBytes`) — a shot — is coalesced to one
+    * partition first, which meets the window's clustering without an
+    * exchange: one job and one task, no shuffle, no broadcast and one
+    * scan. A larger frame keeps a hash exchange on `keys` and its full
+    * parallelism. */
   def nearest(df: DataFrame, on: String, value: Double,
       keys: Seq[String]): DataFrame = {
-    val target = df
-      .select(keys.map(col) :+ struct(abs(col(on) - value).as("d"), col(on).as("v")).as("__dv"): _*)
-      .groupBy(keys.map(col): _*)
-      .agg(min(col("__dv")).getField("v").as("__near"))
-    df.join(target, keys).where(col(on) === col("__near")).drop("__near")
+    val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    val oneSplit = df.queryExecution.analyzed.stats.sizeInBytes <= split
+    val dv = df.where(col(on).isNotNull)
+      .select(df.columns.map(col) :+
+        struct(abs(col(on) - value).as("d"), col(on).as("v")).as("__dv"): _*)
+    (if (oneSplit) dv.coalesce(1) else dv)
+      .withColumn("__near", min(col("__dv")).over(Window.partitionBy(keys.map(col): _*)).getField("v"))
+      .where(col(on) === col("__near"))
+      .select((keys ++ df.columns.filterNot(keys.contains)).map(col): _*)
   }
 }

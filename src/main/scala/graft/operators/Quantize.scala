@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextHash, VectorOps}
@@ -19,7 +19,9 @@ import graft.sources.Tables
   * ([[nearestCentre]], [[nearestDistQ]]), the nearest-code rule
   * ([[nearestCode]], [[pqCode]]) and its driver twin ([[nearestCodeD]]),
   * the ADC lookup table ([[adcLut]]) and the bounding-box reference
-  * points ([[boxPoints]]).
+  * points ([[boxPoints]]). It also holds the int8 scalar code rule
+  * ([[int8Scale]], [[int8Codes]]) and the driver-side Lloyd update
+  * ([[lloydMeans]]).
   */
 object Quantize {
 
@@ -201,6 +203,17 @@ object Quantize {
     }
   }
 
+  /** The int8 scalar code rule's step over a vector's own [lo, hi]
+    * range: (hi − lo) / 255. */
+  private[graft] def int8Scale(lo: Column, hi: Column): Column = (hi - lo) / 255.0
+
+  /** The int8 scalar code rule: each element x of `emb` codes to
+    * min(255, floor((x − lo) / scale)), `scale` from [[int8Scale]]; a
+    * constant vector (scale 0) codes to all 0. */
+  private[graft] def int8Codes(emb: Column, lo: Column, scale: Column): Column =
+    transform(emb, x => when(scale === 0.0, lit(0L))
+      .otherwise(least(lit(255L), floor((x - lo) / scale).cast("long"))))
+
   /** q67: per-vector int8 scalar quantization and its reconstruction
     * error. Each vector maps to 64 codes in [0,255] on its own [lo, hi]
     * range; the output reports the code checksum and the max absolute
@@ -218,10 +231,8 @@ object Quantize {
       .select($"vec_id", $"emb",
         array_min($"emb").as("lo"), array_max($"emb").as("hi"))
       .select($"vec_id", $"emb", $"lo", $"hi",
-        (($"hi" - $"lo") / 255.0).as("scale"))
-    val codes = transform($"emb", x =>
-      when($"scale" === 0.0, lit(0L))
-        .otherwise(least(lit(255L), floor(((x - $"lo") / $"scale")).cast("long"))))
+        int8Scale($"lo", $"hi").as("scale"))
+    val codes = int8Codes($"emb", $"lo", $"scale")
     e.select($"vec_id", $"emb", $"lo", $"hi", $"scale", codes.as("codes"))
       .select(
         $"vec_id", $"lo", $"hi",
@@ -230,6 +241,21 @@ object Quantize {
           zip_with($"emb", $"codes", (x, q) => abs(x - ($"lo" + q * $"scale"))),
           lit(0.0), (acc, d) => greatest(acc, d)).as("err_max"))
   }
+
+  /** The driver-side Lloyd update: the new centre of every cell that
+    * has rows among the collected partials, each row holding the cell
+    * at `cellAt`, then (dim, n, Σfloor(x·1e6)). Component dim of a
+    * cell's centre is Σfloor(x·1e6) / 1e6 / n, one double division chain
+    * after the exact long sum. A cell without rows is absent and keeps
+    * its old centre (the standard Lloyd guard). */
+  private[graft] def lloydMeans(partials: Array[Row], cellAt: Int): Map[Long, Array[Double]] =
+    partials.groupBy(_.getLong(cellAt)).map { case (cell, rows) =>
+      val mean = new Array[Double](rows.map(_.getInt(cellAt + 1)).max + 1)
+      rows.foreach { r =>
+        mean(r.getInt(cellAt + 1)) = r.getLong(cellAt + 3).toDouble / 1e6 / r.getLong(cellAt + 2)
+      }
+      cell -> mean
+    }
 
   /** q68: one k-means (Lloyd) refinement step for the IVF codebook —
     * assign every vector to its nearest current centroid by cosine (the
@@ -286,17 +312,9 @@ object Quantize {
         .agg(count(lit(1)).as("n"),
           sum(floor($"x" * 1e6).cast("long")).as("xq"))
         .collect() // k×d rows — codebook-bounded, never corpus-sized
-      val byCell = sums.groupBy(_.getLong(0))
-      cents = cents.map { case (id, old, oldNrm) =>
-        byCell.get(id) match {
-          case Some(rows) =>
-            val arr = new Array[Double](old.length)
-            rows.foreach { r =>
-              arr(r.getInt(1)) = r.getLong(3).toDouble / 1e6 / r.getLong(2)
-            }
-            (id, arr, norm(arr))
-          case None => (id, old, oldNrm)
-        }
+      val means = lloydMeans(sums, 0)
+      cents = cents.map { case cent @ (id, _, _) =>
+        means.get(id).fold(cent)(m => (id, m, norm(m)))
       }
     }
     // the refined codebook is driver-side; the materialized embedding
@@ -672,10 +690,8 @@ object Quantize {
       .select($"vec_id", $"emb",
         array_min($"emb").as("lo"), array_max($"emb").as("hi"))
       .select($"vec_id", $"emb", $"lo",
-        (($"hi" - $"lo") / 255.0).as("scale"))
-    val codes = transform($"emb", x =>
-      when($"scale" === 0.0, lit(0L))
-        .otherwise(least(lit(255L), floor((x - $"lo") / $"scale").cast("long"))))
+        int8Scale($"lo", $"hi").as("scale"))
+    val codes = int8Codes($"emb", $"lo", $"scale")
     val recon = e.select($"vec_id", $"emb",
         transform(codes, q => $"lo" + q * $"scale").as("rec"))
       .select($"vec_id", $"emb", $"rec",

@@ -1670,18 +1670,10 @@ object Similarity {
         .collect() // Σk×d rows, codebook-bounded
       val byK = sums.groupBy(_.getLong(0))
       val dmins = ks.map { k =>
-        val byCell = byK.getOrElse(k.toLong, Array.empty[org.apache.spark.sql.Row])
-          .groupBy(_.getLong(1))
-        val cents1 = seeds8.take(k).map { case (id, old) =>
-          byCell.get(id) match {
-            case Some(rows) =>
-              val arr = new Array[Double](old.length)
-              rows.foreach { r =>
-                arr(r.getInt(2)) = r.getLong(4).toDouble / 1e6 / r.getLong(3)
-              }
-              (id, arr.toSeq)
-            case None => (id, old)
-          }
+        val means = Quantize.lloydMeans(
+          byK.getOrElse(k.toLong, Array.empty[org.apache.spark.sql.Row]), 1)
+        val cents1 = seeds8.take(k).map { case cent @ (id, _) =>
+          means.get(id).fold(cent)(m => (id, m.toSeq))
         }
         Quantize.nearestDistQ($"emb", cents1.toSeq).as(s"dq$k")
       }

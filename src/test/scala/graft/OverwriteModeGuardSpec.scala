@@ -23,6 +23,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    rule and `dotD`. The tokens are the field names only that rule
   *    uses and the fold's zero (a local struct argmin or a local fold
   *    would bring them back);
+  *  - how a vector's int8 scalar codes are stepped and how a Lloyd
+  *    round divides a cell's exact component sums back out:
+  *    `Quantize.int8Scale` and `Quantize.lloydMeans`. The tokens are the
+  *    int8 step's divisor and the mean's division chain;
   *  - how a shot read builds its file index and its Parquet reader:
   *    `Io.scan` and `ShotParquet`, so no second relation builder or
   *    reader cache appears elsewhere.
@@ -42,6 +46,7 @@ class OverwriteModeGuardSpec extends AnyFunSuite {
       "graft/operators/Quantize.scala", "graft/operators"),
     (Seq("\"l2negd\"", "\"l2negid\"", "foldLeft(0.0)"),
       "graft/operators/Quantize.scala", "graft/operators"),
+    (Seq("255.0", "toDouble / 1e6 /"), "graft/operators/Quantize.scala", "graft/operators"),
     (Seq("buildReaderWithPartitionValues", "InMemoryFileIndex"), "graft/sources/Io.scala", ""))
 
   owners.foreach { case (tokens, ownerPath, scopePath) =>

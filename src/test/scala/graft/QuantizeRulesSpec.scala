@@ -86,4 +86,25 @@ class QuantizeRulesSpec extends SparkSpec {
     assert(ties > 20, s"only $ties tied rows")
     assert(!got.exists(_._4 == 7L), "a tie resolved to the larger of two coincident codes")
   }
+
+  test("int8 codes: a constant vector codes to 0, the maximum to 255") {
+    import spark.implicits._
+    val codes = Seq(Seq(2.0, 2.0, 2.0), Seq(0.0, 127.5, 200.25, 255.0)).toDF("emb")
+      .select(array_min($"emb").as("lo"), array_max($"emb").as("hi"), $"emb")
+      .select($"emb", $"lo", Quantize.int8Scale($"lo", $"hi").as("scale"))
+      .select(Quantize.int8Codes($"emb", $"lo", $"scale"))
+      .as[Seq[Long]].collect().toSeq
+    assert(codes === Seq(Seq(0L, 0L, 0L), Seq(0L, 127L, 200L, 255L)))
+  }
+
+  test("lloydMeans divides each cell's exact sums once; an empty cell is absent") {
+    import org.apache.spark.sql.Row
+    // (cell, dim, n, Σfloor(x·1e6)) after one leading key column
+    val partials = Array(Row(8L, 3L, 1, 2L, 3000000L), Row(8L, 3L, 0, 2L, -1000000L),
+      Row(8L, 5L, 0, 1L, 250000L), Row(8L, 5L, 1, 1L, 750000L))
+    val means = Quantize.lloydMeans(partials, 1)
+    assert(means.keySet === Set(3L, 5L))
+    assert(means(3L).toSeq === Seq(-0.5, 1.5))
+    assert(means(5L).toSeq === Seq(0.25, 0.75))
+  }
 }
