@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * Scale: `asofJoin` is an equi-join on the partition keys followed by a
   * per-left-row window — shuffle on the keys only, no range
   * cross-product; broadcast the probe side when it is small. `nearest`
-  * joins nothing: it is one per-key window over the frame itself.
+  * joins nothing: it is one per-key window over the frame itself, in one
+  * partition.
   */
 object AsOf {
 
@@ -69,20 +70,18 @@ object AsOf {
     * `graft.plans.ParamLiteralsStrategy` binds as a parameter, so every
     * point shares one generated class.
     *
-    * A frame whose analyzed size is at most one file split
-    * (`spark.sql.files.maxPartitionBytes`) — a shot — is coalesced to one
-    * partition first, which meets the window's clustering without an
-    * exchange: one job and one task, no shuffle, no broadcast and one
-    * scan. A larger frame keeps a hash exchange on `keys` and its full
-    * parallelism. */
+    * The frame is coalesced to one partition first, which meets the
+    * window's clustering without an exchange: a one-shot request is one
+    * job and one task, with no shuffle, no broadcast and one scan. That
+    * one task reads, sorts and buffers the whole frame: right for the
+    * kilobyte shots served, slower than a parallel aggregate and a join
+    * back for a frame above a few MB (ROADMAP direction 3). */
   def nearest(df: DataFrame, on: String, value: Double,
       keys: Seq[String]): DataFrame = {
-    val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    val oneSplit = df.queryExecution.analyzed.stats.sizeInBytes <= split
-    val dv = df.where(col(on).isNotNull)
+    df.where(col(on).isNotNull)
       .select(df.columns.map(col) :+
         struct(abs(col(on) - value).as("d"), col(on).as("v")).as("__dv"): _*)
-    (if (oneSplit) dv.coalesce(1) else dv)
+      .coalesce(1)
       .withColumn("__near", min(col("__dv")).over(Window.partitionBy(keys.map(col): _*)).getField("v"))
       .where(col(on) === col("__near"))
       .select((keys ++ df.columns.filterNot(keys.contains)).map(col): _*)

@@ -7,11 +7,9 @@ import scala.xml.XML
 import org.apache.spark.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.api.Machine
@@ -19,11 +17,11 @@ import graft.catalog.SignalCatalog
 import graft.operators.AsOf
 import graft.sources.Io
 
-/** `AsOf.nearest`, the plan of `SignalFrame.at`: one per-shot window. A
-  * frame of at most one file split runs as one job with no exchange; a
-  * larger one keeps one hash exchange on the keys. Both return the rows
-  * and the column order of the aggregate-and-join form it replaced, and
-  * neither takes a null axis value for the nearest sample. */
+/** `AsOf.nearest`, the plan of `SignalFrame.at`: one per-shot window over
+  * the frame in one partition, one job with no exchange whether the
+  * frame is one file split or many. It returns the rows and the column
+  * order of the aggregate-and-join form it replaced, and takes no null
+  * axis value for the nearest sample. */
 class NearestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** mpts.te: 16 radii per time; ip.ip: one sample per time. Shots 1 and
@@ -58,7 +56,7 @@ class NearestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     s.copy(qualifiedName = s.qualifiedName.stripPrefix("root.")))), dir)
 
   /** A session of the same context whose file split is 1 KB, less than
-    * any of the frames below: `nearest` takes its exchange branch. */
+    * any of the frames below: their scans have several partitions. */
   private lazy val tinySplit = {
     val s = spark.newSession()
     s.conf.set("spark.sql.files.maxPartitionBytes", "1024")
@@ -113,26 +111,17 @@ class NearestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a frame larger than one split keeps one hash exchange on the keys, no broadcast") {
-    val df = AsOf.nearest(Io.readShots(tinySplit, Io.signalPath(dir, "mpts.te"), Seq(2)),
-      "time", 0.26, Seq("shot"))
-    assert(df.queryExecution.analyzed.stats.sizeInBytes > 1024)
+  test("a frame of several file splits is still one job, with no exchange") {
+    val in = Io.readShots(tinySplit, Io.signalPath(dir, "mpts.te"), Seq(2))
+    assert(in.rdd.getNumPartitions > 1)
+    val df = AsOf.nearest(in, "time", 0.26, Seq("shot"))
     val (rows, jobs) = jobsOf(df)
     assert(rows.length === 16)
-    assert(jobs === 2)
-    val ex = exchanges(df)
-    assert(ex.size === 1, df.queryExecution.executedPlan)
-    assert(!ex.exists(_.isInstanceOf[BroadcastExchangeLike]))
-    ex.head match {
-      case s: ShuffleExchangeExec => s.outputPartitioning match {
-        case HashPartitioning(Seq(a: AttributeReference), _) => assert(a.name === "shot")
-        case other => fail(s"partitioning $other")
-      }
-      case other => fail(s"exchange $other")
-    }
+    assert(jobs === 1)
+    assert(exchanges(df).isEmpty, df.queryExecution.executedPlan)
   }
 
-  test("both branches return the join form's rows and columns: ties, fan-out, 3 shots") {
+  test("one-split and many-split frames return the join form's rows and columns: ties, fan-out, 3 shots") {
     for (s <- Seq[SparkSession](spark, tinySplit); qn <- Seq("mpts.te", "ip.ip")) {
       val df = Io.readShots(s, Io.signalPath(dir, qn), Seq(1, 2, 3))
       // 0.375 ties 0.25 and 0.5 in shots 1 and 2 and is a sample of shot
@@ -152,15 +141,10 @@ class NearestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a sample with a null axis value is no candidate") {
-    // a 16-byte split sends even this local frame down the exchange branch
-    val tiny = spark.newSession()
-    tiny.conf.set("spark.sql.files.maxPartitionBytes", "16")
-    for (s <- Seq[SparkSession](spark, tiny)) {
-      import s.implicits._
-      val df = Seq((1, Some(1.0), 10.0), (1, None, 11.0), (1, Some(2.0), 12.0),
-        (2, None, 20.0), (2, Some(5.0), 21.0)).toDF("shot", "time", "value")
-      val near = AsOf.nearest(df, "time", 1.2, Seq("shot"))
-      assert(sorted(near) === Seq(Row(1, 1.0, 10.0), Row(2, 5.0, 21.0)))
-    }
+    import spark.implicits._
+    val df = Seq((1, Some(1.0), 10.0), (1, None, 11.0), (1, Some(2.0), 12.0),
+      (2, None, 20.0), (2, Some(5.0), 21.0)).toDF("shot", "time", "value")
+    val near = AsOf.nearest(df, "time", 1.2, Seq("shot"))
+    assert(sorted(near) === Seq(Row(1, 1.0, 10.0), Row(2, 5.0, 21.0)))
   }
 }
